@@ -14,7 +14,7 @@ SF_DIR = os.environ.get("KSP_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from kafka_streams_playground_spark.session import get_spark
 
-    spark = get_spark("ksp-tests", shuffle_partitions=8)
+    spark = get_spark("ksp-tests")
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
 

@@ -29,6 +29,24 @@ def test_q1_filter_pushed_to_scan(spark, sf_dir):
     assert re.search(r"PushedFilters:.*GreaterThanOrEqual\(o_totalprice", plan), plan
 
 
+def test_registry_keeps_explicit_shuffle_partitions(spark, sf_dir, monkeypatch):
+    """The registry wrapper re-applies the runtime confs before every query.
+    A shuffle-partition count the caller set must survive it, and an unset
+    count must become the session's cores."""
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "7")
+        REGISTRY["q1_expensive_orders"].fn(spark, sf_dir)
+        assert spark.conf.get(key) == "7"
+        spark.conf.unset(key)
+        REGISTRY["q1_expensive_orders"].fn(spark, sf_dir)
+        assert spark.conf.get(key) == str(spark.sparkContext.defaultParallelism)
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_q1_column_pruning(spark, sf_dir):
     """Only the six projected columns may reach the scan ReadSchema."""
     plan = _plan(spark, sf_dir, "q1_expensive_orders")

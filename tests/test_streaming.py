@@ -519,6 +519,8 @@ def test_checkpoint_restart_carries_keyed_state(spark, tmp_path):
     checkpoint machinery."""
     import shutil
 
+    from kafka_streams_playground_spark.session import configure_runtime
+
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     schema = "user string, v int"
@@ -540,27 +542,38 @@ def test_checkpoint_restart_carries_keyed_state(spark, tmp_path):
             .start()
         )
 
-    run1: list = []
-    q = start(run1)
-    q.processAllAvailable()
-    q.stop()
-    first = {r["user"]: r["cnt"] for r in run1}
-    assert first == {"u1": 2, "u2": 1}
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "32")
+        run1: list = []
+        q = start(run1)
+        q.processAllAvailable()
+        q.stop()
+        first = {r["user"]: r["cnt"] for r in run1}
+        assert first == {"u1": 2, "u2": 1}
 
-    # a new file lands while the query is DOWN
-    spark.createDataFrame([("u1", 1)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
+        # a new file lands while the query is DOWN
+        spark.createDataFrame([("u1", 1)], schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
 
-    run2: list = []
-    q2 = start(run2)
-    q2.processAllAvailable()
-    q2.stop()
-    emitted = {r["user"]: r["cnt"] for r in run2}
-    # state resumed: u1's count continues from 2 -> 3; u2 unchanged and
-    # (update mode) NOT re-emitted after restart
-    assert emitted == {"u1": 3}, emitted
-    shutil.rmtree(ckpt, ignore_errors=True)
+        # restart under the session default (the cores): the checkpoint
+        # keeps the 32 state partitions it was started with
+        spark.conf.unset(key)
+        configure_runtime(spark)
+        run2: list = []
+        q2 = start(run2)
+        q2.processAllAvailable()
+        q2.stop()
+        emitted = {r["user"]: r["cnt"] for r in run2}
+        # state resumed: u1's count continues from 2 -> 3; u2 unchanged and
+        # (update mode) NOT re-emitted after restart
+        assert emitted == {"u1": 3}, emitted
+        assert q2.lastProgress["stateOperators"][0]["numShufflePartitions"] == 32
+    finally:
+        spark.conf.set(key, old)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_upsert_sink_materializes_latest_per_key(spark, sf_dir, tmp_path):

@@ -80,19 +80,21 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     # Arm A = the session's current values for the tested keys.
-    base: dict[str, str] = {}
+    base: dict[str, str | None] = {}
     for k in confs:
         try:
             base[k] = spark.conf.get(k)
         except Exception:
-            base[k] = None  # unset -> restore by unset is not possible; record
+            base[k] = None  # unset: arm A unsets it again
     print(f"arm A (baseline): { {k: base[k] for k in confs} }")
     print(f"arm B (candidate): {confs}")
 
     def apply(arm: str) -> None:
         vals = confs if arm == "B" else base
         for k, v in vals.items():
-            if v is not None:
+            if v is None:
+                spark.conf.unset(k)
+            else:
                 spark.conf.set(k, v)
 
     def run_once(name: str) -> float:
