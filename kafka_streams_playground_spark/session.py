@@ -12,10 +12,20 @@ Scale notes (100 TB / 1000-executor design):
 * ``spark.sql.session.timeZone=UTC`` — fixtures store naive timestamps; UTC
   makes ``unix_timestamp``/window bucketing agree with the DuckDB oracle.
 * Shuffle partition count defaults to the session's cores
-  (``defaultParallelism``, or ``$SPARK_GRAFT_SHUFFLE``); a value the caller
-  set explicitly wins. Stateful streams keep it as their state-partition
-  count, which AQE never coalesces, so every extra partition is a state
-  commit per micro-batch. A checkpoint keeps the count it was started with.
+  (``defaultParallelism``, or ``$SPARK_GRAFT_SHUFFLE``). Stateful streams keep
+  it as their state-partition count, which AQE never coalesces, so every
+  extra partition is a state commit per micro-batch.
+* State lives in RocksDB with changelog checkpointing (the reference's
+  changelog-backed RocksDB stores), and stream-stream joins use join state
+  format 3: one store per partition instead of four. Each micro-batch then
+  writes one changelog file per partition. Format 3 runs only on RocksDB, so
+  the three confs are one group: a provider the caller set leaves all three
+  alone.
+
+Only the confs the oracle's answers depend on are forced. Every other conf
+here is a default: a value the caller set (``spark.conf.set`` / ``--conf``)
+wins. A checkpoint keeps the partition count, state provider and join format
+it was started with, whatever the session's defaults are on restart.
 """
 
 from __future__ import annotations
@@ -24,18 +34,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Runtime-settable confs applied to any session (including driver-provided).
-_RUNTIME_CONF = {
+# Forced on every session, also one the caller built: the DuckDB oracle
+# compares against answers that depend on them.
+_ORACLE_CONF = {
     "spark.sql.session.timeZone": "UTC",
-    # \r stage-progress spam corrupts harnesses that tail-capture stdout
-    # (it cost round 2 its bench artifact). Static conf: only takes effect
-    # on sessions built here; the runtime set below is a harmless no-op.
-    "spark.ui.showConsoleProgress": "false",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow for pandas UDF / mapInPandas paths (north-star operators).
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
     # The events fixture stores TIMESTAMP(NANOS), which Spark's parquet reader
     # rejects; read as epoch-nanos long and normalize in sources.parquet.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
@@ -45,23 +47,46 @@ _RUNTIME_CONF = {
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
 }
 
+# Defaults: applied only to keys the session has no value for.
+_DEFAULT_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Arrow for pandas UDF / mapInPandas paths (north-star operators).
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
+_STATE_STORE_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+# Defaults only while the session has no provider: join format 3 fails on
+# the HDFS-backed provider (STATE_STORE_MULTIPLE_COLUMN_FAMILIES).
+_STATE_STORE_CONF = {
+    _STATE_STORE_PROVIDER: (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    ),
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    "spark.sql.streaming.join.stateFormatVersion": "3",
+}
+
 
 def configure_runtime(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an existing session (idempotent).
+    """Apply the engine's runtime confs to an existing session (idempotent).
 
     Spark's unset shuffle-partition default (200) would cost ~200 state-store
     commits per streaming micro-batch, so an unset count becomes the cores.
     """
-    for k, v in _RUNTIME_CONF.items():
-        try:
+    for k, v in _ORACLE_CONF.items():
+        spark.conf.set(k, v)
+    conf = spark._jsparkSession.conf()
+    defaults = {
+        **_DEFAULT_CONF,
+        "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE")
+        or str(spark.sparkContext.defaultParallelism),
+    }
+    if not conf.contains(_STATE_STORE_PROVIDER):
+        defaults.update(_STATE_STORE_CONF)
+    for k, v in defaults.items():
+        if not conf.contains(k):
             spark.conf.set(k, v)
-        except Exception:
-            # Conf not runtime-settable in this build — leave the default.
-            pass
-    key = "spark.sql.shuffle.partitions"
-    if not spark._jsparkSession.conf().contains(key):
-        cores = str(spark.sparkContext.defaultParallelism)
-        spark.conf.set(key, os.environ.get("SPARK_GRAFT_SHUFFLE") or cores)
     return spark
 
 
@@ -82,7 +107,8 @@ def get_spark(
         .master(master)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # \r stage-progress spam corrupts harnesses that tail-capture stdout.
+        # Static conf: it takes effect only on sessions built here.
+        .config("spark.ui.showConsoleProgress", "false")
     )
-    for k, v in _RUNTIME_CONF.items():
-        builder = builder.config(k, v)
     return configure_runtime(builder.getOrCreate())

@@ -250,6 +250,11 @@ def upsert_foreach_batch_writer(
     not inserted, which together with update/insert makes the sink a
     full CDC MERGE target (the ``cdc_merge_upsert`` I/U/D triple).
 
+    One pass: the stored version (tagged 0) unioned with the batch (tagged
+    1), one ``row_number`` over the keys ordered by tag then ``seq_col``
+    descending, row 1 kept, winning tombstones dropped. The batch is read
+    once, so a stateful query feeding the sink runs its state stage once.
+
     Commit protocol: the merged table is written to a ``_v<batch_id>``
     staging directory and a ``_current`` pointer file is atomically
     rewritten to name it — readers resolve the pointer, so a crash
@@ -271,27 +276,13 @@ def upsert_foreach_batch_writer(
 
     def _write(df: DataFrame, batch_id: int) -> None:
         spark = df.sparkSession
-        w = Window.partitionBy(*keys).orderBy(F.col(seq_col).desc())
-        latest = (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        # Tombstones participate in latest-per-key (a later tombstone beats
-        # an earlier upsert and vice versa) and in the anti-join below (so
-        # they delete the stored row), but never land in the merged table.
-        upserts = (
-            latest.filter(F.col(tombstone_col).isNotNull())
-            if tombstone_col is not None
-            else latest
-        )
         base = path.rstrip("/")
         jvm = spark._jvm
         hconf = spark._jsc.hadoopConfiguration()
         pointer = jvm.org.apache.hadoop.fs.Path(base + "/_current")
         fs = pointer.getFileSystem(hconf)
-        merged = upserts
         vdir = f"_v{batch_id}"
+        rows = df.withColumn("_new", F.lit(1))
         if fs.exists(pointer):
             stream = fs.open(pointer)
             try:
@@ -302,11 +293,19 @@ def upsert_foreach_batch_writer(
                 return  # replayed batch: its version is already live —
                 # merging would read and overwrite the same files
             prev = spark.read.parquet(f"{base}/{current}")
-            # stored rows lose to ANY incoming row with the same key —
-            # including tombstones, which remove without re-inserting
-            merged = prev.join(latest.select(*keys), keys, "left_anti").unionByName(
-                upserts
-            )
+            rows = prev.withColumn("_new", F.lit(0)).unionByName(rows)
+        # stored rows lose to ANY incoming row with the same key; within the
+        # batch the greatest seq_col wins
+        w = Window.partitionBy(*keys).orderBy(
+            F.col("_new").desc(), F.col(seq_col).desc()
+        )
+        merged = (
+            rows.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn", "_new")
+        )
+        if tombstone_col is not None:
+            merged = merged.filter(F.col(tombstone_col).isNotNull())
         merged.write.mode("overwrite").parquet(f"{base}/{vdir}")
         out = fs.create(pointer, True)
         try:

@@ -31,20 +31,34 @@ def test_q1_filter_pushed_to_scan(spark, sf_dir):
 
 def test_registry_keeps_explicit_shuffle_partitions(spark, sf_dir, monkeypatch):
     """The registry wrapper re-applies the runtime confs before every query.
-    A shuffle-partition count the caller set must survive it, and an unset
-    count must become the session's cores."""
+    Defaults the caller set (shuffle count, AQE, state-store provider) must
+    survive it, and an unset count must become the session's cores. A
+    caller's provider also leaves the join state format unforced: format 3
+    fails on the HDFS-backed provider."""
     monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
     key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
+    fmt = "spark.sql.streaming.join.stateFormatVersion"
+    caller = {
+        key: "7",
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+        ),
+    }
+    old = {k: spark.conf.get(k) for k in [*caller, fmt]}
     try:
-        spark.conf.set(key, "7")
+        for k, v in caller.items():
+            spark.conf.set(k, v)
+        spark.conf.unset(fmt)
         REGISTRY["q1_expensive_orders"].fn(spark, sf_dir)
-        assert spark.conf.get(key) == "7"
+        assert {k: spark.conf.get(k) for k in caller} == caller
+        assert not spark._jsparkSession.conf().contains(fmt)
         spark.conf.unset(key)
         REGISTRY["q1_expensive_orders"].fn(spark, sf_dir)
         assert spark.conf.get(key) == str(spark.sparkContext.defaultParallelism)
     finally:
-        spark.conf.set(key, old)
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 def test_q1_column_pruning(spark, sf_dir):

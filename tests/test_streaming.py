@@ -516,19 +516,24 @@ def test_checkpoint_restart_carries_keyed_state(spark, tmp_path):
     the new file alone) and must not re-emit already-committed batches.
     This is what makes day-long ingest state durable across driver loss;
     the engine's durable-sink path (sources/sinks.py) rides the same
-    checkpoint machinery."""
+    checkpoint machinery. The first run is pinned to 32 partitions on the
+    HDFS-backed provider; the restart under the session defaults (the
+    cores, RocksDB) must keep both, while a fresh checkpoint takes the
+    defaults and writes RocksDB changelog files."""
+    import os
     import shutil
 
     from kafka_streams_playground_spark.session import configure_runtime
 
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
+    fresh = str(tmp_path / "fresh")
     schema = "user string, v int"
     spark.createDataFrame([("u1", 1), ("u1", 1), ("u2", 1)], schema).coalesce(
         1
     ).write.mode("overwrite").parquet(src)
 
-    def start(sink_rows):
+    def start(sink_rows, location=ckpt):
         # memory sink refuses checkpoint recovery; foreachBatch is the
         # restartable sink surface (the one sources/sinks.py builds on)
         sdf = spark.readStream.schema(schema).parquet(src)
@@ -538,14 +543,27 @@ def test_checkpoint_restart_carries_keyed_state(spark, tmp_path):
                 lambda df, bid: sink_rows.extend(df.collect())
             )
             .outputMode("update")
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", location)
             .start()
         )
 
+    def state_files(location, suffix):
+        return [
+            f
+            for _, _, files in os.walk(f"{location}/state")
+            for f in files
+            if f.endswith(suffix)
+        ]
+
     key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
+    provider = "spark.sql.streaming.stateStore.providerClass"
+    old = {k: spark.conf.get(k) for k in (key, provider)}
     try:
         spark.conf.set(key, "32")
+        spark.conf.set(
+            provider,
+            "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+        )
         run1: list = []
         q = start(run1)
         q.processAllAvailable()
@@ -558,9 +576,10 @@ def test_checkpoint_restart_carries_keyed_state(spark, tmp_path):
             "append"
         ).parquet(src)
 
-        # restart under the session default (the cores): the checkpoint
-        # keeps the 32 state partitions it was started with
+        # restart under the session defaults: the checkpoint keeps the 32
+        # state partitions and the provider it was started with
         spark.conf.unset(key)
+        spark.conf.unset(provider)
         configure_runtime(spark)
         run2: list = []
         q2 = start(run2)
@@ -571,9 +590,19 @@ def test_checkpoint_restart_carries_keyed_state(spark, tmp_path):
         # (update mode) NOT re-emitted after restart
         assert emitted == {"u1": 3}, emitted
         assert q2.lastProgress["stateOperators"][0]["numShufflePartitions"] == 32
+        assert state_files(ckpt, ".delta")
+        assert not state_files(ckpt, ".changelog")
+
+        q3 = start([], fresh)
+        q3.processAllAvailable()
+        q3.stop()
+        assert state_files(fresh, ".changelog")
+        assert not state_files(fresh, ".delta")
     finally:
-        spark.conf.set(key, old)
+        for k, v in old.items():
+            spark.conf.set(k, v)
         shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(fresh, ignore_errors=True)
 
 
 def test_upsert_sink_materializes_latest_per_key(spark, sf_dir, tmp_path):
@@ -627,6 +656,52 @@ def test_upsert_sink_materializes_latest_per_key(spark, sf_dir, tmp_path):
     current2 = open(f"{target}/_current", "rb").read()[2:].decode()
     got2 = spark.read.parquet(f"{target}/{current2}")
     assert got2.count() == want.count()
+
+
+def test_upsert_sink_runs_each_batch_once(spark, tmp_path):
+    """The upsert sink must read its micro-batch once: a second read runs
+    the stateful aggregation feeding it again. A counting UDF on the
+    aggregation's output sees every emitted row exactly once."""
+    from kafka_streams_playground_spark.sources.sinks import (
+        upsert_foreach_batch_writer,
+    )
+
+    src = str(tmp_path / "src")
+    schema = "user string, v int"
+    seen = spark.sparkContext.accumulator(0)
+
+    def tally(user):
+        seen.add(1)
+        return user
+
+    counted = F.udf(tally, "string")
+    writer = upsert_foreach_batch_writer(str(tmp_path / "t"), ["user"], "cnt")
+    q = None
+    try:
+        for rows in ([("u1", 1), ("u2", 1)], [("u1", 1), ("u3", 1)]):
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+            if q is None:
+                agg = (
+                    spark.readStream.schema(schema)
+                    .parquet(src)
+                    .groupBy("user")
+                    .agg(F.count(F.lit(1)).alias("cnt"))
+                    .select(counted("user").alias("user"), "cnt")
+                )
+                q = (
+                    agg.writeStream.foreachBatch(writer)
+                    .outputMode("update")
+                    .option("checkpointLocation", str(tmp_path / "ckpt"))
+                    .start()
+                )
+            q.processAllAvailable()
+    finally:
+        if q is not None:
+            q.stop()
+    # update mode emits each touched key once per batch: 2 + 2 rows
+    assert seen.value == 4
 
 
 def test_stream_source_cap_equals_batch_kept_set(spark, sf_dir):
