@@ -5,6 +5,10 @@ a Spark callable ``(spark, sf_dir) -> DataFrame`` plus (when SQL-expressible)
 an equivalent ANSI-SQL oracle string for DuckDB. ``__spark_entry__.py`` simply
 re-exports this registry in the driver's contract shape.
 
+Registration order: ``plans/__init__`` imports the batch modules before
+``streaming.queries``, so a streaming twin reads its batch oracle from
+``REGISTRY`` when it is decorated. A registered entry is never rewritten.
+
 Conventions that keep the driver's order-insensitive value-hash compare
 honest (the driver sorts columns by name before hashing):
 

@@ -20,7 +20,7 @@ Scale notes (100 TB / 1000-executor design):
   format 3: one store per partition instead of four. Each micro-batch then
   writes one changelog file per partition. Format 3 runs only on RocksDB, so
   the three confs are one group: a provider the caller set leaves all three
-  alone.
+  alone, and a non-RocksDB provider unsets a join format of 3.
 
 Only the confs the oracle's answers depend on are forced. Every other conf
 here is a default: a value the caller set (``spark.conf.set`` / ``--conf``)
@@ -57,14 +57,14 @@ _DEFAULT_CONF = {
 }
 
 _STATE_STORE_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+_JOIN_FORMAT = "spark.sql.streaming.join.stateFormatVersion"
 # Defaults only while the session has no provider: join format 3 fails on
 # the HDFS-backed provider (STATE_STORE_MULTIPLE_COLUMN_FAMILIES).
 _STATE_STORE_CONF = {
-    _STATE_STORE_PROVIDER: (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    ),
+    _STATE_STORE_PROVIDER: _ROCKSDB,
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
-    "spark.sql.streaming.join.stateFormatVersion": "3",
+    _JOIN_FORMAT: "3",
 }
 
 
@@ -84,6 +84,10 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     }
     if not conf.contains(_STATE_STORE_PROVIDER):
         defaults.update(_STATE_STORE_CONF)
+    elif spark.conf.get(_STATE_STORE_PROVIDER) != _ROCKSDB and spark.conf.get(_JOIN_FORMAT) == "3":
+        # Left by the defaults before the caller set another provider, or set
+        # by the caller: either way format 3 cannot run on that provider.
+        spark.conf.unset(_JOIN_FORMAT)
     for k, v in defaults.items():
         if not conf.contains(k):
             spark.conf.set(k, v)

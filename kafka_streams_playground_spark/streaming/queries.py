@@ -7,6 +7,11 @@ and, for the single-file fixtures, equal to the batch result. That lets the
 flagship streaming forms carry the same DuckDB oracle as their batch twins
 (strong check), instead of the weaker rows-only contract.
 
+Twin-to-oracle link: ``plans/__init__`` imports every batch module before
+this one, so a twin reads its batch oracle when it is decorated —
+``oracle=REGISTRY["<batch name>"].oracle`` — or builds it from the batch
+module's constants. Nothing rewrites a registry entry after registration.
+
 Watermark choice: the fixtures are replayed in file order (≈ts order,
 monotone-ish, FIXTURES.md); a generous watermark mirrors the reference's
 24 h default grace (``TimeWindows.of`` at KafkaStreamsApp.scala:142) so no
@@ -20,6 +25,13 @@ from pyspark.sql import functions as F
 
 from kafka_streams_playground_spark.operators.aggregations import tumbling_count
 from kafka_streams_playground_spark.operators.joins import interval_join
+from kafka_streams_playground_spark.plans import northstar_pipeline as _NP
+from kafka_streams_playground_spark.plans.northstar_curation import (
+    C4_MIN_WORDS,
+    _C4_SEG_RE,
+    _ascii_lower_sql,
+    ascii_lower,
+)
 from kafka_streams_playground_spark.plans.registry import REGISTRY, query
 from kafka_streams_playground_spark.sources.parquet import load_table
 from kafka_streams_playground_spark.streaming.ktable import latest_per_key_stream
@@ -37,9 +49,9 @@ WATERMARK = "24 hours"  # mirrors the reference's default grace (:142)
 
 @query(
     "stream_q4_products_per_user_10s",
-    oracle=None,  # set below: shares q4's oracle (append-mode windows emit
-    # once at watermark close, so the drain IS the final state — audited
-    # under 3-batch replay)
+    # append-mode windows emit once at watermark close, so the drain IS
+    # the final state — audited under 3-batch replay
+    oracle=REGISTRY["q4_products_per_user_10s"].oracle,
     tags=("reference", "streaming", "A4", "A5", "S1"),
 )
 def stream_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,7 +66,7 @@ def stream_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_s2_latest_event_per_user",
-    oracle=None,  # set below: shares s2's oracle
+    oracle=REGISTRY["s2_latest_event_per_user"].oracle,
     tags=("reference", "streaming", "S2", "A5"),
 )
 def stream_s2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,7 +101,7 @@ def stream_s2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_q5_paid_orders",
-    oracle=None,  # set below: shares q5's oracle
+    oracle=REGISTRY["q5_paid_orders"].oracle,
     tags=("reference", "streaming", "flagship", "J1", "J2", "J3"),
 )
 def stream_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -154,7 +166,7 @@ def stream_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_q1_expensive_orders",
-    oracle=None,  # set below: shares q1's oracle (stateless ⇒ same rows)
+    oracle=REGISTRY["q1_expensive_orders"].oracle,  # stateless ⇒ same rows
     tags=("reference", "streaming", "S1", "P1", "S4"),
 )
 def stream_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -178,7 +190,7 @@ def stream_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_q2_order_projection",
-    oracle=None,  # set below: shares q2's oracle (stateless ⇒ same rows)
+    oracle=REGISTRY["q2_order_projection"].oracle,  # stateless ⇒ same rows
     tags=("reference", "streaming", "S1", "P2", "S5"),
 )
 def stream_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -193,7 +205,8 @@ def stream_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_q3_products_by_first_letter",
-    oracle=None,  # set below: shares q3's oracle (drained update state = batch agg)
+    # drained update state = batch agg
+    oracle=REGISTRY["q3_products_by_first_letter"].oracle,
     tags=("reference", "streaming", "P3", "P7", "A1", "A5"),
 )
 def stream_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -337,7 +350,7 @@ def stream_running_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_sliding_window_event_counts",
-    oracle=None,  # set below: shares the batch sliding-window oracle
+    oracle=REGISTRY["sliding_window_event_counts"].oracle,
     tags=("extension", "streaming", "temporal", "sliding"),
 )
 def stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -360,7 +373,7 @@ def stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_topk_customers_by_revenue",
-    oracle=None,  # set below: shares the batch top-k oracle
+    oracle=REGISTRY["topk_customers_by_revenue"].oracle,
     tags=("extension", "streaming", "topk", "complete-mode"),
 )
 def stream_topk_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -390,7 +403,7 @@ def stream_topk_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_asof_purchase_last_click",
-    oracle=None,  # set below: shares the batch as-of oracle
+    oracle=REGISTRY["asof_purchase_last_click"].oracle,
     tags=("extension", "streaming", "asof", "stateful"),
 )
 def stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -410,7 +423,7 @@ def stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_s2_compacted_tombstones",
-    oracle=None,  # set below: shares the batch tombstone-compaction oracle
+    oracle=REGISTRY["s2_compacted_tombstones"].oracle,
     tags=("extension", "streaming", "S2", "tombstone"),
 )
 def stream_s2_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -447,32 +460,6 @@ def stream_s2_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compacted.filter(F.col("event_type") != "error").select(
         "user_id", "event_id", "event_type", "value"
     )
-
-
-def _share_oracles() -> None:
-    """Streaming twins drain to the same final state as their batch forms on
-    the single-file fixtures, so they share the batch oracles (registry
-    entries are frozen dataclasses — re-register with the oracle filled)."""
-    from dataclasses import replace
-
-    for stream_name, batch_name in [
-        ("stream_q4_products_per_user_10s", "q4_products_per_user_10s"),
-        ("stream_s2_latest_event_per_user", "s2_latest_event_per_user"),
-        ("stream_q5_paid_orders", "q5_paid_orders"),
-        ("stream_q1_expensive_orders", "q1_expensive_orders"),
-        ("stream_q2_order_projection", "q2_order_projection"),
-        ("stream_q3_products_by_first_letter", "q3_products_by_first_letter"),
-        ("stream_sliding_window_event_counts", "sliding_window_event_counts"),
-        ("stream_topk_customers_by_revenue", "topk_customers_by_revenue"),
-        ("stream_asof_purchase_last_click", "asof_purchase_last_click"),
-        ("stream_s2_compacted_tombstones", "s2_compacted_tombstones"),
-    ]:
-        REGISTRY[stream_name] = replace(
-            REGISTRY[stream_name], oracle=REGISTRY[batch_name].oracle
-        )
-
-
-_share_oracles()
 
 
 @query(
@@ -751,7 +738,34 @@ def stream_q5_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_pipeline_quality_filter",
-    oracle=None,  # set below (module import order: northstar_pipeline constants)
+    # Over DISTINCT text (the dedup survivors): identical text ⇒ identical
+    # features, so the distinct-text set is exactly the emitted first-arrival
+    # set regardless of arrival order.
+    oracle=f"""
+    WITH d AS (SELECT DISTINCT text FROM documents),
+    f AS (
+      SELECT md5(text) AS text_hash,
+             len(string_split(text, ' ')) AS n_tokens,
+             len(list_distinct(string_split(text, ' '))) * 1.0
+                 / len(string_split(text, ' ')) AS ttr,
+             len([x for x in string_split(text, ' ')
+                  if list_contains(['the','a','of','and','to','in'], x)])
+                 * 1.0 / len(string_split(text, ' ')) AS stop_ratio
+      FROM d
+    )
+    SELECT text_hash, n_tokens,
+           CASE WHEN n_tokens < {_NP.MIN_TOKENS} THEN 'too_short'
+                WHEN n_tokens > {_NP.MAX_TOKENS} THEN 'too_long'
+                WHEN ROUND(0.5 * ttr + 0.3 * stop_ratio
+                           + 0.2 * LEAST(n_tokens / 256.0, 1.0), 4)
+                     < {_NP.MIN_QUALITY} THEN 'low_quality'
+                ELSE 'kept' END AS reason,
+           CAST(n_tokens >= {_NP.MIN_TOKENS} AND n_tokens <= {_NP.MAX_TOKENS}
+                AND ROUND(0.5 * ttr + 0.3 * stop_ratio
+                          + 0.2 * LEAST(n_tokens / 256.0, 1.0), 4)
+                    >= {_NP.MIN_QUALITY} AS INT) AS keep
+    FROM f
+    """,
     tags=("northstar", "streaming", "pipeline", "dedup", "watermark"),
 )
 def stream_pipeline_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -818,47 +832,6 @@ def stream_pipeline_quality_filter(spark: SparkSession, sf_dir: str) -> DataFram
         .alias("keep"),
     )
     return run_to_completion(out, output_mode="append", spark=spark)
-
-
-def _fill_pipeline_oracle() -> None:
-    """Oracle over DISTINCT text (the dedup survivors): identical text ⇒
-    identical features, so the distinct-text set is exactly the emitted
-    first-arrival set regardless of arrival order."""
-    from dataclasses import replace
-
-    oracle = f"""
-    WITH d AS (SELECT DISTINCT text FROM documents),
-    f AS (
-      SELECT md5(text) AS text_hash,
-             len(string_split(text, ' ')) AS n_tokens,
-             len(list_distinct(string_split(text, ' '))) * 1.0
-                 / len(string_split(text, ' ')) AS ttr,
-             len([x for x in string_split(text, ' ')
-                  if list_contains(['the','a','of','and','to','in'], x)])
-                 * 1.0 / len(string_split(text, ' ')) AS stop_ratio
-      FROM d
-    )
-    SELECT text_hash, n_tokens,
-           CASE WHEN n_tokens < {_NP.MIN_TOKENS} THEN 'too_short'
-                WHEN n_tokens > {_NP.MAX_TOKENS} THEN 'too_long'
-                WHEN ROUND(0.5 * ttr + 0.3 * stop_ratio
-                           + 0.2 * LEAST(n_tokens / 256.0, 1.0), 4)
-                     < {_NP.MIN_QUALITY} THEN 'low_quality'
-                ELSE 'kept' END AS reason,
-           CAST(n_tokens >= {_NP.MIN_TOKENS} AND n_tokens <= {_NP.MAX_TOKENS}
-                AND ROUND(0.5 * ttr + 0.3 * stop_ratio
-                          + 0.2 * LEAST(n_tokens / 256.0, 1.0), 4)
-                    >= {_NP.MIN_QUALITY} AS INT) AS keep
-    FROM f
-    """
-    REGISTRY["stream_pipeline_quality_filter"] = replace(
-        REGISTRY["stream_pipeline_quality_filter"], oracle=oracle
-    )
-
-
-from kafka_streams_playground_spark.plans import northstar_pipeline as _NP  # noqa: E402
-
-_fill_pipeline_oracle()
 
 
 @query(
@@ -941,7 +914,7 @@ def stream_domain_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_text_token_stats",
-    oracle=None,  # set below: shares text_token_stats' oracle (stateless ⇒ same rows)
+    oracle=REGISTRY["text_token_stats"].oracle,  # stateless ⇒ same rows
     tags=("northstar", "streaming", "text"),
 )
 def stream_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -971,24 +944,9 @@ def stream_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_completion(out, output_mode="append", spark=spark)
 
 
-def _share_northstar_oracles() -> None:
-    from dataclasses import replace
-
-    # Import for side effect: registers the batch twin (plans/__init__ imports
-    # this module BEFORE northstar_text, so pull it in explicitly).
-    from kafka_streams_playground_spark.plans import northstar_text  # noqa: F401
-
-    REGISTRY["stream_text_token_stats"] = replace(
-        REGISTRY["stream_text_token_stats"], oracle=REGISTRY["text_token_stats"].oracle
-    )
-
-
-_share_northstar_oracles()
-
-
 @query(
     "stream_decontaminate_corpus",
-    oracle=None,  # set below: shares decontaminate_corpus (stateless ⇒ same rows)
+    oracle=REGISTRY["decontaminate_corpus"].oracle,  # stateless ⇒ same rows
     tags=("northstar", "streaming", "pipeline", "text"),
 )
 def stream_decontaminate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1051,21 +1009,9 @@ def stream_decontaminate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_completion(out, output_mode="append", spark=spark)
 
 
-def _share_decontaminate_oracle() -> None:
-    from dataclasses import replace
-
-    REGISTRY["stream_decontaminate_corpus"] = replace(
-        REGISTRY["stream_decontaminate_corpus"],
-        oracle=REGISTRY["decontaminate_corpus"].oracle,
-    )
-
-
-_share_decontaminate_oracle()
-
-
 @query(
     "stream_ts_ewma_user_daily",
-    oracle=None,  # set below: shares the batch EWMA oracle
+    oracle=REGISTRY["ts_ewma_user_daily"].oracle,
     tags=("extension", "streaming", "temporal", "stateful"),
 )
 def stream_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1091,23 +1037,9 @@ def stream_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).drop("n_seen")
 
 
-def _share_ewma_oracle() -> None:
-    from dataclasses import replace
-
-    from kafka_streams_playground_spark.plans import temporal  # noqa: F401
-
-    REGISTRY["stream_ts_ewma_user_daily"] = replace(
-        REGISTRY["stream_ts_ewma_user_daily"],
-        oracle=REGISTRY["ts_ewma_user_daily"].oracle,
-    )
-
-
-_share_ewma_oracle()
-
-
 @query(
     "stream_funnel_view_click_purchase",
-    oracle=None,  # set below: shares the batch funnel oracle
+    oracle=REGISTRY["funnel_view_click_purchase"].oracle,
     tags=("extension", "streaming", "funnel", "stateful"),
 )
 def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1130,23 +1062,9 @@ def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return latest_update_state(drained, "user_id", F.col("n_seen")).drop("n_seen")
 
 
-def _share_funnel_oracle() -> None:
-    from dataclasses import replace
-
-    from kafka_streams_playground_spark.plans import temporal  # noqa: F401
-
-    REGISTRY["stream_funnel_view_click_purchase"] = replace(
-        REGISTRY["stream_funnel_view_click_purchase"],
-        oracle=REGISTRY["funnel_view_click_purchase"].oracle,
-    )
-
-
-_share_funnel_oracle()
-
-
 @query(
     "stream_chunk_documents_overlap",
-    oracle=None,  # set below: shares the batch chunk-manifest oracle
+    oracle=REGISTRY["chunk_documents_overlap"].oracle,
     tags=("northstar", "streaming", "curation", "chunking"),
 )
 def stream_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1181,23 +1099,9 @@ def stream_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_completion(out, output_mode="append", spark=spark)
 
 
-def _share_chunk_oracle() -> None:
-    from dataclasses import replace
-
-    from kafka_streams_playground_spark.plans import northstar_curation  # noqa: F401
-
-    REGISTRY["stream_chunk_documents_overlap"] = replace(
-        REGISTRY["stream_chunk_documents_overlap"],
-        oracle=REGISTRY["chunk_documents_overlap"].oracle,
-    )
-
-
-_share_chunk_oracle()
-
-
 @query(
     "stream_events_value_outliers",
-    oracle=None,  # set below: shares the batch outlier oracle
+    oracle=REGISTRY["events_value_outliers"].oracle,
     tags=("extension", "streaming", "anomaly"),
 )
 def stream_events_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1239,23 +1143,27 @@ def stream_events_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_completion(out, output_mode="append", spark=spark)
 
 
-def _share_outlier_oracle() -> None:
-    from dataclasses import replace
-
-    from kafka_streams_playground_spark.plans import temporal  # noqa: F401
-
-    REGISTRY["stream_events_value_outliers"] = replace(
-        REGISTRY["stream_events_value_outliers"],
-        oracle=REGISTRY["events_value_outliers"].oracle,
-    )
-
-
-_share_outlier_oracle()
-
-
 @query(
     "stream_text_line_filter",
-    oracle=None,  # set below: builds on the C4 segmentation CTEs
+    # the batch twin's per-line rules on the C4 segmentation
+    oracle=f"""
+        WITH seg AS (
+          SELECT doc_id,
+                 string_split(regexp_replace(text, '{_C4_SEG_RE}',
+                                             '\\1' || chr(10), 'g'),
+                              chr(10)) AS lines
+          FROM documents
+        ),
+        l AS (
+          SELECT doc_id, unnest(lines) AS line,
+                 generate_subscripts(lines, 1) - 1 AS line_idx
+          FROM seg
+        )
+        SELECT doc_id, CAST(line_idx AS BIGINT) AS line_idx, line
+        FROM l
+        WHERE len(string_split(line, ' ')) >= {C4_MIN_WORDS}
+          AND NOT contains({_ascii_lower_sql('line')}, 'javascript')
+        """,
     tags=("northstar", "streaming", "curation", "text"),
 )
 def stream_text_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1274,14 +1182,6 @@ def stream_text_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch per-line rule table row-for-row, micro-batch boundaries
     irrelevant; zero state, zero shuffle — at 100 TB this runs at source
     parallelism."""
-    from kafka_streams_playground_spark.plans.northstar_curation import (
-        C4_MIN_WORDS,
-        _C4_SEG_RE,
-    )
-    from kafka_streams_playground_spark.plans.northstar_curation import (
-        ascii_lower as _c4_ascii_lower,
-    )
-
     docs = read_stream_table(spark, sf_dir, "documents").select("doc_id", "text")
     seg = docs.select(
         "doc_id",
@@ -1290,49 +1190,14 @@ def stream_text_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = seg.select("doc_id", F.posexplode("lines").alias("i", "line"))
     out = l.filter(
         (F.size(F.split("line", " ")) >= C4_MIN_WORDS)
-        & ~F.contains(_c4_ascii_lower("line"), F.lit("javascript"))
+        & ~F.contains(ascii_lower("line"), F.lit("javascript"))
     ).select("doc_id", F.col("i").cast("bigint").alias("line_idx"), "line")
     return run_to_completion(out, output_mode="append", spark=spark)
 
 
-def _set_line_filter_oracle() -> None:
-    from dataclasses import replace
-
-    from kafka_streams_playground_spark.plans.northstar_curation import (
-        C4_MIN_WORDS,
-        _C4_SEG_RE,
-        _ascii_lower_sql,
-    )
-
-    REGISTRY["stream_text_line_filter"] = replace(
-        REGISTRY["stream_text_line_filter"],
-        oracle=f"""
-        WITH seg AS (
-          SELECT doc_id,
-                 string_split(regexp_replace(text, '{_C4_SEG_RE}',
-                                             '\\1' || chr(10), 'g'),
-                              chr(10)) AS lines
-          FROM documents
-        ),
-        l AS (
-          SELECT doc_id, unnest(lines) AS line,
-                 generate_subscripts(lines, 1) - 1 AS line_idx
-          FROM seg
-        )
-        SELECT doc_id, CAST(line_idx AS BIGINT) AS line_idx, line
-        FROM l
-        WHERE len(string_split(line, ' ')) >= {C4_MIN_WORDS}
-          AND NOT contains({_ascii_lower_sql('line')}, 'javascript')
-        """,
-    )
-
-
-_set_line_filter_oracle()
-
-
 @query(
     "stream_ts_cusum_drift_per_type",
-    oracle=None,  # set below: shares the batch CUSUM oracle
+    oracle=REGISTRY["ts_cusum_drift_per_type"].oracle,
     tags=("extension", "streaming", "temporal", "monitoring", "stateful"),
 )
 def stream_ts_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1370,20 +1235,6 @@ def stream_ts_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cents") * F.col("n") - F.col("s") - F.col("n") * CUSUM_K_CENTS,
     )
     return run_to_completion(cusum_per_key(j), output_mode="append", spark=spark)
-
-
-def _share_cusum_oracle() -> None:
-    from dataclasses import replace
-
-    from kafka_streams_playground_spark.plans import temporal  # noqa: F401
-
-    REGISTRY["stream_ts_cusum_drift_per_type"] = replace(
-        REGISTRY["stream_ts_cusum_drift_per_type"],
-        oracle=REGISTRY["ts_cusum_drift_per_type"].oracle,
-    )
-
-
-_share_cusum_oracle()
 
 
 @query(
@@ -1453,7 +1304,7 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Shares the batch covariance oracle: the running Gram fold drained to
     # final state equals the one-shot batch aggregate (order-free integer
     # sums; partition/micro-batch invariance property-pinned).
-    oracle=None,  # set below from the batch twin
+    oracle=REGISTRY["embedding_covariance_matrix"].oracle,
     tags=("northstar", "streaming", "similarity", "embedding"),
 )
 def stream_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1504,29 +1355,13 @@ def stream_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assemble_covariance(last.persist())
 
 
-from dataclasses import replace as _replace  # noqa: E402
-
-from kafka_streams_playground_spark.plans import northstar_similarity as _NS  # noqa: E402
-
-REGISTRY["stream_embedding_covariance"] = _replace(
-    REGISTRY["stream_embedding_covariance"],
-    # the batch twin's oracle verbatim (same final state; built from the
-    # shared CTE constant because this module imports before the batch
-    # query registers)
-    oracle=f"""
-    WITH {_NS._COV_CTES}
-    SELECT i, j, cov_e12 FROM cov
-    """,
-)
-
-
 @query(
     "stream_stats_ols_by_nation",
     # Shares the batch OLS oracle: the running sufficient-statistics fold
     # drained to final state equals the one-shot batch aggregate (exact
     # DECIMAL(38,0) sums are order-free and mergeable across micro-batch
     # boundaries — the same contract the covariance twin rides).
-    oracle=None,  # set below from the batch twin's shared constant
+    oracle=REGISTRY["stats_ols_qty_price_by_nation"].oracle,
     tags=("extension", "streaming", "stats"),
 )
 def stream_stats_ols_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1573,17 +1408,9 @@ def stream_stats_ols_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ols_assemble(last)
 
 
-from kafka_streams_playground_spark.plans import northstar_stats as _NST  # noqa: E402
-
-REGISTRY["stream_stats_ols_by_nation"] = _replace(
-    REGISTRY["stream_stats_ols_by_nation"],
-    oracle=_NST.OLS_ORACLE,
-)
-
-
 @query(
     "stream_dedup_incremental_new_vs_base",
-    oracle=None,  # set below: shares dedup_incremental_new_vs_base
+    oracle=REGISTRY["dedup_incremental_new_vs_base"].oracle,
     tags=("northstar", "streaming", "dedup", "incremental"),
 )
 def stream_dedup_incremental_new_vs_base(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1650,20 +1477,9 @@ def stream_dedup_incremental_new_vs_base(spark: SparkSession, sf_dir: str) -> Da
     )
 
 
-# Import for the registration side effect: this module executes BEFORE
-# plans/__init__ reaches northstar_dedup, so force the batch twin to
-# register its oracle first (the northstar_similarity precedent above).
-from kafka_streams_playground_spark.plans import northstar_dedup as _ND2  # noqa: E402,F401
-
-REGISTRY["stream_dedup_incremental_new_vs_base"] = _replace(
-    REGISTRY["stream_dedup_incremental_new_vs_base"],
-    oracle=REGISTRY["dedup_incremental_new_vs_base"].oracle,
-)
-
-
 @query(
     "stream_dsir_importance_weights",
-    oracle=None,  # set below: shares dsir_importance_weights (stateless ⇒ same rows)
+    oracle=REGISTRY["dsir_importance_weights"].oracle,  # stateless ⇒ same rows
     tags=("northstar", "streaming", "curation", "scoring"),
 )
 def stream_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1769,17 +1585,9 @@ def stream_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFram
     return run_to_completion(out, output_mode="append", spark=spark)
 
 
-from kafka_streams_playground_spark.plans import northstar_curation as _NC2  # noqa: E402,F401
-
-REGISTRY["stream_dsir_importance_weights"] = _replace(
-    REGISTRY["stream_dsir_importance_weights"],
-    oracle=REGISTRY["dsir_importance_weights"].oracle,
-)
-
-
 @query(
     "stream_stats_histogram_quantiles",
-    oracle=None,  # set below: shares stats_histogram_quantiles
+    oracle=REGISTRY["stats_histogram_quantiles"].oracle,
     tags=("northstar", "streaming", "stats", "quantile"),
 )
 def stream_stats_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1826,16 +1634,9 @@ def stream_stats_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-from kafka_streams_playground_spark.plans import northstar_stats as _NS2  # noqa: E402,F401
-
-REGISTRY["stream_stats_histogram_quantiles"] = _replace(
-    REGISTRY["stream_stats_histogram_quantiles"],
-    oracle=REGISTRY["stats_histogram_quantiles"].oracle,
-)
-
-
 @query(
     "stream_ts_multi_granularity_rollup",
+    oracle=REGISTRY["ts_multi_granularity_rollup"].oracle,
     tags=("northstar", "streaming", "rollup", "twin"),
 )
 def stream_ts_multi_granularity_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1881,14 +1682,9 @@ def stream_ts_multi_granularity_rollup(spark: SparkSession, sf_dir: str) -> Data
     return run_to_completion(agg, output_mode="complete", spark=spark)
 
 
-REGISTRY["stream_ts_multi_granularity_rollup"] = _replace(
-    REGISTRY["stream_ts_multi_granularity_rollup"],
-    oracle=REGISTRY["ts_multi_granularity_rollup"].oracle,
-)
-
-
 @query(
     "stream_drift_ks_value_halves",
+    oracle=REGISTRY["drift_ks_value_halves"].oracle,
     tags=("northstar", "streaming", "drift", "twin"),
 )
 def stream_drift_ks_value_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1942,14 +1738,9 @@ def stream_drift_ks_value_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-REGISTRY["stream_drift_ks_value_halves"] = _replace(
-    REGISTRY["stream_drift_ks_value_halves"],
-    oracle=REGISTRY["drift_ks_value_halves"].oracle,
-)
-
-
 @query(
     "stream_stats_bootstrap_ci_mean",
+    oracle=REGISTRY["stats_bootstrap_ci_mean"].oracle,
     tags=("northstar", "streaming", "stats", "twin"),
 )
 def stream_stats_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2027,15 +1818,14 @@ def stream_stats_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-REGISTRY["stream_stats_bootstrap_ci_mean"] = _replace(
-    REGISTRY["stream_stats_bootstrap_ci_mean"],
-    oracle=REGISTRY["stats_bootstrap_ci_mean"].oracle,
-)
-
-
 @query(
     "stream_curation_source_cap",
-    oracle=None,  # set below: the batch cap's kept-prefix rows
+    # the batch cap's kept-prefix rows
+    oracle=(
+        "SELECT source, doc_id, logit_e6, quality_rank FROM ("
+        + REGISTRY["curation_source_cap"].oracle
+        + ") WHERE kept = 1"
+    ),
     tags=("northstar", "streaming", "curation"),
 )
 def stream_curation_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2094,23 +1884,6 @@ def stream_curation_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keep only each source's LAST kept-set snapshot (n_seen monotone;
     # round 13 — earlier per-batch snapshots otherwise survive the drain)
     return latest_update_snapshot(drained, "source", F.col("n_seen")).drop("n_seen")
-
-
-def _share_source_cap_oracle() -> None:
-    from kafka_streams_playground_spark.plans import northstar_curation  # noqa: F401
-
-    batch = REGISTRY["curation_source_cap"].oracle
-    REGISTRY["stream_curation_source_cap"] = _replace(
-        REGISTRY["stream_curation_source_cap"],
-        oracle=(
-            "SELECT source, doc_id, logit_e6, quality_rank FROM ("
-            + batch
-            + ") WHERE kept = 1"
-        ),
-    )
-
-
-_share_source_cap_oracle()
 
 
 def _stream_hll_oracle() -> str:
@@ -2299,7 +2072,7 @@ def stream_ts_rollup_hll_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_stats_benford_first_digit",
-    oracle=None,  # re-registered below: shares the batch Benford oracle
+    oracle=REGISTRY["stats_benford_first_digit"].oracle,
     tags=("northstar", "streaming", "stats", "quality"),
 )
 def stream_stats_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2354,21 +2127,9 @@ def stream_stats_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-def _share_benford_oracle() -> None:
-    from kafka_streams_playground_spark.plans import northstar_stats  # noqa: F401
-
-    REGISTRY["stream_stats_benford_first_digit"] = _replace(
-        REGISTRY["stream_stats_benford_first_digit"],
-        oracle=REGISTRY["stats_benford_first_digit"].oracle,
-    )
-
-
-_share_benford_oracle()
-
-
 @query(
     "stream_cdc_merge_upsert",
-    oracle=None,  # re-registered below: shares the batch MERGE oracle
+    oracle=REGISTRY["cdc_merge_upsert"].oracle,
     tags=("extension", "streaming", "cdc", "merge", "sink"),
 )
 def stream_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2462,21 +2223,9 @@ def stream_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _share_cdc_merge_oracle() -> None:
-    from kafka_streams_playground_spark.plans import relational  # noqa: F401
-
-    REGISTRY["stream_cdc_merge_upsert"] = _replace(
-        REGISTRY["stream_cdc_merge_upsert"],
-        oracle=REGISTRY["cdc_merge_upsert"].oracle,
-    )
-
-
-_share_cdc_merge_oracle()
-
-
 @query(
     "stream_ivm_incremental_join_view",
-    oracle=None,  # re-registered below: shares the batch full-recompute oracle
+    oracle=REGISTRY["ivm_incremental_join_view"].oracle,
     tags=("northstar", "streaming", "cdc", "ivm", "join", "stateful"),
 )
 def stream_ivm_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2558,21 +2307,9 @@ def ivm_merge_views(v_old: DataFrame, d_final: DataFrame) -> DataFrame:
     )
 
 
-def _share_ivm_join_oracle() -> None:
-    from kafka_streams_playground_spark.plans import relational  # noqa: F401
-
-    REGISTRY["stream_ivm_incremental_join_view"] = _replace(
-        REGISTRY["stream_ivm_incremental_join_view"],
-        oracle=REGISTRY["ivm_incremental_join_view"].oracle,
-    )
-
-
-_share_ivm_join_oracle()
-
-
 @query(
     "stream_retrieval_rrf_fusion",
-    oracle=None,  # re-registered below: shares the batch RRF oracle
+    oracle=REGISTRY["retrieval_rrf_fusion"].oracle,
     tags=("northstar", "streaming", "retrieval", "topk", "complete-mode"),
 )
 def stream_retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2721,21 +2458,9 @@ def stream_retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _share_rrf_oracle() -> None:
-    from kafka_streams_playground_spark.plans import northstar_retrieval  # noqa: F401
-
-    REGISTRY["stream_retrieval_rrf_fusion"] = _replace(
-        REGISTRY["stream_retrieval_rrf_fusion"],
-        oracle=REGISTRY["retrieval_rrf_fusion"].oracle,
-    )
-
-
-_share_rrf_oracle()
-
-
 @query(
     "stream_sample_weighted_reservoir",
-    oracle=None,  # re-registered below: shares the batch reservoir oracle
+    oracle=REGISTRY["sample_weighted_reservoir"].oracle,
     tags=("northstar", "streaming", "curation", "sampling", "stateful"),
 )
 def stream_sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2788,21 +2513,9 @@ def stream_sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFr
     return final.select("doc_id", "lang", "n_chars", "clock9", "rank")
 
 
-def _share_reservoir_oracle() -> None:
-    from kafka_streams_playground_spark.plans import northstar_curation  # noqa: F401
-
-    REGISTRY["stream_sample_weighted_reservoir"] = _replace(
-        REGISTRY["stream_sample_weighted_reservoir"],
-        oracle=REGISTRY["sample_weighted_reservoir"].oracle,
-    )
-
-
-_share_reservoir_oracle()
-
-
 @query(
     "stream_stats_countmin_user_traffic",
-    oracle=None,  # re-registered below: shares the batch count-min oracle
+    oracle=REGISTRY["stats_countmin_user_traffic"].oracle,
     tags=("northstar", "streaming", "stats", "sketch"),
 )
 def stream_stats_countmin_user_traffic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2873,21 +2586,9 @@ def stream_stats_countmin_user_traffic(spark: SparkSession, sf_dir: str) -> Data
     )
 
 
-def _share_countmin_oracle() -> None:
-    from kafka_streams_playground_spark.plans import northstar_stats  # noqa: F401
-
-    REGISTRY["stream_stats_countmin_user_traffic"] = _replace(
-        REGISTRY["stream_stats_countmin_user_traffic"],
-        oracle=REGISTRY["stats_countmin_user_traffic"].oracle,
-    )
-
-
-_share_countmin_oracle()
-
-
 @query(
     "stream_privacy_k_anonymity",
-    oracle=None,  # re-registered below: shares the batch privacy oracle
+    oracle=REGISTRY["privacy_k_anonymity_audit"].oracle,
     tags=("northstar", "streaming", "curation", "privacy"),
 )
 def stream_privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2947,21 +2648,9 @@ def stream_privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _share_privacy_oracle() -> None:
-    from kafka_streams_playground_spark.plans import northstar_curation  # noqa: F401
-
-    REGISTRY["stream_privacy_k_anonymity"] = _replace(
-        REGISTRY["stream_privacy_k_anonymity"],
-        oracle=REGISTRY["privacy_k_anonymity_audit"].oracle,
-    )
-
-
-_share_privacy_oracle()
-
-
 @query(
     "stream_stats_source_overlap_kmv",
-    oracle=None,  # set below: shares the batch overlap oracle
+    oracle=REGISTRY["stats_source_overlap_kmv"].oracle,
     tags=("northstar", "streaming", "stats", "sketch", "stateful"),
 )
 def stream_stats_source_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3003,21 +2692,9 @@ def stream_stats_source_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFra
     return source_overlap_from_sketches(sks.localCheckpoint(eager=True))
 
 
-def _share_source_overlap_oracle() -> None:
-    from kafka_streams_playground_spark.plans import northstar_stats  # noqa: F401
-
-    REGISTRY["stream_stats_source_overlap_kmv"] = _replace(
-        REGISTRY["stream_stats_source_overlap_kmv"],
-        oracle=REGISTRY["stats_source_overlap_kmv"].oracle,
-    )
-
-
-_share_source_overlap_oracle()
-
-
 @query(
     "stream_join_interval_overlap_bins",
-    oracle=None,  # set below: shares join_interval_overlap_bins' oracle
+    oracle=REGISTRY["join_interval_overlap_bins"].oracle,
     tags=("extension", "streaming", "temporal", "join", "J3"),
 )
 def stream_join_interval_overlap_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3160,18 +2837,6 @@ def _replay_interval_bin_join(
     )
 
 
-def _share_interval_overlap_oracle() -> None:
-    from kafka_streams_playground_spark.plans import temporal  # noqa: F401
-
-    REGISTRY["stream_join_interval_overlap_bins"] = _replace(
-        REGISTRY["stream_join_interval_overlap_bins"],
-        oracle=REGISTRY["join_interval_overlap_bins"].oracle,
-    )
-
-
-_share_interval_overlap_oracle()
-
-
 def _session_window_intervals(
     spark: SparkSession, events: DataFrame, key: str, gap_s: int, out_no: str
 ) -> DataFrame:
@@ -3296,7 +2961,7 @@ def _append_session_windows(
 
 @query(
     "stream_session_window_interval_overlap",
-    oracle=None,  # set below: shares join_interval_overlap_bins' oracle
+    oracle=REGISTRY["join_interval_overlap_bins"].oracle,
     tags=("extension", "streaming", "temporal", "join", "J3"),
 )
 def stream_session_window_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3338,21 +3003,9 @@ def stream_session_window_interval_overlap(spark: SparkSession, sf_dir: str) -> 
     return _replay_interval_bin_join(spark, sessions, bursts)
 
 
-def _share_session_window_overlap_oracle() -> None:
-    from kafka_streams_playground_spark.plans import temporal  # noqa: F401
-
-    REGISTRY["stream_session_window_interval_overlap"] = _replace(
-        REGISTRY["stream_session_window_interval_overlap"],
-        oracle=REGISTRY["join_interval_overlap_bins"].oracle,
-    )
-
-
-_share_session_window_overlap_oracle()
-
-
 @query(
     "stream_embedding_centroid_outliers",
-    oracle=None,  # set below: shares embedding_centroid_outliers' oracle
+    oracle=REGISTRY["embedding_centroid_outliers"].oracle,
     tags=("northstar", "streaming", "similarity", "embedding"),
 )
 def stream_embedding_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3396,21 +3049,9 @@ def stream_embedding_centroid_outliers(spark: SparkSession, sf_dir: str) -> Data
     )
 
 
-def _share_centroid_outlier_oracle() -> None:
-    from kafka_streams_playground_spark.plans import northstar_similarity  # noqa: F401
-
-    REGISTRY["stream_embedding_centroid_outliers"] = _replace(
-        REGISTRY["stream_embedding_centroid_outliers"],
-        oracle=REGISTRY["embedding_centroid_outliers"].oracle,
-    )
-
-
-_share_centroid_outlier_oracle()
-
-
 @query(
     "stream_stats_welch_ttest_halves",
-    oracle=None,  # set below: shares stats_welch_ttest_halves' oracle
+    oracle=REGISTRY["stats_welch_ttest_halves"].oracle,
     tags=("extension", "streaming", "stats", "drift"),
 )
 def stream_stats_welch_ttest_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3449,21 +3090,9 @@ def stream_stats_welch_ttest_halves(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-def _share_welch_oracle() -> None:
-    from kafka_streams_playground_spark.plans import northstar_stats  # noqa: F401
-
-    REGISTRY["stream_stats_welch_ttest_halves"] = _replace(
-        REGISTRY["stream_stats_welch_ttest_halves"],
-        oracle=REGISTRY["stats_welch_ttest_halves"].oracle,
-    )
-
-
-_share_welch_oracle()
-
-
 @query(
     "stream_drift_chi2_event_type_halves",
-    oracle=None,  # set below: shares drift_chi2_event_type_halves' oracle
+    oracle=REGISTRY["drift_chi2_event_type_halves"].oracle,
     tags=("extension", "streaming", "temporal", "drift", "stats"),
 )
 def stream_drift_chi2_event_type_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3496,21 +3125,9 @@ def stream_drift_chi2_event_type_halves(spark: SparkSession, sf_dir: str) -> Dat
     )
 
 
-def _share_chi2_oracle() -> None:
-    from kafka_streams_playground_spark.plans import temporal  # noqa: F401
-
-    REGISTRY["stream_drift_chi2_event_type_halves"] = _replace(
-        REGISTRY["stream_drift_chi2_event_type_halves"],
-        oracle=REGISTRY["drift_chi2_event_type_halves"].oracle,
-    )
-
-
-_share_chi2_oracle()
-
-
 @query(
     "stream_stats_simpson_user_concentration",
-    oracle=None,  # set below: shares stats_simpson_user_concentration's oracle
+    oracle=REGISTRY["stats_simpson_user_concentration"].oracle,
     tags=("northstar", "streaming", "stats", "curation"),
 )
 def stream_stats_simpson_user_concentration(
@@ -3542,18 +3159,6 @@ def stream_stats_simpson_user_concentration(
         drained, ["event_type", "user_id"], F.col("c")
     )
     return simpson_from_counts(final)
-
-
-def _share_simpson_oracle() -> None:
-    from kafka_streams_playground_spark.plans import northstar_stats  # noqa: F401
-
-    REGISTRY["stream_stats_simpson_user_concentration"] = _replace(
-        REGISTRY["stream_stats_simpson_user_concentration"],
-        oracle=REGISTRY["stats_simpson_user_concentration"].oracle,
-    )
-
-
-_share_simpson_oracle()
 
 
 def _day_grid_update_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3597,7 +3202,7 @@ def day_grid_reduce(sdf: DataFrame) -> DataFrame:
 
 @query(
     "stream_ts_mann_kendall_trend",
-    oracle=None,  # set below: shares ts_mann_kendall_trend's oracle
+    oracle=REGISTRY["ts_mann_kendall_trend"].oracle,
     tags=("extension", "streaming", "temporal", "stats", "drift"),
 )
 def stream_ts_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3614,7 +3219,7 @@ def stream_ts_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_ts_theil_sen_daily_trend",
-    oracle=None,  # set below: shares ts_theil_sen_daily_trend's oracle
+    oracle=REGISTRY["ts_theil_sen_daily_trend"].oracle,
     tags=("extension", "streaming", "temporal", "ts", "stats"),
 )
 def stream_ts_theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3631,7 +3236,7 @@ def stream_ts_theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFra
 
 @query(
     "stream_ts_spearman_daily_trend",
-    oracle=None,  # set below: shares ts_spearman_daily_trend's oracle
+    oracle=REGISTRY["ts_spearman_daily_trend"].oracle,
     tags=("extension", "streaming", "temporal", "ts", "stats"),
 )
 def stream_ts_spearman_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3645,17 +3250,3 @@ def stream_ts_spearman_daily_trend(spark: SparkSession, sf_dir: str) -> DataFram
     from kafka_streams_playground_spark.plans.temporal import spearman_rho_from_grid
 
     return spearman_rho_from_grid(_day_grid_update_state(spark, sf_dir))
-
-
-def _share_trend_panel_oracles() -> None:
-    from kafka_streams_playground_spark.plans import temporal  # noqa: F401
-
-    for twin, batch in (
-        ("stream_ts_mann_kendall_trend", "ts_mann_kendall_trend"),
-        ("stream_ts_theil_sen_daily_trend", "ts_theil_sen_daily_trend"),
-        ("stream_ts_spearman_daily_trend", "ts_spearman_daily_trend"),
-    ):
-        REGISTRY[twin] = _replace(REGISTRY[twin], oracle=REGISTRY[batch].oracle)
-
-
-_share_trend_panel_oracles()

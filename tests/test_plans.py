@@ -33,8 +33,9 @@ def test_registry_keeps_explicit_shuffle_partitions(spark, sf_dir, monkeypatch):
     """The registry wrapper re-applies the runtime confs before every query.
     Defaults the caller set (shuffle count, AQE, state-store provider) must
     survive it, and an unset count must become the session's cores. A
-    caller's provider also leaves the join state format unforced: format 3
-    fails on the HDFS-backed provider."""
+    caller's provider also leaves the join state format unforced, and a
+    format 3 left on a non-RocksDB provider is unset: format 3 fails on the
+    HDFS-backed provider."""
     monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
     key = "spark.sql.shuffle.partitions"
     fmt = "spark.sql.streaming.join.stateFormatVersion"
@@ -52,6 +53,10 @@ def test_registry_keeps_explicit_shuffle_partitions(spark, sf_dir, monkeypatch):
         spark.conf.unset(fmt)
         REGISTRY["q1_expensive_orders"].fn(spark, sf_dir)
         assert {k: spark.conf.get(k) for k in caller} == caller
+        assert not spark._jsparkSession.conf().contains(fmt)
+        # the defaults set format 3 before the caller switched provider
+        spark.conf.set(fmt, "3")
+        REGISTRY["q1_expensive_orders"].fn(spark, sf_dir)
         assert not spark._jsparkSession.conf().contains(fmt)
         spark.conf.unset(key)
         REGISTRY["q1_expensive_orders"].fn(spark, sf_dir)

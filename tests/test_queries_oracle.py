@@ -42,13 +42,8 @@ def _assert_no_driver_hostile_types(name, schema):
 def test_query_matches_oracle(spec, spark, duck, sf_dir):
     sdf = spec.fn(spark, sf_dir)
     _assert_no_driver_hostile_types(spec.name, sdf.schema)
-    if spec.oracle is None:
-        # rows-only contract: runs and yields a stable schema
-        rows = sdf.collect()
-        assert sdf.columns
-        assert rows is not None
-    else:
-        assert_matches_oracle(sdf, duck, spec.oracle)
+    # every query has an oracle (test_contract_shapes)
+    assert_matches_oracle(sdf, duck, spec.oracle)
 
 
 def test_entry_smoke(spark):
@@ -63,7 +58,9 @@ def test_contract_shapes():
     import __spark_entry__ as e
 
     qs, osql = e.queries(), e.oracle_sql()
-    assert set(osql) <= set(qs)
+    # every query carries an oracle: a twin whose link went missing would
+    # otherwise fall back to the rows-only check unnoticed
+    assert set(osql) == set(qs)
     assert all(callable(f) for f in qs.values())
 
 
