@@ -1925,7 +1925,14 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     >10^8-node broadcast→co-partitioned flip note as PageRank). Both
     top-k legs are TakeOrderedAndProject — per-partition bottom-k, K-row
     merge, never a full sort; the final rank window runs over 2·K
-    surviving rows."""
+    surviving rows.
+
+    Fault tolerance: a2 is materialized with ``localCheckpoint``, which
+    keeps its blocks only in executor storage and truncates the lineage
+    behind them. A lost executor therefore cannot recompute its a2
+    partitions from one round back; the job fails and the whole query
+    reruns from the fixtures. A reliable ``checkpoint()`` to a durable
+    directory would keep per-round recovery at the cost of a write."""
     ord_ = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     e = (

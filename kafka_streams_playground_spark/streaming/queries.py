@@ -11,6 +11,9 @@ Twin-to-oracle link: ``plans/__init__`` imports every batch module before
 this one, so a twin reads its batch oracle when it is decorated —
 ``oracle=REGISTRY["<batch name>"].oracle`` — or builds it from the batch
 module's constants. Nothing rewrites a registry entry after registration.
+This is the last module that registers, so it ends by moving the driver's
+priority names to the front (``plans.registry._reorder_registry``); the
+order is the same whether a program imports this module or ``plans`` first.
 
 Watermark choice: the fixtures are replayed in file order (≈ts order,
 monotone-ish, FIXTURES.md); a generous watermark mirrors the reference's
@@ -32,7 +35,7 @@ from kafka_streams_playground_spark.plans.northstar_curation import (
     _ascii_lower_sql,
     ascii_lower,
 )
-from kafka_streams_playground_spark.plans.registry import REGISTRY, query
+from kafka_streams_playground_spark.plans.registry import REGISTRY, _reorder_registry, query
 from kafka_streams_playground_spark.sources.parquet import load_table
 from kafka_streams_playground_spark.streaming.ktable import latest_per_key_stream
 from kafka_streams_playground_spark.streaming.replay import (
@@ -3250,3 +3253,7 @@ def stream_ts_spearman_daily_trend(spark: SparkSession, sf_dir: str) -> DataFram
     from kafka_streams_playground_spark.plans.temporal import spearman_rho_from_grid
 
     return spearman_rho_from_grid(_day_grid_update_state(spark, sf_dir))
+
+
+# The last registrations are above: put the driver's priority names first.
+_reorder_registry()

@@ -22,25 +22,25 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_streams_playground_spark.sources.parquet import nanos_ts_to_micros, table_schema
+
 
 def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Replay a fixture table as a streaming DataFrame (S1 analogue).
 
-    Schema is taken from the batch reader (cheap footer read). The events
-    table's TIMESTAMP(NANOS) column arrives as epoch-nanos long (see
-    sources.parquet) and is normalized to TimestampType here too.
+    The schema comes from the schema catalog (``sources.parquet``), so a
+    table whose file version was already seen starts no inference job; the
+    events table's TIMESTAMP(NANOS) column is normalized to TimestampType
+    exactly as in the batch loader.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = table_schema(spark, os.path.join(sf_dir, f"{name}.parquet"))
     # The file-stream source wants a directory; glob-filter to this table.
     sdf = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", f"{name}.parquet")
         .parquet(sf_dir)
     )
-    if "ts" in sdf.columns and dict(sdf.dtypes)["ts"] == "bigint":
-        sdf = sdf.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return sdf
+    return nanos_ts_to_micros(sdf, schema)
 
 
 def write_split_feed(

@@ -182,6 +182,51 @@ def test_sql_front_door(spark, sf_dir):
     assert all(r["n"] > 0 and r["total"] > 0 for r in out)
 
 
+def _jobs_started(spark, fn) -> int:
+    """How many Spark jobs ``fn()`` starts, counted by job group."""
+    import uuid
+
+    sc, group = spark.sparkContext, f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_schema_catalog_infers_once_per_file_version(spark, tmp_path):
+    """load_table infers a file's schema once: a second load of the
+    unchanged file starts no Spark job, a rewrite at the same path is
+    inferred again, and a TIMESTAMP(NANOS) ``ts`` still arrives as a
+    timestamp through the batch and the streaming reader."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafka_streams_playground_spark.sources.parquet import load_table
+    from kafka_streams_playground_spark.streaming.replay import read_stream_table
+
+    path = str(tmp_path / "events.parquet")
+    ts = pa.array([1_700_000_000_123_456_789, 1_700_000_001_000_000_999], pa.timestamp("ns"))
+    pq.write_table(pa.table({"k": [1, 2], "ts": ts}), path)
+
+    assert _jobs_started(spark, lambda: load_table(spark, str(tmp_path), "events")) >= 1
+    assert _jobs_started(spark, lambda: load_table(spark, str(tmp_path), "events")) == 0
+    df = load_table(spark, str(tmp_path), "events")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    assert dict(read_stream_table(spark, str(tmp_path), "events").dtypes)["ts"] == "timestamp"
+    # ns → µs floor-truncation, read back as UTC epoch micros
+    got = sorted(r[0] for r in df.select(F.unix_micros("ts")).collect())
+    assert got == [1_700_000_000_123_456, 1_700_000_001_000_000]
+
+    pq.write_table(pa.table({"k": [1, 2], "ts": ts, "v": ["a", "b"]}), path)
+    df = load_table(spark, str(tmp_path), "events")
+    assert df.columns == ["k", "ts", "v"]
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    assert sorted(r["v"] for r in df.collect()) == ["a", "b"]
+
+
 def test_parquet_sink_partitioned_roundtrip(spark, sf_dir, tmp_path):
     """Partitioned parquet sink: lang-partitioned write must round-trip and
     produce prunable lang=... directories."""

@@ -4,6 +4,8 @@ on the sf0.001 fixtures — the same gate the driver applies at sf0.01
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from tests.helpers import assert_matches_oracle
@@ -81,3 +83,30 @@ def test_driver_rotation_invariants():
         "q5_paid_orders",
         "orders_products_array",
     )
+
+
+def test_registry_order_independent_of_entry_import():
+    """Whichever module a fresh interpreter imports first — the streaming
+    twins, the plans package or the driver contract — it sees the same
+    298-name registry order as this process (the priority names first)."""
+    import subprocess
+    import sys
+
+    from kafka_streams_playground_spark.plans import REGISTRY
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = (
+        "import importlib, sys; importlib.import_module(sys.argv[1]); "
+        "from kafka_streams_playground_spark.plans.registry import REGISTRY; "
+        "print(' '.join(REGISTRY))"
+    )
+    for entry in (
+        "kafka_streams_playground_spark.streaming.queries",
+        "kafka_streams_playground_spark.plans",
+        "__spark_entry__",
+    ):
+        out = subprocess.run(
+            [sys.executable, "-c", probe, entry], capture_output=True, text=True, cwd=repo
+        )
+        assert out.returncode == 0, (entry, out.stderr[-2000:])
+        assert out.stdout.split() == list(REGISTRY), entry

@@ -1209,10 +1209,6 @@ def test_append_session_windows_empty_input(spark):
     rows instead of crashing on the all-NULL sentinel (int(None) /
     null-ts session_window) — the guard the production path needs when
     a filtered feed goes quiet."""
-    # plans first: importing streaming.queries as the entry module would
-    # re-enter plans/__init__ mid-registration (circular import) and trip
-    # the length-50 reorder invariant
-    from kafka_streams_playground_spark.plans import REGISTRY  # noqa: F401
     from kafka_streams_playground_spark.streaming.queries import (
         _append_session_windows,
     )

@@ -13,11 +13,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def test_rotation_audit_parses_flat_and_wrapped_shapes(tmp_path):
+def test_rotation_audit_parses_flat_and_wrapped_shapes(tmp_path, spark):
     """last_driver_round must read the flat driver shape AND both wrapper
     shapes in the repo ('queries', and CORRECTNESS_LOCAL.json's 'results'
     — the shape ADVICE r10 flagged as silently mis-parsed), and must take
-    the max round per query."""
+    the max round per query. The 'results' file carries the provenance
+    block check_correctness.py --json stamps it with, which dates it."""
+    from tools.check_correctness import provenance
     from tools.rotation_audit import last_driver_round
 
     row = {"rows_match": True, "schema_match": True, "hash_match": True}
@@ -27,8 +29,14 @@ def test_rotation_audit_parses_flat_and_wrapped_shapes(tmp_path):
     (tmp_path / "CORRECTNESS_r02.json").write_text(
         json.dumps({"queries": {"q_a": row}})
     )
+    prov = provenance(spark, 12.34, 1, 0)
+    if os.path.isdir(os.path.join(REPO, ".git")):  # a SHA needs a git checkout
+        assert len(prov["git_sha"]) == 40 and isinstance(prov["git_dirty"], bool)
+    assert prov["utc"].endswith("+00:00") and prov["nproc"] >= 1
+    assert prov["spark"] == spark.version
+    assert (prov["wall_s"], prov["ok"], prov["fail"]) == (12.3, 1, 0)
     (tmp_path / "CORRECTNESS_r03.json").write_text(
-        json.dumps({"results": {"q_c": row}})
+        json.dumps({"sf_dir": "sf", "provenance": prov, "results": {"q_c": row}})
     )
     last = last_driver_round(str(tmp_path))
     assert last == {"q_a": 2, "q_b": 1, "q_c": 3}

@@ -20,7 +20,9 @@ Usage: python tools/check_correctness.py [--json OUT.json] [sf_dir] [query ...]
 ``--json`` additionally writes a per-query result map in the driver's
 CORRECTNESS shape (rows_match/schema_match/hash_match/rows/err) — committed
 per round as ``CORRECTNESS_LOCAL.json`` so queries past the driver's 50-query
-cap still have an inspectable hard-signal record.
+cap still have an inspectable hard-signal record. Its ``provenance`` block
+dates the map: git SHA and dirty flag, UTC time, CPU count, Spark version,
+wall seconds and OK/FAIL counts (:func:`provenance`).
 """
 
 from __future__ import annotations
@@ -72,6 +74,17 @@ def _norm_rows(cols, rows):
     return out
 
 
+def provenance(spark, wall_s: float, n_ok: int, n_fail: int) -> dict:
+    """The stamp a ``--json`` result map carries: perfbench's provenance
+    (git SHA and dirty flag, nproc, Spark and library versions) plus the
+    UTC time, the sweep's wall seconds and its OK/FAIL counts."""
+    from perfbench import measure
+
+    stamp = measure.provenance("correctness", None, spark)
+    del stamp["seed"]
+    return {**stamp, "utc": measure.utc_now(), "wall_s": round(wall_s, 1), "ok": n_ok, "fail": n_fail}
+
+
 def main() -> int:
     import duckdb
 
@@ -86,6 +99,7 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
+    started = time.time()
     spark = get_spark("correctness-check")
     con = duckdb.connect()
     from kafka_streams_playground_spark.sources.parquet import TABLES
@@ -178,7 +192,8 @@ def main() -> int:
 
     if json_out:
         with open(json_out, "w") as f:
-            json.dump({"sf_dir": sf_dir, "results": results}, f, indent=1)
+            prov = provenance(spark, time.time() - started, len(results) - len(failures), len(failures))
+            json.dump({"sf_dir": sf_dir, "provenance": prov, "results": results}, f, indent=1)
         print(f"wrote {json_out} ({len(results)} queries)")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0

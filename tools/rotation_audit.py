@@ -1,7 +1,7 @@
 """Rotation audit: which queries are stalest under the driver's 50-slot cap.
 
 The driver's correctness harness checks only the FIRST 50 registry entries
-(see plans/__init__.py::DRIVER_PRIORITY); everything else relies on the
+(see plans/registry.py::DRIVER_PRIORITY); everything else relies on the
 committed local replica. This tool reads every CORRECTNESS_r*.json in the
 repo root, computes each registered query's most recent driver round, and
 prints the staleness cohorts the next round's rotation should draw from —
