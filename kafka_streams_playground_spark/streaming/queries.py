@@ -41,10 +41,10 @@ from kafka_streams_playground_spark.streaming.ktable import latest_per_key_strea
 from kafka_streams_playground_spark.streaming.replay import (
     latest_update_snapshot,
     latest_update_state,
-    read_split_stream,
     read_stream_table,
+    replay_segments,
     run_to_completion,
-    write_split_feed,
+    split_segments,
 )
 
 WATERMARK = "24 hours"  # mirrors the reference's default grace (:142)
@@ -64,7 +64,7 @@ def stream_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_stream_table(spark, sf_dir, "events").withWatermark("ts", WATERMARK)
     win = tumbling_count(events, "ts", "10 seconds", F.col("user_id"), out="cnt")
     out = win.select("user_id", F.unix_timestamp("window.start").alias("window_start"), "cnt")
-    return run_to_completion(out, output_mode="update", spark=spark)
+    return run_to_completion(out, output_mode="update")
 
 
 @query(
@@ -94,7 +94,7 @@ def stream_s2(spark: SparkSession, sf_dir: str) -> DataFrame:
         version_col=F.struct("ts", "event_id"),
     )
     out = latest.select("user_id", "event_id", "event_type", "value", "ts")
-    drained = run_to_completion(out, output_mode="update", spark=spark)
+    drained = run_to_completion(out, output_mode="update")
     return latest_update_state(
         drained, "user_id", F.struct("ts", "event_id")
     ).select(
@@ -164,7 +164,7 @@ def stream_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         "discounted_amount",
         F.unix_timestamp("l_shipdate").alias("paid_epoch"),
     )
-    return run_to_completion(out, output_mode="append", spark=spark)
+    return run_to_completion(out, output_mode="append")
 
 
 @query(
@@ -188,7 +188,7 @@ def stream_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_timestamp("o_orderdate").alias("order_epoch"),
         "o_orderpriority",
     )
-    return run_to_completion(out, output_mode="append", spark=spark)
+    return run_to_completion(out, output_mode="append")
 
 
 @query(
@@ -203,7 +203,7 @@ def stream_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     three projected columns)."""
     orders = read_stream_table(spark, sf_dir, "orders")
     out = orders.select("o_orderkey", "o_custkey", "o_totalprice")
-    return run_to_completion(out, output_mode="append", spark=spark)
+    return run_to_completion(out, output_mode="append")
 
 
 @query(
@@ -231,7 +231,7 @@ def stream_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted = joined.groupBy(ops.first_letter_key("c_name").alias("letter")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    drained = run_to_completion(counted, output_mode="update", spark=spark)
+    drained = run_to_completion(counted, output_mode="update")
     # compact the running-count changelog to final state (cnt is strictly
     # monotone per letter; round 13 — the raw drain kept superseded counts
     # whenever a letter updated in more than one micro-batch)
@@ -290,7 +290,6 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     proj = events.select("user_id", "ts", "value")
     drained = _append_session_windows(
-        spark,
         proj,
         "user_id",
         SESSION_GAP_S,
@@ -324,7 +323,7 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     across partitions, the hash set itself is deterministic."""
     docs = read_stream_table(spark, sf_dir, "documents")
     deduped = docs.select(F.md5("text").alias("text_hash")).dropDuplicates(["text_hash"])
-    return run_to_completion(deduped, output_mode="append", spark=spark)
+    return run_to_completion(deduped, output_mode="append")
 
 
 @query(
@@ -348,7 +347,7 @@ def stream_running_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = read_stream_table(spark, sf_dir, "events")
     out = running_count_per_key(events)
-    return run_to_completion(out, output_mode="append", spark=spark)
+    return run_to_completion(out, output_mode="append")
 
 
 @query(
@@ -371,7 +370,7 @@ def stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = win.select(
         F.unix_timestamp("window.start").alias("window_start"), "event_type", "cnt"
     )
-    return run_to_completion(out, output_mode="update", spark=spark)
+    return run_to_completion(out, output_mode="update")
 
 
 @query(
@@ -401,7 +400,7 @@ def stream_topk_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(cents).alias("revenue_cents"))
     )
     out = rev.orderBy(F.col("revenue_cents").desc(), F.col("c_custkey").asc()).limit(10)
-    return run_to_completion(out, output_mode="complete", spark=spark)
+    return run_to_completion(out, output_mode="complete")
 
 
 @query(
@@ -421,7 +420,7 @@ def stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_stream_table(spark, sf_dir, "events")
     from kafka_streams_playground_spark.streaming.stateful import asof_join_per_key
 
-    return run_to_completion(asof_join_per_key(events), output_mode="append", spark=spark)
+    return run_to_completion(asof_join_per_key(events), output_mode="append")
 
 
 @query(
@@ -452,7 +451,7 @@ def stream_s2_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
         version_col=F.struct("ts", "event_id"),
     )
     out = latest.select("user_id", "event_id", "event_type", "value", "ts")
-    drained = run_to_completion(out, output_mode="update", spark=spark)
+    drained = run_to_completion(out, output_mode="update")
     # Compact on the true version (full-microsecond ts, event_id) — the
     # ordering the in-stream max_by state and the oracle use; a
     # second-truncated epoch key could keep a superseded emission (r14,
@@ -495,7 +494,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     deduped = events.dropDuplicatesWithinWatermark(["user_id", "event_type"]).select(
         "user_id", "event_type"
     )
-    return run_to_completion(deduped, output_mode="append", spark=spark)
+    return run_to_completion(deduped, output_mode="append")
 
 
 @query(
@@ -565,7 +564,7 @@ def stream_join_left_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linenumber",
         F.unix_timestamp("l_shipdate").alias("paid_epoch"),
     )
-    return run_to_completion(out, output_mode="append", spark=spark)
+    return run_to_completion(out, output_mode="append")
 
 
 @query(
@@ -660,7 +659,7 @@ def stream_join_full_outer_interval(spark: SparkSession, sf_dir: str) -> DataFra
         "l_linenumber",
         F.unix_timestamp("l_shipdate").alias("paid_epoch"),
     )
-    return run_to_completion(out, output_mode="append", spark=spark)
+    return run_to_completion(out, output_mode="append")
 
 
 @query(
@@ -736,7 +735,7 @@ def stream_q5_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = daily.select(
         F.unix_timestamp("window.start").alias("window_start"), "n_paid", "revenue_cents"
     )
-    return run_to_completion(out, output_mode="append", spark=spark)
+    return run_to_completion(out, output_mode="append")
 
 
 @query(
@@ -834,7 +833,7 @@ def stream_pipeline_quality_filter(spark: SparkSession, sf_dir: str) -> DataFram
         .cast("int")
         .alias("keep"),
     )
-    return run_to_completion(out, output_mode="append", spark=spark)
+    return run_to_completion(out, output_mode="append")
 
 
 @query(
@@ -910,7 +909,7 @@ def stream_domain_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "avg_quality"
         ),
     )
-    drained = run_to_completion(out, output_mode="update", spark=spark)
+    drained = run_to_completion(out, output_mode="update")
     # compact to final state per source (n_docs strictly monotone; round 13)
     return latest_update_state(drained, "source", F.col("n_docs"))
 
@@ -944,7 +943,7 @@ def stream_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length(F.replace(F.col("text"), F.lit(" "), F.lit(""))) / F.size(toks), 4
         ).alias("avg_token_len"),
     )
-    return run_to_completion(out, output_mode="append", spark=spark)
+    return run_to_completion(out, output_mode="append")
 
 
 @query(
@@ -1009,7 +1008,7 @@ def stream_decontaminate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream.mapInPandas(
         keep_clean, "doc_id bigint, lang string, source string, n_tokens bigint"
     )
-    return run_to_completion(out, output_mode="append", spark=spark)
+    return run_to_completion(out, output_mode="append")
 
 
 @query(
@@ -1032,9 +1031,7 @@ def stream_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_streams_playground_spark.streaming.stateful import ewma_per_key
 
     events = read_stream_table(spark, sf_dir, "events")
-    drained = run_to_completion(
-        ewma_per_key(events), output_mode="append", spark=spark
-    )
+    drained = run_to_completion(ewma_per_key(events), output_mode="append")
     return latest_update_state(
         drained, ["user_id", "day_epoch"], F.col("n_seen")
     ).drop("n_seen")
@@ -1059,9 +1056,7 @@ def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_streams_playground_spark.streaming.stateful import funnel_per_key
 
     events = read_stream_table(spark, sf_dir, "events")
-    drained = run_to_completion(
-        funnel_per_key(events), output_mode="append", spark=spark
-    )
+    drained = run_to_completion(funnel_per_key(events), output_mode="append")
     return latest_update_state(drained, "user_id", F.col("n_seen")).drop("n_seen")
 
 
@@ -1099,7 +1094,7 @@ def stream_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least(F.lit(CHUNK_WIN), nt - F.col("s") + 1).cast("bigint").alias("n_tok"),
         F.md5(F.array_join(F.slice(F.col("t"), F.col("s"), CHUNK_WIN), " ")).alias("fp"),
     )
-    return run_to_completion(out, output_mode="append", spark=spark)
+    return run_to_completion(out, output_mode="append")
 
 
 @query(
@@ -1143,7 +1138,7 @@ def stream_events_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = j.filter(dev * dev > 9.0 * (nd * s2d - s1d * s1d)).select(
         "event_id", "event_type", "cents"
     )
-    return run_to_completion(out, output_mode="append", spark=spark)
+    return run_to_completion(out, output_mode="append")
 
 
 @query(
@@ -1195,7 +1190,7 @@ def stream_text_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.size(F.split("line", " ")) >= C4_MIN_WORDS)
         & ~F.contains(ascii_lower("line"), F.lit("javascript"))
     ).select("doc_id", F.col("i").cast("bigint").alias("line_idx"), "line")
-    return run_to_completion(out, output_mode="append", spark=spark)
+    return run_to_completion(out, output_mode="append")
 
 
 @query(
@@ -1237,7 +1232,7 @@ def stream_ts_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inc",
         F.col("cents") * F.col("n") - F.col("s") - F.col("n") * CUSUM_K_CENTS,
     )
-    return run_to_completion(cusum_per_key(j), output_mode="append", spark=spark)
+    return run_to_completion(cusum_per_key(j), output_mode="append")
 
 
 @query(
@@ -1290,9 +1285,7 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("hv"),
     )
-    drained = run_to_completion(
-        kmv_sketch_per_key(stream), output_mode="update", spark=spark
-    )
+    drained = run_to_completion(kmv_sketch_per_key(stream), output_mode="update")
     out = latest_update_state(drained, "event_type", F.col("n_seen")).drop("n_seen")
     est = (
         F.when(F.col("k_n") < KMV_K, F.col("k_n").cast("long"))
@@ -1335,9 +1328,7 @@ def stream_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_stream_table(spark, sf_dir, "embeddings").select(
         F.col("embedding").cast("array<double>").alias("v")
     )
-    drained = run_to_completion(
-        gram_agg(gram_partials(emb)), output_mode="update", spark=spark
-    )
+    drained = run_to_completion(gram_agg(gram_partials(emb)), output_mode="update")
     # update-mode memory sink keeps every emission; the LAST row per (i, j)
     # is the final state — well-founded under multi-batch replay since
     # round 13, when gram_partials started carrying cnt on EVERY row (the
@@ -1392,9 +1383,7 @@ def stream_stats_ols_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = li.join(F.broadcast(sup), li["l_suppkey"] == sup["s_suppkey"]).join(
         F.broadcast(nat), sup["s_nationkey"] == nat["n_nationkey"]
     )
-    drained = run_to_completion(
-        ols_sufficient_stats(pts), output_mode="update", spark=spark
-    )
+    drained = run_to_completion(ols_sufficient_stats(pts), output_mode="update")
     # update-mode memory sink keeps every emission; the LAST row per nation
     # (monotone n) is the final state — exact for the single-file replay
     # and guards a multi-batch one.
@@ -1463,7 +1452,7 @@ def stream_dedup_incremental_new_vs_base(spark: SparkSession, sf_dir: str) -> Da
     scored = verified.filter(jac >= ND.JACCARD_THRESHOLD).select(
         "new_id", "base_id", F.round(jac, 4).alias("jaccard")
     )
-    drained = run_to_completion(scored, output_mode="append", spark=spark)
+    drained = run_to_completion(scored, output_mode="append")
 
     from pyspark.sql import Window as _W
 
@@ -1585,7 +1574,7 @@ def stream_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFram
     out = stream.mapInPandas(
         score_batches, "doc_id bigint, n_tokens bigint, dsir6 bigint, selected int"
     )
-    return run_to_completion(out, output_mode="append", spark=spark)
+    return run_to_completion(out, output_mode="append")
 
 
 @query(
@@ -1610,7 +1599,7 @@ def stream_stats_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFr
         F.floor("value").cast("bigint").alias("bucket")
     )
     h_stream = ev.groupBy("bucket").agg(F.count(F.lit(1)).alias("cnt"))
-    h = run_to_completion(h_stream, output_mode="complete", spark=spark)
+    h = run_to_completion(h_stream, output_mode="complete")
 
     from pyspark.sql import Window as _W
 
@@ -1682,7 +1671,7 @@ def stream_ts_multi_granularity_rollup(spark: SparkSession, sf_dir: str) -> Data
         F.count(F.lit(1)).alias("n_events"),
         F.sum("cents").alias("sum_cents"),
     )
-    return run_to_completion(agg, output_mode="complete", spark=spark)
+    return run_to_completion(agg, output_mode="complete")
 
 
 @query(
@@ -1707,7 +1696,7 @@ def stream_drift_ks_value_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).alias("ca"),
         F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).alias("cb"),
     )
-    g = run_to_completion(grid, output_mode="complete", spark=spark)
+    g = run_to_completion(grid, output_mode="complete")
 
     from pyspark.sql import Window as _W
 
@@ -1790,8 +1779,8 @@ def stream_stats_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFram
     point_stream = o.groupBy().agg(
         F.sum("cents").alias("swc"), F.count(F.lit(1)).alias("sw")
     )
-    reps = run_to_completion(reps_stream, output_mode="complete", spark=spark)
-    point = run_to_completion(point_stream, output_mode="complete", spark=spark)
+    reps = run_to_completion(reps_stream, output_mode="complete")
+    point = run_to_completion(point_stream, output_mode="complete")
 
     from pyspark.sql import Window as _W
 
@@ -1883,7 +1872,7 @@ def stream_curation_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", "doc_id", logit.cast("bigint").alias("logit_e6")
     )
     out = source_cap_per_key(scored)
-    drained = run_to_completion(out, output_mode="update", spark=spark)
+    drained = run_to_completion(out, output_mode="update")
     # keep only each source's LAST kept-set snapshot (n_seen monotone;
     # round 13 — earlier per-batch snapshots otherwise survive the drain)
     return latest_update_snapshot(drained, "source", F.col("n_seen")).drop("n_seen")
@@ -1969,9 +1958,7 @@ def stream_hll_distinct_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("rho"),
         )
     )
-    drained = run_to_completion(
-        hll_sketch_per_key(stream), output_mode="update", spark=spark
-    )
+    drained = run_to_completion(hll_sketch_per_key(stream), output_mode="update")
     # compact to the last emission per type via the operator's monotone
     # n_seen marker (round 13 — superseded register summaries otherwise
     # survive the drain under multi-batch replay)
@@ -2065,7 +2052,6 @@ def stream_ts_rollup_hll_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained = run_to_completion(
         hll_sketch_per_key(stream, key_col="bucket_epoch", key_type="BIGINT"),
         output_mode="update",
-        spark=spark,
     )
     # compact to the last emission per hour bucket (n_seen monotone; a
     # bucket straddling a micro-batch boundary otherwise leaves its
@@ -2106,7 +2092,7 @@ def stream_stats_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFr
         .groupBy("digit")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    drained = run_to_completion(d, output_mode="update", spark=spark)
+    drained = run_to_completion(d, output_mode="update")
     # compact to final state per digit (n strictly monotone; round 13 —
     # the raw drain's superseded counters double-counted in the total)
     counts = latest_update_state(drained, "digit", F.col("n"))
@@ -2292,7 +2278,7 @@ def ivm_delta_fold(spark: SparkSession, a: DataFrame, delta_b: DataFrame) -> Dat
         .groupBy("o_orderstatus", "l_returnflag")
         .agg(F.count(F.lit(1)).alias("n_rows"), F.sum("cents").alias("sum_cents"))
     )
-    drained = run_to_completion(d_view, output_mode="update", spark=spark)
+    drained = run_to_completion(d_view, output_mode="update")
     return latest_update_state(
         drained, ["o_orderstatus", "l_returnflag"], F.col("n_rows")
     )
@@ -2365,7 +2351,6 @@ def stream_retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     dl = run_to_completion(
         tok_stream().groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")),
         output_mode="update",
-        spark=spark,
     )
     tf = run_to_completion(
         tok_stream()
@@ -2373,7 +2358,6 @@ def stream_retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf")),
         output_mode="update",
-        spark=spark,
         # tf self-joins below (df derives from it); the memory-sink view
         # can't dedup its own references, so break lineage. O(matching
         # doc-term pairs) rows — query-term-bounded, not corpus-bounded.
@@ -2432,7 +2416,7 @@ def stream_retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("cosine").desc(), F.col("doc_id").asc())
         .limit(SEM_N)
     )
-    sem0 = run_to_completion(leader, output_mode="complete", spark=spark)
+    sem0 = run_to_completion(leader, output_mode="complete")
     w_sem = _W.orderBy(F.col("cosine").desc(), F.col("doc_id").asc())
     sem = sem0.withColumn("sem_rank", F.row_number().over(w_sem))
 
@@ -2507,9 +2491,7 @@ def stream_sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFr
         .cast("long")
         .alias("clock9"),
     )
-    drained = run_to_completion(
-        weighted_reservoir_per_key(scored), output_mode="update", spark=spark
-    )
+    drained = run_to_completion(weighted_reservoir_per_key(scored), output_mode="update")
     # keep only each stratum's LAST reservoir snapshot (n_seen monotone;
     # round 13 — earlier per-batch snapshots otherwise survive the drain)
     final = latest_update_snapshot(drained, "lang", F.col("n_seen"))
@@ -2565,7 +2547,6 @@ def stream_stats_countmin_user_traffic(spark: SparkSession, sf_dir: str) -> Data
         run_to_completion(
             inc.groupBy("r", "b").agg(F.count(F.lit(1)).alias("sc")),
             output_mode="update",
-            spark=spark,
         ),
         ["r", "b"],
         F.col("sc"),
@@ -2628,7 +2609,6 @@ def stream_privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_completion(
             c.groupBy("nation", "segment", "sens").agg(F.count(F.lit(1)).alias("n")),
             output_mode="update",
-            spark=spark,
         ),
         ["nation", "segment", "sens"],
         F.col("n"),
@@ -2681,9 +2661,7 @@ def stream_stats_source_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFra
         "source",
         F.explode(T.shingle_hashes(T.shingles(T.tokens("text")))).alias("hv"),
     )
-    drained = run_to_completion(
-        kmv_sketch_rows_per_source(stream), output_mode="update", spark=spark
-    )
+    drained = run_to_completion(kmv_sketch_rows_per_source(stream), output_mode="update")
     # keep only each source's LAST sketch snapshot (n_seen monotone;
     # round 13 — earlier per-batch sketch contents otherwise survive the
     # drain and pollute the pairwise union sketches)
@@ -2740,11 +2718,10 @@ def stream_join_interval_overlap_bins(spark: SparkSession, sf_dir: str) -> DataF
         F.col("i_start").alias("b_start"),
         F.col("i_end").alias("b_end"),
     )
-    return _replay_interval_bin_join(spark, sessions, bursts)
+    return _replay_interval_bin_join(sessions, bursts)
 
 
 def _replay_interval_bin_join(
-    spark: SparkSession,
     sessions: DataFrame,
     bursts: DataFrame,
     split_at: dict[str, tuple[int, ...]] | None = None,
@@ -2769,31 +2746,17 @@ def _replay_interval_bin_join(
 
     tmp = tempfile.mkdtemp(prefix="ksp_interval_stream_")
     try:
-        if split_at:
+        def bins(
+            rel: DataFrame, name: str, key: str, start: str, end: str, bcol: str, tcol: str
+        ) -> DataFrame:
             # split-point-adversarial replay (VERDICT r11 item 3): each
             # side carved into start-ordered micro-batch segments at the
             # caller's row indices — the interleaved time-ordered topic
             # delivery contract with batch boundaries placed by the test
-            write_split_feed(
-                sessions, ["s_start", "user_id"], split_at["sessions"],
-                f"{tmp}/sessions.parquet",
+            cuts = split_at[name] if split_at else ()
+            sdf = replay_segments(
+                split_segments(rel, [start, key], cuts), f"{tmp}/{name}"
             )
-            write_split_feed(
-                bursts, ["b_start", "event_type"], split_at["bursts"],
-                f"{tmp}/bursts.parquet",
-            )
-        else:
-            sessions.write.parquet(f"{tmp}/sessions.parquet")
-            bursts.write.parquet(f"{tmp}/bursts.parquet")
-
-        def bins(name: str, start: str, end: str, bcol: str, tcol: str) -> DataFrame:
-            path = f"{tmp}/{name}.parquet"
-            if split_at:
-                schema = spark.read.parquet(f"{path}/seg*").schema
-                sdf = read_split_stream(spark, path, schema)
-            else:
-                schema = spark.read.parquet(path).schema
-                sdf = spark.readStream.schema(schema).parquet(path)
             # the SHARED binning contract — batch and stream stay keyed
             # identically by construction. The promoted event time is
             # (bin + 1) * width, NOT bin * width: bin 0 would land on
@@ -2812,8 +2775,8 @@ def _replay_interval_bin_join(
                 tcol, F.timestamp_seconds((F.col(bcol) + 1) * OVERLAP_BIN_S)
             ).withWatermark(tcol, watermark)
 
-        sb = bins("sessions", "s_start", "s_end", "sbin", "sbin_ts")
-        bb = bins("bursts", "b_start", "b_end", "bbin", "bbin_ts")
+        sb = bins(sessions, "sessions", "user_id", "s_start", "s_end", "sbin", "sbin_ts")
+        bb = bins(bursts, "bursts", "event_type", "b_start", "b_end", "bbin", "bbin_ts")
         joined = sb.join(bb, F.col("sbin_ts") == F.col("bbin_ts")).filter(
             (F.col("s_start") <= F.col("b_end"))
             & (F.col("b_start") <= F.col("s_end"))
@@ -2832,7 +2795,7 @@ def _replay_interval_bin_join(
                 - F.greatest(F.col("s_start"), F.col("b_start"))
             ).alias("overlap_s"),
         )
-        drained = run_to_completion(out, output_mode="append", spark=spark)
+        drained = run_to_completion(out, output_mode="append")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return drained.dropDuplicates(
@@ -2875,7 +2838,7 @@ def _session_window_intervals(
 
     proj = events.select(F.col(key), "ts")
     drained = _append_session_windows(
-        spark, proj, key, gap_s, [F.count(F.lit(1)).alias("n_events")]
+        proj, key, gap_s, [F.count(F.lit(1)).alias("n_events")]
     )
     intervals = drained.select(
         key,
@@ -2887,7 +2850,6 @@ def _session_window_intervals(
 
 
 def _append_session_windows(
-    spark: SparkSession,
     proj: DataFrame,
     key: str,
     gap_s: int,
@@ -2937,24 +2899,17 @@ def _append_session_windows(
             for f in payload:
                 flush = flush.withColumn(f.name, F.lit(None).cast(f.dataType))
             feed = proj.unionByName(flush.select(*proj.columns))
-        if split_at:
-            # split-point-adversarial replay (VERDICT r11 item 3): one
-            # micro-batch per (ts, key)-ordered segment — the time-ordered
-            # topic delivery contract with the batch boundary placed by
-            # the caller (e.g. exactly at a session gap or the sentinel)
-            write_split_feed(feed, ["ts", key], tuple(split_at), tmp)
-            schema = spark.read.parquet(f"{tmp}/seg*").schema
-            sdf = read_split_stream(spark, tmp, schema)
-        else:
-            feed.write.parquet(f"{tmp}/in.parquet")
-            schema = spark.read.parquet(f"{tmp}/in.parquet").schema
-            sdf = spark.readStream.schema(schema).parquet(f"{tmp}/in.parquet")
+        # split-point-adversarial replay (VERDICT r11 item 3): one
+        # micro-batch per (ts, key)-ordered segment — the time-ordered
+        # topic delivery contract with the batch boundary placed by the
+        # caller (e.g. exactly at a session gap or the sentinel)
+        sdf = replay_segments(split_segments(feed, ["ts", key], split_at or ()), tmp)
         sess = (
             sdf.withWatermark("ts", "0 seconds")
             .groupBy(F.col(key), F.session_window("ts", f"{gap_s} seconds"))
             .agg(*aggs)
         )
-        drained = run_to_completion(sess, output_mode="append", spark=spark)
+        drained = run_to_completion(sess, output_mode="append")
         return drained.filter(
             F.unix_timestamp("session_window.start") <= F.lit(mx_epoch)
         )
@@ -3003,7 +2958,7 @@ def stream_session_window_interval_overlap(spark: SparkSession, sf_dir: str) -> 
         F.col("i_start").alias("b_start"),
         F.col("i_end").alias("b_end"),
     )
-    return _replay_interval_bin_join(spark, sessions, bursts)
+    return _replay_interval_bin_join(sessions, bursts)
 
 
 @query(
@@ -3039,7 +2994,7 @@ def stream_embedding_centroid_outliers(spark: SparkSession, sf_dir: str) -> Data
     scored = stream.join(F.broadcast(cent), "label").select(
         "label", "vec_id", dist12(F.col("x6"), F.col("m6")).alias("dist12")
     )
-    drained = run_to_completion(scored, output_mode="append", spark=spark)
+    drained = run_to_completion(scored, output_mode="append")
 
     from pyspark.sql import Window as _W
 
@@ -3083,9 +3038,7 @@ def stream_stats_welch_ttest_halves(spark: SparkSession, sf_dir: str) -> DataFra
         (F.col("event_id") % 2).alias("half"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
     )
-    drained = run_to_completion(
-        welch_sufficient_sums(e), output_mode="update", spark=spark
-    )
+    drained = run_to_completion(welch_sufficient_sums(e), output_mode="update")
     # n0+n1 strictly grows with every emission → max-count row per type
     # is the final state (latest_update_state docstring has the contract)
     return welch_epilogue(
@@ -3120,7 +3073,7 @@ def stream_drift_chi2_event_type_halves(spark: SparkSession, sf_dir: str) -> Dat
         F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).alias("n_a"),
         F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).alias("n_b"),
     )
-    drained = run_to_completion(o, output_mode="update", spark=spark)
+    drained = run_to_completion(o, output_mode="update")
     # n_a+n_b strictly grows with every emission → max-count row per type
     # is the final state (latest_update_state docstring has the contract)
     return chi2_epilogue(
@@ -3157,7 +3110,7 @@ def stream_stats_simpson_user_concentration(
 
     e = read_stream_table(spark, sf_dir, "events").select("event_type", "user_id")
     c = e.groupBy("event_type", "user_id").agg(F.count(F.lit(1)).alias("c"))
-    drained = run_to_completion(c, output_mode="update", spark=spark)
+    drained = run_to_completion(c, output_mode="update")
     final = latest_update_state(
         drained, ["event_type", "user_id"], F.col("c")
     )
@@ -3198,7 +3151,7 @@ def day_grid_reduce(sdf: DataFrame) -> DataFrame:
     g = e.groupBy("event_type", "day").agg(
         F.sum("cents").alias("v"), F.count(F.lit(1)).alias("n_rows")
     )
-    drained = run_to_completion(g, output_mode="update", spark=spark)
+    drained = run_to_completion(g, output_mode="update")
     final = latest_update_state(drained, ["event_type", "day"], F.col("n_rows"))
     return final.select("event_type", "day", "v")
 

@@ -10,6 +10,12 @@ Each fixture table is a single parquet file, so availableNow drains in one
 micro-batch — making update-mode output equal to the complete final state,
 which is what the DuckDB oracle checks. (With Kafka sources the same
 pipelines run continuously; nothing below depends on batch finiteness.)
+
+Any other finite relation replayed as ordered micro-batches goes through
+ONE writer, :func:`replay_segments` (a list of DataFrames → one file and
+one micro-batch each, in list order). :func:`split_segments` carves one
+relation at chosen row indices of a delivery order, and
+:func:`split_late_segments` withholds a late burst into a final segment.
 """
 
 from __future__ import annotations
@@ -43,111 +49,94 @@ def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return nanos_ts_to_micros(sdf, schema)
 
 
-def write_split_feed(
-    df: DataFrame,
-    order_cols: list[str],
-    split_indices: tuple[int, ...],
-    dir_path: str,
-) -> None:
-    """SPLIT-POINT-ADVERSARIAL replay (VERDICT r11 item 3): materialize a
-    finite feed as one parquet file PER micro-batch segment, split at the
-    given row indices of the ``order_cols`` ordering, so
-    ``read_split_stream`` replays segment i as micro-batch i. Lets a test
-    place a micro-batch boundary EXACTLY at a session gap, a watermark
-    edge, an equal-ts tie, or between a window's last event and the flush
-    sentinel — the streaming analogue of tests/test_boundaries.py's value
-    sweeps. ``order_cols`` models the delivery contract (a time-ordered
-    topic when it leads with the event-time column; any other order
-    models out-of-order delivery for watermark-free state).
+def split_segments(
+    df: DataFrame, order_cols: list[str], cuts: tuple[int, ...]
+) -> list[DataFrame]:
+    """Carve a finite feed into micro-batch segments at the given row
+    indices of the ``order_cols`` ordering, for :func:`replay_segments`.
+
+    Lets a test place a micro-batch boundary EXACTLY at a session gap, a
+    watermark edge, an equal-ts tie, or between a window's last event and
+    the flush sentinel — the streaming analogue of
+    tests/test_boundaries.py's value sweeps. ``order_cols`` models the
+    delivery contract (a time-ordered topic when it leads with the
+    event-time column; any other order models out-of-order delivery for
+    watermark-free state). With no cuts the feed is one segment, as is,
+    and no job runs.
 
     Harness-only scale note: segments are carved by a row_number over ONE
     global sort (single-partition window — fine for the fixture-scale
-    sweeps this exists for, never on the production path). Segment files
-    get strictly increasing mtimes so FileStreamSource's oldest-first
-    order replays them deterministically."""
+    sweeps this exists for, never on the production path)."""
     from pyspark.sql import Window as _W
 
+    cuts = sorted(set(cuts))
+    if not cuts:
+        return [df]
     if "_rn" in df.columns:
         # the numbering column below would silently overwrite (and then
         # drop) a real input column of the same name, corrupting the
         # replayed segments (ADVICE r12)
         raise ValueError("input already has a '_rn' column; rename it first")
     n = df.count()
-    cuts = sorted(set(split_indices))
     if any(c <= 0 or c >= n for c in cuts):
         raise ValueError(f"split indices must be interior (0 < i < {n}): {cuts}")
     bounds = [0, *cuts, n]
     rn = F.row_number().over(_W.orderBy(*[F.col(c) for c in order_cols])) - 1
-    # checkpoint the numbering ONCE: the per-segment writes below are
-    # separate executions, and if order_cols has TIES a re-evaluated
-    # row_number could assign tied rows differently per write (a row in
-    # two segments, or in none). Materializing pins one assignment, so
-    # every row lands in exactly one segment whatever the tie-break.
+    # checkpoint the numbering ONCE: each segment is written by its own
+    # execution, and if order_cols has TIES a re-evaluated row_number
+    # could assign tied rows differently per write (a row in two
+    # segments, or in none). Materializing pins one assignment, so every
+    # row lands in exactly one segment whatever the tie-break.
     numbered = df.withColumn("_rn", rn).localCheckpoint(eager=True)
-    for i in range(len(bounds) - 1):
-        seg_dir = os.path.join(dir_path, f"seg{i:04d}")
-        (
-            numbered.filter(
-                (F.col("_rn") >= bounds[i]) & (F.col("_rn") < bounds[i + 1])
-            )
-            .drop("_rn")
-            .coalesce(1)
-            .write.parquet(seg_dir)
-        )
-        # deterministic replay order regardless of write latency: mtimes
-        # strictly increase across segments (FileStreamSource sorts by
-        # mtime, oldest first)
-        for fn in os.listdir(seg_dir):
-            if fn.endswith(".parquet"):
-                os.utime(os.path.join(seg_dir, fn), (1_000_000 + i, 1_000_000 + i))
+    return [
+        numbered.filter((F.col("_rn") >= lo) & (F.col("_rn") < hi)).drop("_rn")
+        for lo, hi in zip(bounds, bounds[1:])
+    ]
 
 
-def write_split_feed_late(
-    df: DataFrame,
-    order_cols: list[str],
-    split_indices: tuple[int, ...],
-    late_pred,
-    dir_path: str,
-) -> None:
-    """LATENESS-ADVERSARIAL replay (VERDICT r13 item 4): like
-    :func:`write_split_feed`, but rows matching ``late_pred`` (a boolean
-    Column) are WITHHELD from their natural position and delivered as one
-    FINAL extra segment — i.e. after every on-time segment has been
-    processed and the watermark has advanced off the on-time maximum.
-    This models a late-data burst: if the late rows' event times sit
-    below ``max(on-time event time) - watermark delay``, every
-    watermarked stateful operator must drop them (the documented Spark
-    contract); if they sit inside the horizon, they must be folded as if
-    on time. ``split_indices`` carve the ON-TIME rows (indices are
-    positions within the on-time subset's ``order_cols`` ordering).
+def split_late_segments(
+    df: DataFrame, order_cols: list[str], cuts: tuple[int, ...], late_pred
+) -> list[DataFrame]:
+    """LATENESS-ADVERSARIAL segments (VERDICT r13 item 4): rows matching
+    ``late_pred`` (a boolean Column) are WITHHELD from their natural
+    position and delivered as one FINAL extra segment — i.e. after every
+    on-time segment has been processed and the watermark has advanced off
+    the on-time maximum. This models a late-data burst: if the late rows'
+    event times sit below ``max(on-time event time) - watermark delay``,
+    every watermarked stateful operator must drop them (the documented
+    Spark contract); if they sit inside the horizon, they must be folded
+    as if on time. ``cuts`` carve the ON-TIME rows (indices are positions
+    within the on-time subset's ``order_cols`` ordering).
 
     Raises if ``late_pred`` selects no rows (the test would silently
     assert nothing) or selects everything (no on-time segment would
     advance the watermark)."""
     on_time = df.filter(~late_pred)
     late = df.filter(late_pred)
-    n_late, n_on = late.count(), on_time.count()
-    if n_late == 0:
+    if late.count() == 0:
         raise ValueError("late_pred selects no rows; the lateness axis is vacuous")
-    if n_on == 0:
+    if on_time.count() == 0:
         raise ValueError("late_pred selects every row; no on-time segment remains")
-    write_split_feed(on_time, order_cols, split_indices, dir_path)
-    nxt = len([d for d in os.listdir(dir_path) if d.startswith("seg")])
-    seg_dir = os.path.join(dir_path, f"seg{nxt:04d}")
-    late.coalesce(1).write.parquet(seg_dir)
-    # continue the strictly-increasing mtime series write_split_feed
-    # started, so FileStreamSource replays the late burst LAST
-    for fn in os.listdir(seg_dir):
-        if fn.endswith(".parquet"):
-            os.utime(os.path.join(seg_dir, fn), (1_000_000 + nxt, 1_000_000 + nxt))
+    return split_segments(on_time, order_cols, cuts) + [late]
 
 
-def read_split_stream(spark: SparkSession, dir_path: str, schema) -> DataFrame:
-    """Streaming reader for a ``write_split_feed`` directory: one segment
-    file per trigger, replayed oldest-mtime-first — micro-batch i holds
-    exactly segment i."""
+def replay_segments(segments: list[DataFrame], dir_path: str) -> DataFrame:
+    """Replay finite relations as ordered micro-batches: segment i is
+    written as one parquet file under ``dir_path/seg<i>`` and arrives as
+    micro-batch i of the returned stream (one file per trigger). Segment
+    files get strictly increasing mtimes, so FileStreamSource's
+    oldest-first order replays them deterministically whatever the write
+    latency. The stream's schema is the first segment's, so no file is
+    read back to infer it."""
+    for i, seg in enumerate(segments):
+        seg_dir = os.path.join(dir_path, f"seg{i:04d}")
+        seg.coalesce(1).write.parquet(seg_dir)
+        for fn in os.listdir(seg_dir):
+            if fn.endswith(".parquet"):
+                os.utime(os.path.join(seg_dir, fn), (1_000_000 + i, 1_000_000 + i))
+    first = segments[0]
     return (
-        spark.readStream.schema(schema)
+        first.sparkSession.readStream.schema(first.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(os.path.join(dir_path, "seg*"))
     )
@@ -194,20 +183,19 @@ def latest_update_snapshot(drained: DataFrame, key, counter) -> DataFrame:
     )
 
 
-def run_to_completion(
-    sdf: DataFrame,
-    output_mode: str = "update",
-    spark: SparkSession | None = None,
-) -> DataFrame:
+def run_to_completion(sdf: DataFrame, output_mode: str = "update") -> DataFrame:
     """Drain a streaming DataFrame with availableNow into a memory sink and
     return the sink contents as a batch DataFrame.
 
     The memory sink is driver-resident — strictly a test/oracle harness; the
     production path is the Kafka/file sink writers. Checkpoints go to a fresh
     temp dir (exactly-once within the run, like the reference's at-least-once
-    default this is not a durability statement, SURVEY §2.9).
+    default this is not a durability statement, SURVEY §2.9). Neither the
+    checkpoint nor the sink's temp view outlives the call: the returned
+    DataFrame holds the sink's plan itself, so repeated drains leak no
+    /tmp directories and no session views.
     """
-    spark = spark or sdf.sparkSession
+    spark = sdf.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="ksp_ckpt_")
     try:
@@ -220,9 +208,9 @@ def run_to_completion(
             .start()
         )
         q.awaitTermination()
+        return spark.table(name)
     finally:
         # The memory-sink result is already materialized; the checkpoint's
-        # state store has no value past the drain — remove it so repeated
-        # test/oracle/bench runs don't leak /tmp directories.
+        # state store has no value past the drain.
+        spark.catalog.dropTempView(name)
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)

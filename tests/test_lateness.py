@@ -6,7 +6,7 @@ watermarked query family under a late burst at fixture scale. These
 tests pin the AXIS ITSELF on tiny synthetic feeds — deterministic,
 seconds-fast, and independent of fixture luck:
 
-- ``write_split_feed_late`` delivers the late burst strictly last and
+- ``split_late_segments`` delivers the late burst strictly last and
   rejects vacuous predicates (all-late / none-late);
 - a watermarked tumbling aggregate DROPS a burst beyond the horizon
   (result == feed-without-burst) and KEEPS one inside it
@@ -31,9 +31,10 @@ from pyspark.sql import functions as F
 pytestmark = pytest.mark.slowaudit
 
 from kafka_streams_playground_spark.streaming.replay import (
-    read_split_stream,
+    replay_segments,
     run_to_completion,
-    write_split_feed_late,
+    split_late_segments,
+    split_segments,
 )
 
 T0 = datetime(2024, 3, 1, 12, 0, 0)
@@ -47,24 +48,24 @@ def _mk_events(spark, rows):
 
 
 def _replay_late(spark, df, cuts, late_pred, tmp_path, name):
-    d = str(tmp_path / name)
-    write_split_feed_late(df, ["ts", "user_id"], cuts, late_pred, d)
-    return read_split_stream(spark, d, df.schema)
+    segments = split_late_segments(df, ["ts", "user_id"], cuts, late_pred)
+    return replay_segments(segments, str(tmp_path / name))
 
 
-def test_write_split_feed_late_rejects_vacuous_predicates(spark, tmp_path):
+def test_split_late_segments_rejects_vacuous_predicates(spark):
     df = _mk_events(spark, [("a", 0, 1), ("a", 10, 2), ("b", 20, 3)])
     with pytest.raises(ValueError, match="no rows"):
-        write_split_feed_late(df, ["ts"], (1,), F.lit(False), str(tmp_path / "x"))
+        split_late_segments(df, ["ts"], (1,), F.lit(False))
     with pytest.raises(ValueError, match="every row"):
-        write_split_feed_late(df, ["ts"], (1,), F.lit(True), str(tmp_path / "y"))
+        split_late_segments(df, ["ts"], (1,), F.lit(True))
 
 
 def test_late_segment_is_delivered_last(spark, tmp_path):
     """The burst rows land in the final segment regardless of event time."""
     df = _mk_events(spark, [("a", 0, 1), ("b", 100, 2), ("c", 200, 3), ("d", 300, 4)])
     d = str(tmp_path / "feed")
-    write_split_feed_late(df, ["ts", "user_id"], (1,), F.col("user_id") == "a", d)
+    late_a = F.col("user_id") == "a"
+    replay_segments(split_late_segments(df, ["ts", "user_id"], (1,), late_a), d)
     import os
 
     segs = sorted(p for p in os.listdir(d) if p.startswith("seg"))
@@ -80,7 +81,7 @@ def _tumbling_counts(spark, sdf, delay, mode="append"):
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.unix_timestamp("window.start").alias("w"), "user_id", "cnt")
     )
-    return run_to_completion(agg, output_mode=mode, spark=spark)
+    return run_to_completion(agg, output_mode=mode)
 
 
 # Spark's late-input filter for windowed aggregations, empirically
@@ -109,11 +110,8 @@ def test_late_burst_beyond_horizon_is_dropped(spark, tmp_path):
     sdf = _replay_late(spark, full, (2,), pred, tmp_path, "drop")
     got = {tuple(r) for r in _tumbling_counts(spark, sdf, "60 seconds").collect()}
     # expected: identical streamed pipeline (same append gating), burst deleted
-    from kafka_streams_playground_spark.streaming.replay import write_split_feed
-
-    d = str(tmp_path / "reduced")
-    write_split_feed(_mk_events(spark, on_time), ["ts", "user_id"], (2,), d)
-    rdf = read_split_stream(spark, d, full.schema)
+    reduced = split_segments(_mk_events(spark, on_time), ["ts", "user_id"], (2,))
+    rdf = replay_segments(reduced, str(tmp_path / "reduced"))
     want = {tuple(r) for r in _tumbling_counts(spark, rdf, "60 seconds").collect()}
     assert got == want
     assert not any(u == "uE" for _, u, _c in got)  # the novel late key vanished
@@ -148,7 +146,7 @@ def _sessionize(spark, sdf, gap_s, max_real_s):
         .groupBy("user_id", F.session_window("ts", f"{gap_s} seconds"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    drained = run_to_completion(sess, output_mode="append", spark=spark)
+    drained = run_to_completion(sess, output_mode="append")
     return drained.filter(
         F.unix_timestamp("session_window.start")
         <= F.unix_timestamp(F.lit(T0 + timedelta(seconds=max_real_s)))
@@ -188,11 +186,8 @@ def test_session_bridge_on_time_merges(spark, tmp_path):
     feed = _mk_events(spark, _SESS_ROWS).unionByName(
         _mk_events(spark, [("u2", _SESS_SENTINEL, -1)])
     )
-    from kafka_streams_playground_spark.streaming.replay import write_split_feed
-
-    d = str(tmp_path / "ord")
-    write_split_feed(feed, ["ts", "user_id"], (1, 2, 3), d)
-    sdf = read_split_stream(spark, d, feed.schema)
+    ordered = split_segments(feed, ["ts", "user_id"], (1, 2, 3))
+    sdf = replay_segments(ordered, str(tmp_path / "ord"))
     real = _sessionize(spark, sdf, _SESS_GAP, 1200)
     assert [int(r["n"]) for r in real.filter(F.col("user_id") == "u1").collect()] == [3]
     assert [int(r["n"]) for r in real.filter(F.col("user_id") == "u2").collect()] == [1]

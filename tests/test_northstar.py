@@ -83,7 +83,7 @@ def test_simhash_identical_and_near(spark):
     assert 0 < ham <= 20
 
 
-def test_langid_multilingual(spark, sf_dir):
+def test_langid_multilingual(spark, sf_dir, tmp_path):
     """The heuristic must work on real multilingual content, not only the
     synthetic soup: CJK → zh, English stopwords → en."""
     from kafka_streams_playground_spark.plans import REGISTRY
@@ -96,10 +96,8 @@ def test_langid_multilingual(spark, sf_dir):
         ],
         "doc_id long, text string, lang string",
     )
-    import tempfile, os
-
-    d = tempfile.mkdtemp()
-    df.write.parquet(os.path.join(d, "documents.parquet"))
+    d = str(tmp_path)
+    df.write.parquet(f"{d}/documents.parquet")
     out = {
         r["doc_id"]: r["lang_pred"] for r in REGISTRY["text_langid"].fn(spark, d).collect()
     }
@@ -759,14 +757,13 @@ def test_bpe_merge_step_removes_top_pair(spark, sf_dir):
         assert p in before or merged_tok in (x, y), p
 
 
-def test_rolling_hash_non_ascii_cross_engine(spark):
+def test_rolling_hash_non_ascii_cross_engine(spark, tmp_path):
     """Pin the fold unit (ADVICE r5): both engines hash Unicode CODE POINTS,
     so zh/fr/emoji text must agree exactly — not just ASCII fixtures. Also
     pins n_bytes as UTF-8 byte length (≠ character count for non-ASCII) and
     the 128-unit prefix boundary (a doc longer than 128 code points whose
     non-ASCII chars straddle the cut)."""
     import os
-    import tempfile
 
     import duckdb
 
@@ -784,7 +781,7 @@ def test_rolling_hash_non_ascii_cross_engine(spark):
         ],
         "doc_id long, text string, lang string",
     )
-    d = tempfile.mkdtemp()
+    d = str(tmp_path)
     df.write.parquet(os.path.join(d, "documents.parquet"))
     con = duckdb.connect()
     con.execute(
@@ -815,14 +812,13 @@ def test_rolling_hash_non_ascii_cross_engine(spark):
     assert got[4]["n_bytes"] == len(long_zh.encode("utf-8"))
 
 
-def test_c4_line_filter_rules(spark):
+def test_c4_line_filter_rules(spark, tmp_path):
     """Each C4 rule on real multi-line text: min-words drops short lines,
     the javascript policy string drops its line, 'lorem ipsum' and curly
     braces kill the whole document, terminal punctuation is counted, kept
     lines re-assemble in original order, and the doc gate needs >=2 kept
     lines."""
     import os
-    import tempfile
 
     from kafka_streams_playground_spark.plans import REGISTRY
 
@@ -839,7 +835,7 @@ def test_c4_line_filter_rules(spark):
         ],
         "doc_id long, text string, lang string",
     )
-    d = tempfile.mkdtemp()
+    d = str(tmp_path)
     df.write.parquet(os.path.join(d, "documents.parquet"))
     out = {
         r["doc_id"]: r

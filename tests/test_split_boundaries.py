@@ -50,10 +50,7 @@ from kafka_streams_playground_spark.streaming.queries import (
     _append_session_windows,
     day_grid_reduce,
 )
-from kafka_streams_playground_spark.streaming.replay import (
-    read_split_stream,
-    write_split_feed,
-)
+from kafka_streams_playground_spark.streaming.replay import replay_segments, split_segments
 
 GAP = 600
 
@@ -92,9 +89,23 @@ SESSION_AGGS = lambda: [  # noqa: E731 — fresh Column objects per drain
 ]
 
 
+def _record_parquet_reads(monkeypatch) -> list:
+    """Record every path a batch ``spark.read.parquet`` call is given."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    paths, real = [], DataFrameReader.parquet
+
+    def parquet(self, *args, **kwargs):
+        paths.extend(args)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    return paths
+
+
 def _drain_sessions(spark, df, split):
     out = _append_session_windows(
-        spark, df, "user_id", GAP, SESSION_AGGS(), split_at=split
+        df, "user_id", GAP, SESSION_AGGS(), split_at=split
     )
     return sorted(
         (r["user_id"], r["min_ts"], r["max_ts"], r["n_events"], r["sum_value"])
@@ -102,7 +113,7 @@ def _drain_sessions(spark, df, split):
     )
 
 
-def test_session_split_sweep_every_boundary(spark):
+def test_session_split_sweep_every_boundary(spark, monkeypatch):
     """EVERY interior split point of the sentinel-bearing feed (5 rows →
     splits at 1..4), plus the all-singleton split (one event per
     micro-batch — the trigger-per-record worst case), must drain to the
@@ -121,9 +132,13 @@ def test_session_split_sweep_every_boundary(spark):
             (2, t2, t2, 1, 10.00),
         ]
     )
+    reads = _record_parquet_reads(monkeypatch)
     assert _drain_sessions(spark, df, None) == want
     for split in [(1,), (2,), (3,), (4,), (1, 2, 3, 4)]:
         assert _drain_sessions(spark, df, split) == want, f"split={split}"
+    # the replay streams with the schema it already holds: no batch read
+    # of its own temp files (each would be one schema-inference job)
+    assert not [p for p in reads if "ksp_session_stream_" in p]
 
 
 def test_session_split_sweep_on_fixture_events(spark, sf_dir):
@@ -143,7 +158,6 @@ def test_session_split_sweep_on_fixture_events(spark, sf_dir):
     n = proj.count()
     quartiles = tuple(sorted({n // 4, n // 2, (3 * n) // 4}))
     drained = _append_session_windows(
-        spark,
         proj,
         "user_id",
         SESSION_GAP_S,
@@ -202,8 +216,7 @@ def test_day_grid_split_sweep_out_of_order(spark, tmp_path):
     sweeps = [(i,) for i in range(1, n)] + [tuple(range(1, n))]
     for k, split in enumerate(sweeps):
         d = str(tmp_path / f"s{k}")
-        write_split_feed(feed, ["arrival"], split, d)
-        sdf = read_split_stream(spark, d, feed.schema).drop("arrival")
+        sdf = replay_segments(split_segments(feed, ["arrival"], split), d).drop("arrival")
         got = sorted(
             (r["event_type"], r["day"], r["v"])
             for r in day_grid_reduce(sdf).collect()
@@ -211,15 +224,15 @@ def test_day_grid_split_sweep_out_of_order(spark, tmp_path):
         assert got == want, f"split={split}"
 
 
-def test_write_split_feed_rejects_non_interior_indices(spark, tmp_path):
+def test_split_segments_rejects_non_interior_indices(spark):
     df = spark.createDataFrame([(1,), (2,)], "x int")
     with pytest.raises(ValueError):
-        write_split_feed(df, ["x"], (0,), str(tmp_path / "a"))
+        split_segments(df, ["x"], (0,))
     with pytest.raises(ValueError):
-        write_split_feed(df, ["x"], (2,), str(tmp_path / "b"))
+        split_segments(df, ["x"], (2,))
 
 
-def test_write_split_feed_segments_replay_in_order(spark, tmp_path):
+def test_replay_segments_replay_in_order(spark, tmp_path):
     """Segment i must arrive as micro-batch i (mtime ordering): a
     changelog-style latest-per-key over a 3-segment feed whose LAST
     segment holds the final value must end on that value."""
@@ -232,12 +245,11 @@ def test_write_split_feed_segments_replay_in_order(spark, tmp_path):
         [("k", "v1", 1), ("k", "v2", 2), ("k", "v3", 3)], "key string, val string, seq int"
     )
     d = str(tmp_path / "ord")
-    write_split_feed(df, ["seq"], (1, 2), d)
-    sdf = read_split_stream(spark, d, df.schema)
+    sdf = replay_segments(split_segments(df, ["seq"], (1, 2)), d)
     g = sdf.groupBy("key").agg(
         F.max_by("val", "seq").alias("val"), F.count(F.lit(1)).alias("n")
     )
-    drained = run_to_completion(g, output_mode="update", spark=spark)
+    drained = run_to_completion(g, output_mode="update")
     assert drained.count() == 3  # one emission per micro-batch: order held
     final = latest_update_state(drained, "key", F.col("n")).collect()
     assert [(r["key"], r["val"]) for r in final] == [("k", "v3")]
@@ -274,12 +286,11 @@ def test_ktable_latest_per_key_split_sweep_out_of_order(spark, tmp_path):
     sweeps = [(i,) for i in range(1, n)] + [tuple(range(1, n))]
     for k, split in enumerate(sweeps):
         d = str(tmp_path / f"kt{k}")
-        write_split_feed(feed, ["arrival"], split, d)
-        sdf = read_split_stream(spark, d, feed.schema).drop("arrival")
+        sdf = replay_segments(split_segments(feed, ["arrival"], split), d).drop("arrival")
         table = latest_per_key_stream(
             sdf, ["key"], ["val", "ts", "seq"], F.struct("ts", "seq")
         )
-        drained = run_to_completion(table, output_mode="update", spark=spark)
+        drained = run_to_completion(table, output_mode="update")
         # state's version only grows, so the max-seq emission per key IS
         # the final state (the latest_update_state contract)
         got = sorted(
@@ -317,10 +328,10 @@ def test_tumbling_append_split_sweep_window_edges(spark, tmp_path):
     sweeps = [(i,) for i in range(1, n)] + [tuple(range(1, n))]
     for k, split in enumerate(sweeps):
         d = str(tmp_path / f"tw{k}")
-        write_split_feed(feed, ["ts", "user_id"], split, d)
-        sdf = read_split_stream(spark, d, feed.schema).withWatermark("ts", "0 seconds")
+        sdf = replay_segments(split_segments(feed, ["ts", "user_id"], split), d)
+        sdf = sdf.withWatermark("ts", "0 seconds")
         counts = tumbling_count(sdf, "ts", "10 seconds", F.col("user_id"))
-        drained = run_to_completion(counts, output_mode="append", spark=spark)
+        drained = run_to_completion(counts, output_mode="append")
         got = sorted(
             (r["window"].start.second + 60 * r["window"].start.minute, r["user_id"], r["cnt"])
             for r in drained.collect()
@@ -329,7 +340,7 @@ def test_tumbling_append_split_sweep_window_edges(spark, tmp_path):
         assert got == want, f"split={split}"
 
 
-def test_stream_stream_bin_join_split_sweep_eviction_edges(spark):
+def test_stream_stream_bin_join_split_sweep_eviction_edges(spark, monkeypatch):
     """The watermarked stream-stream bin join (J3 ext.) under ALIGNED
     ts-ordered splits of BOTH interval feeds with a 0-SECOND watermark —
     the harshest eviction schedule: after each micro-batch the global
@@ -393,6 +404,7 @@ def test_stream_stream_bin_join_split_sweep_eviction_edges(spark):
         .collect()
     )
     assert len(want) >= 3  # edge pairs actually overlap
+    reads = _record_parquet_reads(monkeypatch)
     combos = [
         ((), ()),          # single batch per side — the epoch-0 repro itself
         ((1,), (1,)),      # aligned early split: same-bin halves straddle
@@ -405,7 +417,6 @@ def test_stream_stream_bin_join_split_sweep_eviction_edges(spark):
         got = sorted(
             tuple(r)
             for r in _replay_interval_bin_join(
-                spark,
                 sessions,
                 bursts,
                 split_at={"sessions": s_split, "bursts": b_split},
@@ -413,6 +424,7 @@ def test_stream_stream_bin_join_split_sweep_eviction_edges(spark):
             ).collect()
         )
         assert got == want, f"splits={s_split}/{b_split}"
+    assert not [p for p in reads if "ksp_interval_stream_" in p]
 
 
 def _asof_fixture(spark):
@@ -440,9 +452,8 @@ def _drain_asof(spark, feed, order_cols, split, tmp):
     from kafka_streams_playground_spark.streaming.replay import run_to_completion
     from kafka_streams_playground_spark.streaming.stateful import asof_join_per_key
 
-    write_split_feed(feed, order_cols, split, tmp)
-    sdf = read_split_stream(spark, tmp, feed.schema).drop("arrival")
-    out = run_to_completion(asof_join_per_key(sdf), output_mode="append", spark=spark)
+    sdf = replay_segments(split_segments(feed, order_cols, split), tmp).drop("arrival")
+    out = run_to_completion(asof_join_per_key(sdf), output_mode="append")
     return sorted((r["event_id"], r["last_click_id"]) for r in out.collect())
 
 
@@ -529,9 +540,8 @@ def test_ewma_split_sweep_day_boundaries_and_midday_correction(spark, tmp_path):
 
     def drain(split):
         dirp = str(tmp_path / f"e{split}")
-        write_split_feed(feed, ["ts", "event_id"], split, dirp)
-        sdf = read_split_stream(spark, dirp, feed.schema)
-        return run_to_completion(ewma_per_key(sdf), output_mode="append", spark=spark)
+        sdf = replay_segments(split_segments(feed, ["ts", "event_id"], split), dirp)
+        return run_to_completion(ewma_per_key(sdf), output_mode="append")
 
     # (a) day-boundary split (after row 2) and no split: exact batch rows
     for split in [(), (2,)]:
@@ -579,11 +589,8 @@ def test_running_count_split_sweep_equal_ts_straddle(spark, tmp_path):
     n = len(rows)
     for split in [()] + [(i,) for i in range(1, n)] + [tuple(range(1, n))]:
         dirp = str(tmp_path / f"rc{split}")
-        write_split_feed(feed, ["ts", "event_id"], split, dirp)
-        sdf = read_split_stream(spark, dirp, feed.schema)
-        out = run_to_completion(
-            running_count_per_key(sdf), output_mode="append", spark=spark
-        )
+        sdf = replay_segments(split_segments(feed, ["ts", "event_id"], split), dirp)
+        out = run_to_completion(running_count_per_key(sdf), output_mode="append")
         got = sorted(
             (r["user_id"], r["event_id"], r["running_cnt"]) for r in out.collect()
         )
@@ -626,9 +633,8 @@ def test_funnel_split_sweep_and_equal_ts_boundary(spark, tmp_path):
 
     def drain(order, split, tag):
         d = str(tmp_path / tag)
-        write_split_feed(feed, order, split, d)
-        sdf = read_split_stream(spark, d, feed.schema)
-        out = run_to_completion(funnel_per_key(sdf), output_mode="append", spark=spark)
+        sdf = replay_segments(split_segments(feed, order, split), d)
+        out = run_to_completion(funnel_per_key(sdf), output_mode="append")
         final = latest_update_state(out, "user_id", F.col("reached_stage"))
         return sorted(
             (r["user_id"], r["view_epoch"], r["click_epoch"], r["purchase_epoch"], r["reached_stage"])
@@ -655,7 +661,7 @@ def test_funnel_split_sweep_and_equal_ts_boundary(spark, tmp_path):
     assert got == sorted([(1, e5, None, None, 1), (2, e6, None, None, 1)])
 
 
-def test_write_split_feed_partitions_exactly_under_ties(spark, tmp_path):
+def test_split_segments_partition_exactly_under_ties(spark, tmp_path):
     """order_cols with TIES (here: every row the same key) must still
     partition the feed exactly — each row in exactly one segment — even
     though the per-segment writes are separate executions: the helper
@@ -664,7 +670,7 @@ def test_write_split_feed_partitions_exactly_under_ties(spark, tmp_path):
     rows = [("k", i) for i in range(8)]
     df = spark.createDataFrame(rows, "key string, payload int")
     d = str(tmp_path / "ties")
-    write_split_feed(df, ["key"], (3, 5), d)  # ties on every row
+    replay_segments(split_segments(df, ["key"], (3, 5)), d)  # ties on every row
     back = spark.read.parquet(f"{d}/seg*")
     got = sorted(r["payload"] for r in back.collect())
     assert got == list(range(8))  # no row lost, no row duplicated
@@ -720,8 +726,7 @@ def test_ivm_delta_fold_split_sweep_group_straddles_batches(spark, tmp_path):
     want = sorted([("F", "R", 2, 720), ("O", "N", 5, 430)])
     for i, split in enumerate([(), (1,), (2,), (3,), (1, 2, 3)]):
         d = str(tmp_path / f"ivm{i}")
-        write_split_feed(feed, ["arrival"], split, d)
-        sdf = read_split_stream(spark, d, feed.schema).drop("arrival")
+        sdf = replay_segments(split_segments(feed, ["arrival"], split), d).drop("arrival")
         got = ivm_merge_views(v_old, ivm_delta_fold(spark, a, sdf))
         assert (
             sorted(tuple(r) for r in got.collect()) == want
@@ -729,14 +734,12 @@ def test_ivm_delta_fold_split_sweep_group_straddles_batches(spark, tmp_path):
     # teeth: under split (2,) the straddled group really does emit twice —
     # the hazard the final-state reduce exists to absorb.
     d = str(tmp_path / "ivm_raw")
-    write_split_feed(feed, ["arrival"], (2,), d)
-    sdf = read_split_stream(spark, d, feed.schema).drop("arrival")
+    sdf = replay_segments(split_segments(feed, ["arrival"], (2,)), d).drop("arrival")
     raw = run_to_completion(
         sdf.join(a, sdf.b_orderkey == a.o_orderkey)
         .groupBy("o_orderstatus", "l_returnflag")
         .agg(F.count(F.lit(1)).alias("n_rows"), F.sum("cents").alias("sum_cents")),
         output_mode="update",
-        spark=spark,
     )
     emissions = raw.filter(
         (F.col("o_orderstatus") == "O") & (F.col("l_returnflag") == "N")
@@ -766,9 +769,8 @@ def _drain_upsert_sink(spark, feed, split, tmp, order_cols=("seq", "k")):
         "k string, cents long, seq long",
     )
     writer(base, 10**9)
-    write_split_feed(feed, list(order_cols), split, feed_dir)
     q = (
-        read_split_stream(spark, feed_dir, feed.schema)
+        replay_segments(split_segments(feed, list(order_cols), split), feed_dir)
         # the delivery-order column (if any) is harness-only; the sink
         # sees the CDC triple exactly as stream_cdc_merge_upsert ships it
         .select("k", "cents", "seq")

@@ -4,51 +4,30 @@ behaviors the batch oracle cannot see."""
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pytest
 
 from pyspark.sql import functions as F
 
 from kafka_streams_playground_spark.streaming.ktable import latest_per_key_stream
-from kafka_streams_playground_spark.streaming.replay import run_to_completion
+from kafka_streams_playground_spark.streaming.replay import replay_segments, run_to_completion
 
 
-def _write_batches(spark, rows_per_batch, schema):
-    """Write each batch as its own parquet file so maxFilesPerTrigger=1
-    replays them as separate micro-batches in file order."""
-    d = tempfile.mkdtemp(prefix="ksp_stream_src_")
-    for i, rows in enumerate(rows_per_batch):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            os.path.join(d, f"b{i}")
-        )
-    return [os.path.join(d, f"b{i}") for i in range(len(rows_per_batch))]
-
-
-def test_ktable_state_across_microbatches(spark):
+def test_ktable_state_across_microbatches(spark, tmp_path):
     """latest_per_key_stream must carry keyed state across micro-batches and
     emit a changelog row per update (KTable semantics, KafkaStreamsApp.scala
     :156-157 + toStream :150)."""
     schema = "user string, val string, version int"
-    paths = _write_batches(
-        spark,
-        [
-            [("u1", "v1", 1), ("u2", "x1", 1)],
-            [("u1", "v2", 2)],  # update for u1 arrives in a later batch
-        ],
-        schema,
-    )
-    src_dir = os.path.dirname(paths[0])
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(src_dir, "b*"))
-    )
+    batches = [
+        [("u1", "v1", 1), ("u2", "x1", 1)],
+        [("u1", "v2", 2)],  # update for u1 arrives in a later batch
+    ]
+    sdf = replay_segments([spark.createDataFrame(b, schema) for b in batches], str(tmp_path))
     latest = latest_per_key_stream(
         sdf, keys=["user"], value_cols=["val"], version_col=F.col("version")
     )
-    out = run_to_completion(latest, output_mode="update", spark=spark)
+    out = run_to_completion(latest, output_mode="update")
+    # the drain leaves no memory-sink view behind, and its result still collects
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")]
     rows = [(r["user"], r["val"]) for r in out.collect()]
     # changelog: u1→v1 and u2→x1 from batch 1, then the u1→v2 update
     assert ("u1", "v2") in rows and ("u2", "x1") in rows
@@ -60,7 +39,7 @@ def test_ktable_state_across_microbatches(spark):
 
 
 @pytest.mark.slowaudit  # engine-semantics probe (20-50 s), opt-in (pytest.ini)
-def test_watermark_finalizes_windows_exactly_once(spark):
+def test_watermark_finalizes_windows_exactly_once(spark, tmp_path):
     """Append-mode windowed agg: once the watermark finalizes a window it is
     emitted exactly once, and later-arriving rows for it are dropped, not
     re-emitted — the documented semantic delta vs the reference's 24 h grace
@@ -70,26 +49,19 @@ def test_watermark_finalizes_windows_exactly_once(spark):
     from datetime import datetime
 
     schema = "user string, ts timestamp"
-    paths = _write_batches(
-        spark,
-        [
-            [("u1", datetime(2024, 1, 1, 0, 0, 5))],
-            [("u1", datetime(2024, 1, 1, 2, 0, 0))],  # advances watermark far past w1
-            [("u1", datetime(2024, 1, 1, 2, 0, 1))],  # watermark now committed at ~01:50
-            [("u1", datetime(2024, 1, 1, 0, 0, 7))],  # very late → must be dropped
-        ],
-        schema,
+    batches = [
+        [("u1", datetime(2024, 1, 1, 0, 0, 5))],
+        [("u1", datetime(2024, 1, 1, 2, 0, 0))],  # advances watermark far past w1
+        [("u1", datetime(2024, 1, 1, 2, 0, 1))],  # watermark now committed at ~01:50
+        [("u1", datetime(2024, 1, 1, 0, 0, 7))],  # very late → must be dropped
+    ]
+    sdf = replay_segments([spark.createDataFrame(b, schema) for b in batches], str(tmp_path))
+    win = (
+        sdf.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "10 seconds"), "user")
+        .count()
     )
-    src_dir = os.path.dirname(paths[0])
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(os.path.join(src_dir, "b*"))
-        .withWatermark("ts", "10 minutes")
-    )
-    win = sdf.groupBy(F.window("ts", "10 seconds"), "user").count()
-    out = run_to_completion(win, output_mode="append", spark=spark)
+    out = run_to_completion(win, output_mode="append")
     rows = [(r["window"]["start"].isoformat(), r["count"]) for r in out.collect()]
     first_window = [c for s, c in rows if s == "2024-01-01T00:00:00"]
     # finalized exactly once, with only the pre-finalization row
@@ -108,7 +80,7 @@ def test_streaming_matches_batch_q4(spark, sf_dir):
     assert batch == stream
 
 
-def test_running_count_state_across_microbatches(spark):
+def test_running_count_state_across_microbatches(spark, tmp_path):
     """The custom stateful operator (applyInPandasWithState) must carry its
     per-key counter across micro-batches — the per-record changelog cadence
     of the reference's fold (KafkaStreamsApp.scala:146-152)."""
@@ -118,27 +90,18 @@ def test_running_count_state_across_microbatches(spark):
 
     schema = "event_id long, ts timestamp, user_id long"
     t = datetime(2024, 1, 1)
-    paths = _write_batches(
-        spark,
-        [
-            [(1, t, 7), (2, t, 8)],
-            [(3, t, 7), (4, t, 7)],  # u7's counter must resume at 2
-        ],
-        schema,
-    )
-    src_dir = os.path.dirname(paths[0])
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(src_dir, "b*"))
-    )
-    out = run_to_completion(running_count_per_key(sdf), output_mode="append", spark=spark)
+    batches = [
+        [(1, t, 7), (2, t, 8)],
+        [(3, t, 7), (4, t, 7)],  # u7's counter must resume at 2
+    ]
+    sdf = replay_segments([spark.createDataFrame(b, schema) for b in batches], str(tmp_path))
+    out = run_to_completion(running_count_per_key(sdf), output_mode="append")
     got = {r["event_id"]: r["running_cnt"] for r in out.collect()}
     assert got == {1: 1, 2: 1, 3: 2, 4: 3}
 
 
 @pytest.mark.slowaudit  # engine-semantics probe (20-50 s), opt-in (pytest.ini)
-def test_stream_stream_left_outer_join_emits_unmatched(spark):
+def test_stream_stream_left_outer_join_emits_unmatched(spark, tmp_path):
     """Watermarked stream-stream LEFT OUTER join: matched rows emit
     immediately; an unmatched left row is held in state and emitted with
     null right columns only once the watermark passes its join horizon —
@@ -150,38 +113,24 @@ def test_stream_stream_left_outer_join_emits_unmatched(spark):
     t0 = datetime(2024, 1, 1, 0, 0, 0)
     # Both sides must advance: state eviction uses the GLOBAL watermark
     # (min over all inputs), so far-future rows ride both streams.
-    ldir = _write_batches(
-        spark,
-        [
-            [("o1", t0), ("o2", t0)],
-            [("o_late1", datetime(2024, 1, 1, 3, 0, 0))],
-            [("o_late2", datetime(2024, 1, 1, 6, 0, 0))],
-        ],
-        lschema,
-    )
-    rdir = _write_batches(
-        spark,
-        [
-            [("p1", "o1", datetime(2024, 1, 1, 0, 1, 0))],
-            # far-future payment rows advance the right watermark so o2's
-            # horizon (lts + 5 min) is passed and the null-match emits
-            [("px", "zz", datetime(2024, 1, 1, 3, 0, 0))],
-            [("py", "zz", datetime(2024, 1, 1, 6, 0, 0))],
-        ],
-        rschema,
-    )
-    left = (
-        spark.readStream.schema(lschema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(os.path.dirname(ldir[0]), "b*"))
-        .withWatermark("lts", "0 seconds")
-    )
-    right = (
-        spark.readStream.schema(rschema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(os.path.dirname(rdir[0]), "b*"))
-        .withWatermark("rts", "0 seconds")
-    )
+    left_rows = [
+        [("o1", t0), ("o2", t0)],
+        [("o_late1", datetime(2024, 1, 1, 3, 0, 0))],
+        [("o_late2", datetime(2024, 1, 1, 6, 0, 0))],
+    ]
+    right_rows = [
+        [("p1", "o1", datetime(2024, 1, 1, 0, 1, 0))],
+        # far-future payment rows advance the right watermark so o2's
+        # horizon (lts + 5 min) is passed and the null-match emits
+        [("px", "zz", datetime(2024, 1, 1, 3, 0, 0))],
+        [("py", "zz", datetime(2024, 1, 1, 6, 0, 0))],
+    ]
+    left = replay_segments(
+        [spark.createDataFrame(b, lschema) for b in left_rows], str(tmp_path / "l")
+    ).withWatermark("lts", "0 seconds")
+    right = replay_segments(
+        [spark.createDataFrame(b, rschema) for b in right_rows], str(tmp_path / "r")
+    ).withWatermark("rts", "0 seconds")
     joined = left.join(
         right,
         F.expr(
@@ -189,13 +138,13 @@ def test_stream_stream_left_outer_join_emits_unmatched(spark):
         ),
         "leftOuter",
     )
-    out = run_to_completion(joined, output_mode="append", spark=spark)
+    out = run_to_completion(joined, output_mode="append")
     rows = {r["order_id"]: r["pay_id"] for r in out.collect()}
     assert rows.get("o1") == "p1"          # matched within the window
     assert "o2" in rows and rows["o2"] is None  # evicted → emitted with nulls
 
 
-def test_dedup_within_watermark_bounds_state(spark):
+def test_dedup_within_watermark_bounds_state(spark, tmp_path):
     """``dropDuplicatesWithinWatermark``: duplicates arriving inside the
     watermark horizon are suppressed across micro-batches, while the state
     store holds only in-horizon keys (the unbounded-corpus form of
@@ -206,28 +155,19 @@ def test_dedup_within_watermark_bounds_state(spark):
 
     schema = "k string, ts timestamp"
     t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    paths = _write_batches(
-        spark,
-        [
-            [("a", t0), ("b", t0 + dt.timedelta(seconds=5))],
-            # duplicate 'a' within the 10 min horizon + one new key
-            [("a", t0 + dt.timedelta(seconds=30)), ("c", t0 + dt.timedelta(seconds=40))],
-        ],
-        schema,
-    )
-    src_dir = os.path.dirname(paths[0])
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(src_dir, "b*"))
-    )
+    batches = [
+        [("a", t0), ("b", t0 + dt.timedelta(seconds=5))],
+        # duplicate 'a' within the 10 min horizon + one new key
+        [("a", t0 + dt.timedelta(seconds=30)), ("c", t0 + dt.timedelta(seconds=40))],
+    ]
+    sdf = replay_segments([spark.createDataFrame(b, schema) for b in batches], str(tmp_path))
     deduped = sdf.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(["k"])
-    out = run_to_completion(deduped, output_mode="append", spark=spark)
+    out = run_to_completion(deduped, output_mode="append")
     keys = sorted(r["k"] for r in out.collect())
     assert keys == ["a", "b", "c"]
 
 
-def test_asof_state_across_microbatches(spark):
+def test_asof_state_across_microbatches(spark, tmp_path):
     """The streaming as-of join must carry the last-click state across
     micro-batches: a purchase in batch 2 must see the click from batch 1,
     and a newer batch-2 click must supersede it for later purchases."""
@@ -241,25 +181,16 @@ def test_asof_state_across_microbatches(spark):
     def at(s):
         return datetime(2024, 1, 1, 0, 0, s)
 
-    paths = _write_batches(
-        spark,
+    batches = [
+        [(1, at(0), 7, "click"), (2, at(5), 8, "purchase")],
         [
-            [(1, at(0), 7, "click"), (2, at(5), 8, "purchase")],
-            [
-                (3, at(10), 7, "purchase"),  # sees click 1 from batch 1
-                (4, at(20), 7, "click"),
-                (5, at(30), 7, "purchase"),  # sees click 4 from same batch
-            ],
+            (3, at(10), 7, "purchase"),  # sees click 1 from batch 1
+            (4, at(20), 7, "click"),
+            (5, at(30), 7, "purchase"),  # sees click 4 from same batch
         ],
-        schema,
-    )
-    src_dir = os.path.dirname(paths[0])
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(src_dir, "b*"))
-    )
-    out = run_to_completion(asof_join_per_key(sdf), output_mode="append", spark=spark)
+    ]
+    sdf = replay_segments([spark.createDataFrame(b, schema) for b in batches], str(tmp_path))
+    out = run_to_completion(asof_join_per_key(sdf), output_mode="append")
     got = {r["event_id"]: (r["last_click_id"], r["last_click_epoch"]) for r in out.collect()}
     t0 = int(at(0).timestamp())
     t20 = int(at(20).timestamp())
@@ -268,7 +199,7 @@ def test_asof_state_across_microbatches(spark):
     assert got[5] == (4, t20)      # newer click supersedes
 
 
-def test_ewma_state_across_microbatches(spark):
+def test_ewma_state_across_microbatches(spark, tmp_path):
     """The streaming EWMA must carry the last-8-days state across
     micro-batches: a day arriving in batch 2 decays the days emitted from
     batch 1 (taps 2^7, 2^6, ...), and a same-day continuation folds into
@@ -282,24 +213,15 @@ def test_ewma_state_across_microbatches(spark):
     def day(n):  # n days after epoch-ish anchor, at noon
         return datetime(2024, 1, 1 + n, 12, 0)
 
-    paths = _write_batches(
-        spark,
+    batches = [
+        [(1, day(0), 7, "purchase", 1.0), (2, day(1), 7, "purchase", 2.0)],
         [
-            [(1, day(0), 7, "purchase", 1.0), (2, day(1), 7, "purchase", 2.0)],
-            [
-                (3, day(1), 7, "purchase", 0.5),   # same-day continuation of day 1
-                (4, day(2), 7, "purchase", 4.0),   # new day: decays days 0 and 1
-            ],
+            (3, day(1), 7, "purchase", 0.5),   # same-day continuation of day 1
+            (4, day(2), 7, "purchase", 4.0),   # new day: decays days 0 and 1
         ],
-        schema,
-    )
-    src_dir = os.path.dirname(paths[0])
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(src_dir, "b*"))
-    )
-    out = run_to_completion(ewma_per_key(sdf), output_mode="append", spark=spark)
+    ]
+    sdf = replay_segments([spark.createDataFrame(b, schema) for b in batches], str(tmp_path))
+    out = run_to_completion(ewma_per_key(sdf), output_mode="append")
     rows = sorted(out.collect(), key=lambda r: (r["day_epoch"], r["ewma_cents_q8"]))
     # batch 1: day0 = 100c -> 100*128; day1 = 200c -> 200*128 + 100*64
     # batch 2 re-emits day1 folded to 250c, then day2 = 400c over (100, 250, 400)
@@ -311,7 +233,7 @@ def test_ewma_state_across_microbatches(spark):
 
 
 @pytest.mark.slowaudit  # engine-semantics probe (20-50 s), opt-in (pytest.ini)
-def test_stream_stream_full_outer_join_emits_both_sides(spark):
+def test_stream_stream_full_outer_join_emits_both_sides(spark, tmp_path):
     """Watermarked stream-stream FULL OUTER join (the remaining member of
     the §2.3 outer-join matrix; interval_join exposes it via how=
     "fullOuter"): matched rows emit immediately; an unmatched LEFT row
@@ -321,44 +243,29 @@ def test_stream_stream_full_outer_join_emits_both_sides(spark):
     rows that can never match any key may bypass state entirely — so this
     unit pins the guaranteed outcomes, not an instant-exact oracle; the
     left-outer twin carries the value-exact eviction oracle.)"""
-    import os
     from datetime import datetime
 
     lschema = "order_id string, lts timestamp"
     rschema = "pay_id string, order_ref string, rts timestamp"
     t0 = datetime(2024, 1, 1, 0, 0, 0)
-    ldir = _write_batches(
-        spark,
-        [
-            [("o1", t0), ("o2", t0)],
-            [("o_late1", datetime(2024, 1, 1, 3, 0, 0))],
-            [("o_late2", datetime(2024, 1, 1, 6, 0, 0))],
-        ],
-        lschema,
-    )
-    rdir = _write_batches(
-        spark,
-        [
-            # p1 matches o1; p_orphan references a key with no left row
-            [("p1", "o1", datetime(2024, 1, 1, 0, 1, 0)),
-             ("p_orphan", "nope", datetime(2024, 1, 1, 0, 1, 0))],
-            [("px", "zz", datetime(2024, 1, 1, 3, 0, 0))],
-            [("py", "zz", datetime(2024, 1, 1, 6, 0, 0))],
-        ],
-        rschema,
-    )
-    left = (
-        spark.readStream.schema(lschema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(os.path.dirname(ldir[0]), "b*"))
-        .withWatermark("lts", "0 seconds")
-    )
-    right = (
-        spark.readStream.schema(rschema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(os.path.dirname(rdir[0]), "b*"))
-        .withWatermark("rts", "0 seconds")
-    )
+    left_rows = [
+        [("o1", t0), ("o2", t0)],
+        [("o_late1", datetime(2024, 1, 1, 3, 0, 0))],
+        [("o_late2", datetime(2024, 1, 1, 6, 0, 0))],
+    ]
+    right_rows = [
+        # p1 matches o1; p_orphan references a key with no left row
+        [("p1", "o1", datetime(2024, 1, 1, 0, 1, 0)),
+         ("p_orphan", "nope", datetime(2024, 1, 1, 0, 1, 0))],
+        [("px", "zz", datetime(2024, 1, 1, 3, 0, 0))],
+        [("py", "zz", datetime(2024, 1, 1, 6, 0, 0))],
+    ]
+    left = replay_segments(
+        [spark.createDataFrame(b, lschema) for b in left_rows], str(tmp_path / "l")
+    ).withWatermark("lts", "0 seconds")
+    right = replay_segments(
+        [spark.createDataFrame(b, rschema) for b in right_rows], str(tmp_path / "r")
+    ).withWatermark("rts", "0 seconds")
     joined = left.join(
         right,
         F.expr(
@@ -366,7 +273,7 @@ def test_stream_stream_full_outer_join_emits_both_sides(spark):
         ),
         "fullOuter",
     )
-    out = run_to_completion(joined, output_mode="append", spark=spark)
+    out = run_to_completion(joined, output_mode="append")
     rows = out.collect()
     by_order = {r["order_id"]: r for r in rows if r["order_id"] is not None}
     right_padded = {r["pay_id"] for r in rows if r["order_id"] is None}
@@ -377,14 +284,13 @@ def test_stream_stream_full_outer_join_emits_both_sides(spark):
     assert "p1" not in right_padded
 
 
-def test_cusum_state_across_microbatches(spark):
+def test_cusum_state_across_microbatches(spark, tmp_path):
     """The streaming CUSUM must carry the chart statistic across
     micro-batches: the vectorized prefix-identity fold composed over
     batch boundaries must equal the plain sequential recurrence
     s_t = max(0, s_{t-1} + inc_t) over the full event sequence —
     including a boundary where s is strictly positive (the carry case)
     and a mid-sequence reset to 0."""
-    import os
     from datetime import datetime, timedelta
 
     from kafka_streams_playground_spark.streaming.stateful import cusum_per_key
@@ -402,13 +308,9 @@ def test_cusum_state_across_microbatches(spark):
         (i + 1, "t", t0 + timedelta(seconds=i), 100 + i, 1, inc)
         for i, inc in enumerate(incs)
     ]
-    paths = _write_batches(spark, [rows[:4], rows[4:]], schema)
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(os.path.dirname(paths[0]), "b*"))
-    )
-    out = run_to_completion(cusum_per_key(sdf), output_mode="append", spark=spark)
+    batches = [rows[:4], rows[4:]]
+    sdf = replay_segments([spark.createDataFrame(b, schema) for b in batches], str(tmp_path))
+    out = run_to_completion(cusum_per_key(sdf), output_mode="append")
     got = {r["event_id"]: r["cusum_xn"] for r in out.collect()}
     s, want = 0, {}
     for i, inc in enumerate(incs):
@@ -420,12 +322,11 @@ def test_cusum_state_across_microbatches(spark):
     assert all(a == int(want[e] > CUSUM_H_CENTS) for e, a in alarms.items())
 
 
-def test_kmv_sketch_state_across_microbatches(spark):
+def test_kmv_sketch_state_across_microbatches(spark, tmp_path):
     """The streaming KMV state must fold associatively across
     micro-batches: after replaying hashes split over three batches (with
     cross-batch duplicates), the final emission per key equals the
     bottom-K of the full distinct union."""
-    import os
 
     from kafka_streams_playground_spark.plans.relational import KMV_K
     from kafka_streams_playground_spark.streaming.stateful import kmv_sketch_per_key
@@ -434,15 +335,9 @@ def test_kmv_sketch_state_across_microbatches(spark):
     b1 = [("a", h) for h in (5, 3, 9, 3)] + [("b", 100)]
     b2 = [("a", h) for h in (1, 9, 7)]          # 9 duplicates batch 1
     b3 = [("a", 2), ("b", 50), ("b", 100)]      # 100 duplicates batch 1
-    paths = _write_batches(spark, [b1, b2, b3], schema)
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(os.path.dirname(paths[0]), "b*"))
-    )
-    out = run_to_completion(
-        kmv_sketch_per_key(sdf), output_mode="update", spark=spark
-    )
+    batches = [b1, b2, b3]
+    sdf = replay_segments([spark.createDataFrame(b, schema) for b in batches], str(tmp_path))
+    out = run_to_completion(kmv_sketch_per_key(sdf), output_mode="update")
     rows = out.collect()
     # update mode emits once per key per batch; the LAST row per key is
     # the final state (rows arrive in batch order within the sink)
@@ -455,7 +350,7 @@ def test_kmv_sketch_state_across_microbatches(spark):
     assert final["b"] == (len(b_union), b_union[-1])
 
 
-def test_ols_running_fold_across_microbatches_equals_batch(spark):
+def test_ols_running_fold_across_microbatches_equals_batch(spark, tmp_path):
     """stream_stats_ols_by_nation's mergeability claim, pinned for real:
     the running sufficient-statistics aggregate folded across SEPARATE
     micro-batches, drained and assembled from the last emission per group,
@@ -469,8 +364,7 @@ def test_ols_running_fold_across_microbatches_equals_batch(spark):
     schema = "n_name string, xr long, yr long"
     b1 = [("A", 1, 120), ("A", 2, 230), ("B", 5, 400)]
     b2 = [("A", 3, 290), ("B", 7, 660), ("B", 2, 180), ("A", 1, 130)]
-    paths = _write_batches(spark, [b1, b2], schema)
-    src_dir = os.path.dirname(paths[0])
+    sdf = replay_segments([spark.createDataFrame(b, schema) for b in (b1, b2)], str(tmp_path))
 
     def pts(df):
         return df.select(
@@ -479,14 +373,7 @@ def test_ols_running_fold_across_microbatches_equals_batch(spark):
             F.col("yr").cast("decimal(38,0)").alias("y"),
         )
 
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(src_dir, "b*"))
-    )
-    drained = run_to_completion(
-        ols_sufficient_stats(pts(sdf)), output_mode="update", spark=spark
-    )
+    drained = run_to_completion(ols_sufficient_stats(pts(sdf)), output_mode="update")
     # at least one group must have emitted in BOTH micro-batches, or the
     # test isn't exercising cross-batch state at all
     assert drained.count() > drained.select("n_name").distinct().count()
@@ -814,7 +701,7 @@ def test_stream_rrf_fusion_matches_batch(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_weighted_reservoir_state_across_microbatches(spark):
+def test_weighted_reservoir_state_across_microbatches(spark, tmp_path):
     """The reservoir must MERGE across micro-batches (top-k of state ∪
     batch): replay two batches whose union's top-k differs from either
     batch's own, and check the drained final emission equals the top-k
@@ -833,13 +720,8 @@ def test_weighted_reservoir_state_across_microbatches(spark):
 
     schema = "doc_id long, lang string, n_chars long"
     rows = [(i, "xx", 50 + 7 * (i % 9)) for i in range(60)]
-    paths = _write_batches(spark, [rows[:30], rows[30:]], schema)
-    src_dir = os.path.dirname(paths[0])
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(src_dir, "b*"))
-    )
+    batches = [rows[:30], rows[30:]]
+    sdf = replay_segments([spark.createDataFrame(b, schema) for b in batches], str(tmp_path))
     h = F.conv(
         F.substring(F.md5(F.concat(F.lit("aes:"), F.col("doc_id").cast("string"))), 1, 8),
         16,
@@ -853,9 +735,7 @@ def test_weighted_reservoir_state_across_microbatches(spark):
         .cast("long")
         .alias("clock9"),
     )
-    out = run_to_completion(
-        weighted_reservoir_per_key(scored), output_mode="update", spark=spark
-    )
+    out = run_to_completion(weighted_reservoir_per_key(scored), output_mode="update")
     # final state = last emission per (lang, rank)
     final = {}
     for r in out.collect():
@@ -907,7 +787,7 @@ def test_stream_privacy_audit_matches_batch(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_stream_source_overlap_sketch_merges_across_batches(spark):
+def test_stream_source_overlap_sketch_merges_across_batches(spark, tmp_path):
     """kmv_sketch_rows_per_source: the keyed bottom-K state folded over TWO
     micro-batches must equal the bottom-K of the union (associativity),
     and the final emission per source is exactly that sketch."""
@@ -927,16 +807,9 @@ def test_stream_source_overlap_sketch_merges_across_batches(spark):
     # 300 + 300 hashes per source (with overlap) → union > K = 256
     b1 = [("sA", hv(i)) for i in range(300)] + [("sB", hv(i)) for i in range(200, 500)]
     b2 = [("sA", hv(i)) for i in range(150, 450)] + [("sB", hv(i)) for i in range(400, 700)]
-    paths = _write_batches(spark, [b1, b2], schema)
-    src_dir = os.path.dirname(paths[0])
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(src_dir, "b*"))
-    )
-    out = run_to_completion(
-        kmv_sketch_rows_per_source(sdf), output_mode="update", spark=spark
-    )
+    batches = [b1, b2]
+    sdf = replay_segments([spark.createDataFrame(b, schema) for b in batches], str(tmp_path))
+    out = run_to_completion(kmv_sketch_rows_per_source(sdf), output_mode="update")
     # update mode re-emits the full sketch per batch; keep the LAST
     # emission per source = the union sketch. Dedup via set-of-pairs per
     # source after filtering to the final (largest) emission set: the
@@ -1006,7 +879,7 @@ def test_stream_welch_matches_batch(spark, sf_dir):
 
 
 @pytest.mark.slowaudit  # engine-semantics probe (20-50 s), opt-in (pytest.ini)
-def test_stream_interval_join_state_across_microbatches(spark):
+def test_stream_interval_join_state_across_microbatches(spark, tmp_path):
     """The bin-keyed stream-stream interval join must pair intervals that
     arrive in DIFFERENT micro-batches on the two sides — the keyed join
     state carries across batches (single-batch drain equality cannot see
@@ -1020,22 +893,12 @@ def test_stream_interval_join_state_across_microbatches(spark):
     # INITIAL watermark (0) before the other side's batch arrives — the
     # eviction contract, not a bug (a row for a watermark-passed bin would
     # itself be too late to join).
-    s_paths = _write_batches(
-        spark,
-        [[(1, 1, 200000, 207000)], [(2, 1, 250000, 260000)]],
-        s_schema,
-    )
-    b_paths = _write_batches(
-        spark,
-        [[("x", 1, 255000, 258000)], [("y", 1, 201000, 203000)]],
-        b_schema,
-    )
+    s_batches = [[(1, 1, 200000, 207000)], [(2, 1, 250000, 260000)]]
+    b_batches = [[("x", 1, 255000, 258000)], [("y", 1, 201000, 203000)]]
 
-    def bins(paths, schema, start, end, bcol, tcol):
-        sdf = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(os.path.join(os.path.dirname(paths[0]), "b*"))
+    def bins(batches, schema, start, end, bcol, tcol):
+        sdf = replay_segments(
+            [spark.createDataFrame(b, schema) for b in batches], str(tmp_path / bcol)
         )
         return sdf.select(
             "*",
@@ -1049,22 +912,21 @@ def test_stream_interval_join_state_across_microbatches(spark):
             tcol, F.timestamp_seconds(F.col(bcol) * OVERLAP_BIN_S)
         ).withWatermark(tcol, "24 hours")
 
-    sb = bins(s_paths, s_schema, "s_start", "s_end", "sbin", "sbin_ts")
-    bb = bins(b_paths, b_schema, "b_start", "b_end", "bbin", "bbin_ts")
+    sb = bins(s_batches, s_schema, "s_start", "s_end", "sbin", "sbin_ts")
+    bb = bins(b_batches, b_schema, "b_start", "b_end", "bbin", "bbin_ts")
     joined = sb.join(bb, F.col("sbin_ts") == F.col("bbin_ts")).filter(
         (F.col("s_start") <= F.col("b_end")) & (F.col("b_start") <= F.col("s_end"))
     )
     out = run_to_completion(
         joined.select("user_id", "session_no", "event_type", "burst_no"),
         output_mode="append",
-        spark=spark,
     )
     pairs = {tuple(r) for r in out.collect()}
     # session from batch 1 x burst from batch 2, and vice versa
     assert pairs == {(1, 1, "y", 1), (2, 1, "x", 1)}
 
 
-def test_stream_welch_sums_accumulate_across_microbatches(spark):
+def test_stream_welch_sums_accumulate_across_microbatches(spark, tmp_path):
     """The six Welch sufficient sums are keyed streaming state: with the
     events split across two micro-batches, the FINAL update-mode emission
     must carry the sums over BOTH batches (associative accumulation), and
@@ -1076,28 +938,18 @@ def test_stream_welch_sums_accumulate_across_microbatches(spark):
 
     schema = "event_id long, event_type string, value double"
     vals = [float(i % 7) + 0.25 * (i % 3) for i in range(20)]
-    paths = _write_batches(
-        spark,
-        [
-            [(i, "t", vals[i]) for i in range(10)],
-            [(i, "t", vals[i]) for i in range(10, 20)],
-        ],
-        schema,
-    )
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(os.path.dirname(paths[0]), "b*"))
-    )
+    batches = [
+        [(i, "t", vals[i]) for i in range(10)],
+        [(i, "t", vals[i]) for i in range(10, 20)],
+    ]
+    sdf = replay_segments([spark.createDataFrame(b, schema) for b in batches], str(tmp_path))
     e = sdf.select(
         "event_type",
         (F.col("event_id") % 2).alias("half"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
     )
     # the SHARED aggregate (q sums DECIMAL(38,0)-widened inside the fold)
-    drained = run_to_completion(
-        welch_sufficient_sums(e), output_mode="update", spark=spark
-    )
+    drained = run_to_completion(welch_sufficient_sums(e), output_mode="update")
     # the SHARED final-state reduce (max monotone counter per key)
     from kafka_streams_playground_spark.streaming.replay import latest_update_state
 
@@ -1215,7 +1067,7 @@ def test_append_session_windows_empty_input(spark):
 
     empty = spark.createDataFrame([], "user_id long, ts timestamp")
     out = _append_session_windows(
-        spark, empty, "user_id", 600, [F.count(F.lit(1)).alias("n_events")]
+        empty, "user_id", 600, [F.count(F.lit(1)).alias("n_events")]
     )
     assert out.count() == 0
 
@@ -1245,7 +1097,6 @@ def test_append_session_windows_unorderable_payload_column(spark):
         rows, "user_id long, ts timestamp, attrs map<string,string>"
     )
     out = _append_session_windows(
-        spark,
         df,
         "user_id",
         600,
@@ -1255,10 +1106,10 @@ def test_append_session_windows_unorderable_payload_column(spark):
     assert got == [(1, 1), (1, 2), (2, 1)]
 
 
-def test_day_grid_state_split_independent_across_microbatches(spark):
+def test_day_grid_state_split_independent_across_microbatches(spark, tmp_path):
     """The trend twins' shared substrate under a REAL multi-micro-batch
-    split (the fixture replay drains in one batch; maxFilesPerTrigger=1
-    forces three): a (type, day) cell whose events arrive in DIFFERENT
+    split (the fixture replay drains in one batch; replay_segments forces
+    three): a (type, day) cell whose events arrive in DIFFERENT
     micro-batches must accumulate in the state store, the update-mode
     sink then holds one row per (cell, emitting batch), and the
     max-row-count reduce (latest_update_state) must pick each cell's
@@ -1278,13 +1129,7 @@ def test_day_grid_state_split_independent_across_microbatches(spark):
         [("click", d0, 0.75), ("click", d1, 10.00)],
         [("view", d1, 4.50), ("click", d1, 0.50)],
     ]
-    paths = _write_batches(spark, batches, schema)
-    src_dir = os.path.dirname(paths[0])
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(src_dir, "b*"))
-    )
+    sdf = replay_segments([spark.createDataFrame(b, schema) for b in batches], str(tmp_path))
     g = (
         sdf.select(
             "event_type",
@@ -1294,7 +1139,7 @@ def test_day_grid_state_split_independent_across_microbatches(spark):
         .groupBy("event_type", "day")
         .agg(F.sum("cents").alias("v"), F.count(F.lit(1)).alias("n_rows"))
     )
-    drained = run_to_completion(g, output_mode="update", spark=spark)
+    drained = run_to_completion(g, output_mode="update")
     # the split produced re-emissions: more sink rows than final cells
     assert drained.count() > 4
     got = {
@@ -1353,11 +1198,11 @@ def test_stream_session_windows_append_emits_each_session_once(spark, sf_dir):
 
 
 @pytest.mark.slowaudit  # engine-semantics probe (20-50 s), opt-in (pytest.ini)
-def test_session_window_intervals_merge_across_microbatches(spark):
+def test_session_window_intervals_merge_across_microbatches(spark, tmp_path):
     """The semantics stream_session_window_interval_overlap's stage 1
     claims, pinned under a REAL multi-micro-batch split (the helper's own
-    replay drains availableNow in one batch; here maxFilesPerTrigger=1
-    forces separate batches in time order, like an ordered topic): a
+    replay drains availableNow in one batch; here replay_segments forces
+    separate batches in time order, like an ordered topic): a
     session whose events arrive in DIFFERENT micro-batches must merge in
     the session_window state store; a trailing flush-sentinel batch must
     close every real session (append mode withholds them otherwise)
@@ -1382,19 +1227,13 @@ def test_session_window_intervals_merge_across_microbatches(spark):
         # open and must NOT leak
         [(1, sentinel_ts)],
     ]
-    paths = _write_batches(spark, batches, schema)
-    src_dir = os.path.dirname(paths[0])
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(src_dir, "b*"))
-    )
+    sdf = replay_segments([spark.createDataFrame(b, schema) for b in batches], str(tmp_path))
     sess = (
         sdf.withWatermark("ts", "0 seconds")
         .groupBy("user_id", F.session_window("ts", f"{gap} seconds"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    drained = run_to_completion(sess, output_mode="append", spark=spark)
+    drained = run_to_completion(sess, output_mode="append")
     import calendar
 
     # timegm, not .timestamp(): the naive datetimes are UTC wall-clock in

@@ -123,3 +123,21 @@ def test_split_replay_audit_config_tracks_registry():
     assert set(ORDER_FREE) <= stream_names
     assert set(EXPECTED_DIVERGENT) <= stream_names
     assert len(set(ORDER_FREE)) == len(ORDER_FREE)  # no duplicates
+
+
+def test_split_replay_audit_reader_drains_three_segments(spark, sf_dir, tmp_path):
+    """Rot guard for the audit's reader, which the default suite never runs
+    otherwise: a fixture table served by make_split_reader replays as three
+    segment files and drains to exactly the table's rows."""
+    from kafka_streams_playground_spark.sources.parquet import load_table
+    from kafka_streams_playground_spark.streaming.replay import run_to_completion
+    from tools.split_replay_audit import make_split_reader
+
+    sdf = make_split_reader(str(tmp_path))(spark, sf_dir, "nation")
+    drained = run_to_completion(sdf, output_mode="append")
+    (feed_dir,) = os.listdir(tmp_path)
+    segs = [d for d in os.listdir(tmp_path / feed_dir) if d.startswith("seg")]
+    assert len(segs) == 3
+    got = sorted(tuple(r) for r in drained.collect())
+    assert len(got) == 25
+    assert got == sorted(tuple(r) for r in load_table(spark, sf_dir, "nation").collect())

@@ -5,7 +5,7 @@ The ordered split-replay audit varies micro-batch boundaries and the
 scramble axis varies delivery order — but neither ever delivers a row
 PAST the watermark. This tool probes that third axis: for each
 watermarked streaming query, one fixture table is replayed via
-``write_split_feed_late`` — three on-time segments in event-time order,
+``split_late_segments`` — three on-time segments in event-time order,
 then one final segment holding a LATE BURST (the table's earliest rows,
 withheld until after the watermark has advanced to the on-time maximum
 minus the 24 h delay). Two documented contracts are asserted:
@@ -118,9 +118,9 @@ def make_lateness_reader(tmp_root: str, late_table: str, late_sql: str, reduced:
 
     from kafka_streams_playground_spark.sources.parquet import load_table
     from kafka_streams_playground_spark.streaming.replay import (
-        read_split_stream,
         read_stream_table,
-        write_split_feed_late,
+        replay_segments,
+        split_late_segments,
     )
 
     def reader(spark, sf_dir: str, name: str):
@@ -129,19 +129,15 @@ def make_lateness_reader(tmp_root: str, late_table: str, late_sql: str, reduced:
         df = load_table(spark, sf_dir, name)
         pred = F.expr(late_sql)
         d = os.path.join(tmp_root, f"{name}_{uuid.uuid4().hex[:8]}")
-        if reduced:
-            out = df.filter(~pred)
-            out.coalesce(1).write.parquet(os.path.join(d, "seg0000"))
-            schema = out.schema
-            return read_split_stream(spark, d, schema)
         on_time = df.filter(~pred)
+        if reduced:
+            return replay_segments([on_time], d)
         n = on_time.count()
         if name == "events":
             cuts = _gap_safe_cuts(on_time, ORDER_COLS[name][0], n)
         else:
             cuts = tuple(sorted({n // 3, 2 * n // 3} - {0, n}))
-        write_split_feed_late(df, ORDER_COLS[name], cuts, pred, d)
-        return read_split_stream(spark, d, df.schema)
+        return replay_segments(split_late_segments(df, ORDER_COLS[name], cuts, pred), d)
 
     return reader
 

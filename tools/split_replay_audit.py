@@ -9,7 +9,7 @@ in tests/test_split_boundaries.py probe hand-picked shapes; this tool
 generalizes the method to the WHOLE streaming surface:
 
   * `read_stream_table` is monkeypatched to serve each fixture table as a
-    3-segment `write_split_feed` directory ordered by the table's event-
+    3-segment `replay_segments` directory ordered by the table's event-
     time contract (a time-ordered topic) — so every registered stream
     query executes across three real micro-batches with two interior
     watermark advances;
@@ -135,10 +135,7 @@ def make_split_reader(tmp_root: str, scramble: bool = False):
     from pyspark.sql import functions as F
 
     from kafka_streams_playground_spark.sources.parquet import load_table
-    from kafka_streams_playground_spark.streaming.replay import (
-        read_split_stream,
-        write_split_feed,
-    )
+    from kafka_streams_playground_spark.streaming.replay import replay_segments, split_segments
 
     def split_read_stream_table(spark, sf_dir: str, name: str):
         df = load_table(spark, sf_dir, name)  # ts already normalized
@@ -158,10 +155,8 @@ def make_split_reader(tmp_root: str, scramble: bool = False):
                     )
                 ),
             )
-            write_split_feed(feed, ["_scr"], cuts, d)
-            return read_split_stream(spark, d, feed.schema).drop("_scr")
-        write_split_feed(df, ORDER_COLS[name], cuts, d)
-        return read_split_stream(spark, d, df.schema)
+            return replay_segments(split_segments(feed, ["_scr"], cuts), d).drop("_scr")
+        return replay_segments(split_segments(df, ORDER_COLS[name], cuts), d)
 
     return split_read_stream_table
 
