@@ -571,7 +571,13 @@ def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ideal operator class: embarrassingly parallel, output ∝ input, zero
     coordination; chunk rows land partition-aligned with their source
     docs for free."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return chunk_rows(load_table(spark, sf_dir, "documents"))
+
+
+def chunk_rows(documents: DataFrame) -> DataFrame:
+    """Each document's overlapping CHUNK_WIN-token windows at CHUNK_STRIDE,
+    on batch or streaming documents (row-local, no shuffle)."""
+    docs = documents.select("doc_id", "text")
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     c = docs.select(
@@ -1047,11 +1053,26 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines and frozen to the 1e-6 grid per BUCKET (O(256) lns, not per
     token), so the per-doc integer sum is order-free. At 100 TB: identical
     plan; the model tables stay 256 rows."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    b = dsir_token_buckets(load_table(spark, sf_dir, "documents"))
+    lr = dsir_model(b)
+    return (
+        b.join(F.broadcast(lr), "bucket")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_tokens"),
+            F.sum("lr6").alias("dsir6"),
+            F.when(F.sum("lr6") > 0, 1).otherwise(0).alias("selected"),
+        )
+    )
+
+
+def dsir_token_buckets(documents: DataFrame) -> DataFrame:
+    """(doc_id, lang, bucket): every token hashed into one of DSIR_BUCKETS."""
+    docs = documents.select("doc_id", "lang", "text")
     tok = docs.select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
     )
-    b = tok.select(
+    return tok.select(
         "doc_id",
         "lang",
         (
@@ -1063,6 +1084,11 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             % DSIR_BUCKETS
         ).alias("bucket"),
     )
+
+
+def dsir_model(b: DataFrame) -> DataFrame:
+    """The (bucket, lr6) model: the +1-smoothed target-vs-raw log ratio of
+    each bucket's token share, on a 1e-6 integer grid — DSIR_BUCKETS rows."""
     tcnt = (
         b.filter(F.col("lang") == DSIR_TARGET_LANG)
         .groupBy("bucket")
@@ -1075,7 +1101,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("t_tot"),
         F.count(F.lit(1)).alias("r_tot"),
     )
-    lr = (
+    return (
         rcnt.join(tcnt, "bucket", "left")
         .crossJoin(F.broadcast(tots))
         .select(
@@ -1093,15 +1119,6 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("lr6"),
-        )
-    )
-    return (
-        b.join(F.broadcast(lr), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.sum("lr6").alias("dsir6"),
-            F.when(F.sum("lr6") > 0, 1).otherwise(0).alias("selected"),
         )
     )
 
@@ -1439,6 +1456,25 @@ def curation_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-top-K (salt, rank, keep ≤ CAP per salt, re-rank the ≤ CAP×salts
     survivors); the full-rank audit output here is the small-tenant
     variant. Zero UDFs, all codegen."""
+    w = Window.partitionBy("source").orderBy(
+        F.desc("logit_e6"), F.asc("doc_id")
+    )
+    return (
+        quality_logits(load_table(spark, sf_dir, "documents"))
+        .withColumn("quality_rank", F.row_number().over(w).cast("bigint"))
+        .select(
+            "source",
+            "doc_id",
+            "logit_e6",
+            "quality_rank",
+            (F.col("quality_rank") <= CAP_PER_SOURCE).cast("int").alias("kept"),
+        )
+    )
+
+
+def quality_logits(documents: DataFrame) -> DataFrame:
+    """(source, doc_id, logit_e6): the fixed-weight quality logit of each
+    batch or streaming document, from integer token features."""
     from kafka_streams_playground_spark.plans.northstar_scoring import (
         QC_BIAS_E6,
         QC_W_LEN_E6,
@@ -1447,9 +1483,7 @@ def curation_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from kafka_streams_playground_spark.plans.northstar_text import STOPWORDS
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "text"
-    )
+    docs = documents.select("doc_id", "source", "text")
     toks = F.split(F.col("text"), " ")
     stop_arr = F.lit(list(STOPWORDS)).cast("array<string>")
     f = docs.select(
@@ -1467,20 +1501,7 @@ def curation_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" + ({QC_W_LEN_E6} * least(n_tokens, 256)) div 256"
         f" + {QC_BIAS_E6}"
     )
-    w = Window.partitionBy("source").orderBy(
-        F.desc("logit_e6"), F.asc("doc_id")
-    )
-    return (
-        f.select("source", "doc_id", logit.cast("bigint").alias("logit_e6"))
-        .withColumn("quality_rank", F.row_number().over(w).cast("bigint"))
-        .select(
-            "source",
-            "doc_id",
-            "logit_e6",
-            "quality_rank",
-            (F.col("quality_rank") <= CAP_PER_SOURCE).cast("int").alias("kept"),
-        )
-    )
+    return f.select("source", "doc_id", logit.cast("bigint").alias("logit_e6"))
 
 
 # ---------------------------------------------------------------------------
@@ -1788,7 +1809,18 @@ def privacy_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     one pass over the release candidate. The sensitive band lands on the
     integer cent grid before comparison so the class assignment is
     bit-stable cross-engine."""
-    c = load_table(spark, sf_dir, "customer").select(
+    c = kanon_bands(load_table(spark, sf_dir, "customer"))
+    cls = c.groupBy("nation", "segment").agg(
+        F.count(F.lit(1)).alias("class_size"),
+        F.countDistinct("sens").alias("n_sensitive"),
+    )
+    return kanon_verdict(cls)
+
+
+def kanon_bands(customer: DataFrame) -> DataFrame:
+    """(nation, segment, sens): each customer's quasi-identifiers and
+    sensitive balance band."""
+    return customer.select(
         F.col("c_nationkey").cast("long").alias("nation"),
         F.col("c_mktsegment").alias("segment"),
         F.when(F.col("c_acctbal") < 0, F.lit("neg"))
@@ -1800,10 +1832,11 @@ def privacy_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("high"))
         .alias("sens"),
     )
-    cls = c.groupBy("nation", "segment").agg(
-        F.count(F.lit(1)).alias("class_size"),
-        F.countDistinct("sens").alias("n_sensitive"),
-    )
+
+
+def kanon_verdict(cls: DataFrame) -> DataFrame:
+    """The k-anonymity / l-diversity flags and release ladder of each
+    (nation, segment, class_size, n_sensitive) class."""
     return cls.select(
         "nation",
         "segment",

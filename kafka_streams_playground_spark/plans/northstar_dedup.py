@@ -919,10 +919,21 @@ def dedup_incremental_new_vs_base(spark: SparkSession, sf_dir: str) -> DataFrame
             "new_id",
         )
     )
+    return best_base_match(verified_pairs(verified))
+
+
+def verified_pairs(cand: DataFrame) -> DataFrame:
+    """(new_id, base_id, jaccard) of the candidates whose exact shingle-set
+    Jaccard (``hsb`` vs ``hsn``) reaches JACCARD_THRESHOLD."""
     jac = T.jaccard(F.col("hsb"), F.col("hsn"))
-    scored = verified.filter(jac >= JACCARD_THRESHOLD).select(
+    return cand.filter(jac >= JACCARD_THRESHOLD).select(
         "new_id", "base_id", F.round(jac, 4).alias("jaccard")
     )
+
+
+def best_base_match(scored: DataFrame) -> DataFrame:
+    """Each new document's best base match (highest Jaccard, then lowest
+    base_id) as (doc_id, dup_of, jaccard)."""
     from pyspark.sql import Window as _W
 
     best = scored.withColumn(

@@ -13,7 +13,7 @@ edge sets provably agree.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_streams_playground_spark.functions import text as T
@@ -479,22 +479,8 @@ def pipeline_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("is_dup", F.lit(1))
     )
-    toks = F.split("text", " ")
-    stop_arr = F.array(*[F.lit(s) for s in ("the", "a", "of", "and", "to", "in")])
-    feat = docs.select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        (F.size(F.array_distinct(toks)) / F.size(toks)).alias("ttr"),
-        (F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))) / F.size(toks)).alias(
-            "stop_ratio"
-        ),
-    )
-    qs = F.round(
-        0.5 * F.col("ttr")
-        + 0.3 * F.col("stop_ratio")
-        + 0.2 * F.least(F.col("n_tokens") / 256.0, F.lit(1.0)),
-        4,
-    )
+    feat = quality_features(docs, "doc_id")
+    qs = quality_score()
     merged = feat.join(dupset, "doc_id", "left")
     return merged.select(
         "doc_id",
@@ -512,6 +498,31 @@ def pipeline_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("int")
         .alias("keep"),
+    )
+
+
+def quality_features(docs: DataFrame, key: str) -> DataFrame:
+    """(key, n_tokens, ttr, stop_ratio): the token features of the quality
+    gates, on batch or streaming documents."""
+    toks = F.split("text", " ")
+    stop_arr = F.array(*[F.lit(s) for s in ("the", "a", "of", "and", "to", "in")])
+    return docs.select(
+        key,
+        F.size(toks).alias("n_tokens"),
+        (F.size(F.array_distinct(toks)) / F.size(toks)).alias("ttr"),
+        (F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))) / F.size(toks)).alias(
+            "stop_ratio"
+        ),
+    )
+
+
+def quality_score() -> Column:
+    """The heuristic quality score over :func:`quality_features`' columns."""
+    return F.round(
+        0.5 * F.col("ttr")
+        + 0.3 * F.col("stop_ratio")
+        + 0.2 * F.least(F.col("n_tokens") / 256.0, F.lit(1.0)),
+        4,
     )
 
 

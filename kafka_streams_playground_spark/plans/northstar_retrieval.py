@@ -99,29 +99,37 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     built elsewhere in this repo) and the fusion cost stays the k+k rows it
     is here; this is why RRF is THE hybrid combiner at scale."""
     lex0 = REGISTRY["text_bm25_topk"].fn(spark, sf_dir)  # top-k lexical leg
-    w_lex = Window.orderBy(F.col("score6").desc(), F.col("doc_id").asc())
-    lex = lex0.select("doc_id", "score6").withColumn(
-        "lex_rank", F.row_number().over(w_lex)
-    )  # window over BM25_TOP_K rows — O(config), post-limit
 
     n = _vectors(spark, sf_dir)
     qv = n.filter(F.col("vec_id") == SEM_QUERY_ID).select(
         F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
-    sc = (
-        n.filter(F.col("vec_id") != SEM_QUERY_ID)
-        .crossJoin(F.broadcast(qv))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(
-                _dot_udf(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
-            ).alias("cosine"),
-        )
-    )
+    sc = cosine_scores(n.filter(F.col("vec_id") != SEM_QUERY_ID).crossJoin(F.broadcast(qv)))
     sem0 = sc.orderBy(F.col("cosine").desc(), F.col("doc_id").asc()).limit(SEM_N)
+    return rrf_fuse(lex0, sem0)
+
+
+def cosine_scores(pairs: DataFrame) -> DataFrame:
+    """(doc_id, cosine): each (vec_id, v, nrm) row's cosine to the query
+    vector (qv, qn) on its row, rounded to 6 places."""
+    return pairs.select(
+        F.col("vec_id").alias("doc_id"),
+        F.round(
+            _dot_udf(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
+        ).alias("cosine"),
+    )
+
+
+def rrf_fuse(lex0: DataFrame, sem0: DataFrame) -> DataFrame:
+    """Reciprocal-rank fusion of the lexical top-k (doc_id, score6) and the
+    dense top-k (doc_id, cosine) candidate lists: the RRF_TOP documents by
+    Σ 1e6 // (RRF_K + rank)."""
+    w_lex = Window.orderBy(F.col("score6").desc(), F.col("doc_id").asc())
+    lex = lex0.select("doc_id", "score6").withColumn(
+        "lex_rank", F.row_number().over(w_lex)
+    )  # window over BM25_TOP_K rows — O(config), post-limit
     w_sem = Window.orderBy(F.col("cosine").desc(), F.col("doc_id").asc())
     sem = sem0.withColumn("sem_rank", F.row_number().over(w_sem))
-
     fused = (
         lex.select("doc_id", "lex_rank")
         .join(sem.select("doc_id", "sem_rank"), "doc_id", "full_outer")

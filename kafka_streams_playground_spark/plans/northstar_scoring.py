@@ -381,16 +381,35 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e-6-grid integers so the per-doc fold is order-free, and the top-k is
     TakeOrderedAndProject — per-partition heap + k-row driver merge, never
     a global sort."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    tot = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-    )
-    tf = (
+    tok = bm25_tokens(load_table(spark, sf_dir, "documents"))
+    return bm25_topk(bm25_doc_lengths(tok), bm25_term_freqs(tok))
+
+
+def bm25_tokens(documents: DataFrame) -> DataFrame:
+    """(doc_id, token): the whitespace tokens of batch or streaming documents."""
+    docs = documents.select("doc_id", "text")
+    return docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+
+
+def bm25_doc_lengths(tok: DataFrame) -> DataFrame:
+    """(doc_id, dl): each document's length in tokens."""
+    return tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
+
+
+def bm25_term_freqs(tok: DataFrame) -> DataFrame:
+    """(doc_id, token, tf): each document's count of every BM25_TERMS term."""
+    return (
         tok.filter(F.col("token").isin(*BM25_TERMS))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
+    )
+
+
+def bm25_topk(dl: DataFrame, tf: DataFrame) -> DataFrame:
+    """The BM25_TOP_K documents by BM25 score over the index statistics
+    ``dl`` and ``tf`` (scores on a 1e-6 integer grid)."""
+    tot = dl.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
     dfq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     idf = F.log(

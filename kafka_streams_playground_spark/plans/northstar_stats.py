@@ -20,7 +20,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_streams_playground_spark.functions import text as T
@@ -321,13 +321,19 @@ def stats_ols_qty_price_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame
     (n~6e9 rows/nation, Sxy~6e17) is ~4e27 << 1e38 — DECIMAL(38,0) holds;
     the r^2 numerator would square that (1e55) and overflow, which is why
     the query reports slope/intercept only."""
-    li = ols_point_columns(load_table(spark, sf_dir, "lineitem"))
+    pts = ols_nation_points(spark, sf_dir, load_table(spark, sf_dir, "lineitem"))
+    return ols_assemble(ols_sufficient_stats(pts))
+
+
+def ols_nation_points(spark: SparkSession, sf_dir: str, lineitem: DataFrame) -> DataFrame:
+    """Each (batch or streaming) lineitem's regression point with its
+    supplier's nation attached by broadcast joins to the static dims."""
+    li = ols_point_columns(lineitem)
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    pts = li.join(F.broadcast(sup), li["l_suppkey"] == sup["s_suppkey"]).join(
+    return li.join(F.broadcast(sup), li["l_suppkey"] == sup["s_suppkey"]).join(
         F.broadcast(nat), sup["s_nationkey"] == nat["n_nationkey"]
     )
-    return ols_assemble(ols_sufficient_stats(pts))
 
 
 # ---------------------------------------------------------------------------
@@ -695,8 +701,14 @@ def stats_countmin_user_traffic(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject. Hashes are the md5-prefix recipe so the DuckDB
     oracle derives identical buckets. At 100 TB the sketch size is
     unchanged (that is the point); only W is retuned to bound n/W error."""
-    ev = load_table(spark, sf_dir, "events").select("user_id")
-    cnt = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("cnt"))
+    cnt, buckets = countmin_user_cells(load_table(spark, sf_dir, "events"))
+    sketch = buckets.groupBy("r", "b").agg(F.sum("cnt").alias("sc"))
+    return countmin_readback(cnt, buckets, sketch)
+
+
+def countmin_cells() -> Column:
+    """A user's D sketch cells as a posexplode to (r, b): row r hashes
+    ``cm<r>:<user_id>`` into one of CM_WIDTH buckets."""
 
     def bucket(r: int):
         return (
@@ -716,12 +728,19 @@ def stats_countmin_user_traffic(spark: SparkSession, sf_dir: str) -> DataFrame:
             % CM_WIDTH
         )
 
-    buckets = cnt.select(
-        "user_id",
-        "cnt",
-        F.posexplode(F.array(*[bucket(r) for r in range(CM_DEPTH)])).alias("r", "b"),
-    )
-    sketch = buckets.groupBy("r", "b").agg(F.sum("cnt").alias("sc"))
+    return F.posexplode(F.array(*[bucket(r) for r in range(CM_DEPTH)])).alias("r", "b")
+
+
+def countmin_user_cells(events: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Exact per-user event counts and each user's (count, sketch cell) rows."""
+    ev = events.select("user_id")
+    cnt = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("cnt"))
+    return cnt, cnt.select("user_id", "cnt", countmin_cells())
+
+
+def countmin_readback(cnt: DataFrame, buckets: DataFrame, sketch: DataFrame) -> DataFrame:
+    """The top-CM_TOP users' exact counts against their min-over-rows
+    sketch estimate."""
     est = (
         buckets.join(F.broadcast(sketch), ["r", "b"])
         .groupBy("user_id")
@@ -782,16 +801,24 @@ def stats_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram merges across partitions, days, or streaming micro-batches;
     rank compares use DECIMAL(38,0) (cum·1e6 overflows int64 at 10^13
     rows). At 100 TB nothing changes but the counter values."""
-    ev = load_table(spark, sf_dir, "events").select(
-        F.floor("value").cast("bigint").alias("bucket")
-    )
-    h = ev.groupBy("bucket").agg(F.count(F.lit(1)).alias("cnt"))
+    return histogram_quantiles(value_histogram(load_table(spark, sf_dir, "events")))
+
+
+def value_histogram(events: DataFrame) -> DataFrame:
+    """Unit-grid bucket counters of the event value — additive, so a
+    streaming aggregate of them drains to the batch histogram."""
+    ev = events.select(F.floor("value").cast("bigint").alias("bucket"))
+    return ev.groupBy("bucket").agg(F.count(F.lit(1)).alias("cnt"))
+
+
+def histogram_quantiles(h: DataFrame) -> DataFrame:
+    """The HQ_TARGETS_PPM quantile probe on the (bucket, cnt) histogram."""
     w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     # Unpartitioned window — bounded: runs over the value-grid rows (~500
     # here; O(grid), never O(N)), the documented O(config) window class.
     c = h.select("bucket", "cnt", F.sum("cnt").over(w).alias("cum"))
     tot = h.agg(F.sum("cnt").alias("n_total"))
-    qs = spark.createDataFrame(
+    qs = h.sparkSession.createDataFrame(
         [(q,) for q in HQ_TARGETS_PPM], "q_ppm bigint"
     )
     probe = (
@@ -1044,19 +1071,7 @@ def stats_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine hash exact. At 100 TB: identical plan, B stays 40,
     shuffle volume is B × n_partitions × 16 bytes — the whole point of
     the Poisson formulation."""
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
-    )
-    u = (
-        "cast(conv(substr(md5(concat('bs:', cast(b as string), ':', "
-        "cast(o_orderkey as string))), 1, 8), 16, 10) as bigint)"
-    )
-    # materialize the uniform draw ONCE per exploded row before the CASE so
-    # the plan never depends on codegen CSE-ing the md5+conv out of the
-    # eight conditional branches
+    o = bootstrap_cents(load_table(spark, sf_dir, "orders"))
     # The fixtures are single-row-group parquet files, so the scan stage is
     # ONE task; hash-repartition the 16-byte projection (trivial shuffle)
     # before the ×B explode so the md5/conv/CASE work — the dominant cost —
@@ -1066,9 +1081,32 @@ def stats_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bytes-based advisory sizing cannot see. At 100 TB the scan has
     # thousands of splits and this exchange is a no-op-sized rebalance.
     n_par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    w = (
-        o.repartition(n_par, F.col("o_orderkey"))
-        .select(
+    w = bootstrap_weights(o.repartition(n_par, F.col("o_orderkey")))
+    return bootstrap_ci(bootstrap_replica_sums(w), bootstrap_point(o))
+
+
+def bootstrap_cents(orders: DataFrame) -> DataFrame:
+    """(o_orderkey, cents): the resampled rows."""
+    return orders.select(
+        "o_orderkey",
+        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+        .cast("bigint")
+        .alias("cents"),
+    )
+
+
+def bootstrap_weights(o: DataFrame) -> DataFrame:
+    """Each row's deterministic Poisson(1) weight in each of the BS_B
+    replicas: (b, cents, wt)."""
+    u = (
+        "cast(conv(substr(md5(concat('bs:', cast(b as string), ':', "
+        "cast(o_orderkey as string))), 1, 8), 16, 10) as bigint)"
+    )
+    # materialize the uniform draw ONCE per exploded row before the CASE so
+    # the plan never depends on codegen CSE-ing the md5+conv out of the
+    # eight conditional branches
+    return (
+        o.select(
             "o_orderkey",
             "cents",
             F.explode(F.sequence(F.lit(0), F.lit(BS_B - 1))).alias("b"),
@@ -1076,14 +1114,29 @@ def stats_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("b", "cents", F.expr(u).alias("u64"))
         .select("b", "cents", F.expr(_bs_weight_sql("u64")).alias("wt"))
     )
-    reps = (
-        w.groupBy("b")
-        .agg(
-            F.sum(F.col("wt") * F.col("cents")).alias("swc"),
-            F.sum("wt").alias("sw"),
-        )
-        .filter(F.col("sw") > 0)
-        .select(F.expr("cast(swc div sw as bigint)").alias("mean_cents"))
+
+
+def bootstrap_replica_sums(w: DataFrame) -> DataFrame:
+    """Per-replica (Σw·c, Σw) accumulators — additive, so a streaming
+    aggregate of them drains to the batch replica table."""
+    return w.groupBy("b").agg(
+        F.sum(F.col("wt") * F.col("cents")).alias("swc"),
+        F.sum("wt").alias("sw"),
+    )
+
+
+def bootstrap_point(o: DataFrame) -> DataFrame:
+    """The point estimate (mean_cents, n_rows) over the unweighted rows."""
+    return o.agg(
+        F.expr("cast(sum(cents) div count(*) as bigint)").alias("mean_cents"),
+        F.count(F.lit(1)).alias("n_rows"),
+    )
+
+
+def bootstrap_ci(sums: DataFrame, point: DataFrame) -> DataFrame:
+    """The percentile CI over the replica means, next to the point estimate."""
+    reps = sums.filter(F.col("sw") > 0).select(
+        F.expr("cast(swc div sw as bigint)").alias("mean_cents")
     )
     wrk = Window.orderBy("mean_cents")
     ranked = reps.select(
@@ -1100,10 +1153,6 @@ def stats_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(
             F.when(F.col("rk") >= hi_idx, F.col("mean_cents"))
         ).alias("ci_hi_cents"),
-    )
-    point = o.agg(
-        F.expr("cast(sum(cents) div count(*) as bigint)").alias("mean_cents"),
-        F.count(F.lit(1)).alias("n_rows"),
     )
     return (
         point.withColumn("n_replicas", F.lit(BS_B).cast("bigint"))
@@ -1616,17 +1665,23 @@ def stats_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast total, and a broadcast 9-row digit spine so absent
     digits still report 0. One scan, one 9-group shuffle, O(9) state —
     at 100 TB this is as cheap as a count(*)."""
-    cents = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_totalprice") > 0)
-        .select(
-            F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents")
-        )
+    orders = load_table(spark, sf_dir, "orders")
+    return benford_from_counts(benford_digit_counts(orders))
+
+
+def benford_digit_counts(orders: DataFrame) -> DataFrame:
+    """Per-first-digit counters of positive order amounts in cents."""
+    cents = orders.filter(F.col("o_totalprice") > 0).select(
+        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents")
     )
-    d = cents.select(
+    return cents.select(
         F.substring(F.col("cents").cast("string"), 1, 1).cast("long").alias("digit")
     ).groupBy("digit").agg(F.count(F.lit(1)).alias("n"))
-    spine = spark.range(1, 10).select(F.col("id").alias("digit"))
+
+
+def benford_from_counts(d: DataFrame) -> DataFrame:
+    """The ppm/expectation epilogue over the (digit, n) counters."""
+    spine = d.sparkSession.range(1, 10).select(F.col("id").alias("digit"))
     t = d.agg(F.sum("n").alias("total"))
     return (
         spine.join(F.broadcast(d), "digit", "left")

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import math as _math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_streams_playground_spark.operators.tables import latest_per_key
@@ -2334,29 +2334,17 @@ def cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the key (sinks.write_bucketed_table) making nightly merges
     shuffle-free on the target side; the resolve logic is unchanged.
     Output = the merged snapshot with per-row merge_action lineage."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents")
-    )
+    ev = cdc_cents(load_table(spark, sf_dir, "events"))
     base = ev.filter(F.col("event_id") % 7 != 0).select(
         F.col("event_id").alias("b_id"), F.col("cents").alias("b_cents")
     )
-    chg = (
-        ev.filter(
-            (F.col("event_id") % 7 == 0)
-            | (F.col("event_id") % 11 == 0)
-            | (F.col("event_id") % 13 == 0)
-        )
-        .select(
-            F.col("event_id").alias("c_id"),
-            F.when(F.col("event_id") % 7 == 0, F.lit("I"))
-            .when(F.col("event_id") % 11 == 0, F.lit("U"))
-            .otherwise(F.lit("D"))
-            .alias("op"),
-            F.when(F.col("event_id") % 7 == 0, F.col("cents"))
-            .when(F.col("event_id") % 11 == 0, F.col("cents") + 100)
-            .otherwise(F.lit(None).cast("long"))
-            .alias("new_cents"),
-        )
+    chg = ev.filter(cdc_is_change()).select(
+        F.col("event_id").alias("c_id"),
+        F.when(F.col("event_id") % 7 == 0, F.lit("I"))
+        .when(F.col("event_id") % 11 == 0, F.lit("U"))
+        .otherwise(F.lit("D"))
+        .alias("op"),
+        cdc_new_cents().alias("new_cents"),
     )
     j = base.join(chg, base["b_id"] == chg["c_id"], "full_outer")
     keep = (
@@ -2373,6 +2361,31 @@ def cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("op") == "U", F.lit("updated"))
         .otherwise(F.lit("inserted"))
         .alias("merge_action"),
+    )
+
+
+def cdc_cents(events: DataFrame) -> DataFrame:
+    """(event_id, cents): the keyed rows the CDC merge works on."""
+    return events.select(
+        "event_id", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents")
+    )
+
+
+def cdc_is_change() -> Column:
+    """The change batch: inserts (id % 7), updates (id % 11), deletes (id % 13)."""
+    return (
+        (F.col("event_id") % 7 == 0)
+        | (F.col("event_id") % 11 == 0)
+        | (F.col("event_id") % 13 == 0)
+    )
+
+
+def cdc_new_cents() -> Column:
+    """A change row's new value: inserts keep cents, updates add 100, deletes are NULL."""
+    return (
+        F.when(F.col("event_id") % 7 == 0, F.col("cents"))
+        .when(F.col("event_id") % 11 == 0, F.col("cents") + 100)
+        .otherwise(F.lit(None).cast("long"))
     )
 
 
@@ -2507,12 +2520,7 @@ def ivm_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_custkey"
     )
-    b = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("b_orderkey"),
-        "l_returnflag",
-        "l_linenumber",
-        F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").alias("cents"),
-    )
+    b = ivm_lineitem(load_table(spark, sf_dir, "lineitem"))
     # Slice on NON-join keys (custkey / linenumber): join-key slicing
     # would correlate the deltas and silently empty the cross terms.
     a_old = a.filter(F.col("o_custkey") % 7 != 0).drop("o_custkey")
@@ -2525,25 +2533,42 @@ def ivm_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             ax = F.broadcast(ax)
         elif bcast == "b":
             bx = F.broadcast(bx)
-        return (
-            ax.join(bx, ax.o_orderkey == bx.b_orderkey)
-            .groupBy("o_orderstatus", "l_returnflag")
-            .agg(F.count(F.lit(1)).alias("n_rows"), F.sum("cents").alias("sum_cents"))
-        )
+        return ivm_view(ax, bx)
 
     v_old = view(a_old, b_old, None)
     d1 = view(a_del, b_old, "a")  # ΔA ⋈ B_old
     d2 = view(a_old, b_del, "b")  # A_old ⋈ ΔB
     d3 = view(a_del, b_del, "a")  # ΔA ⋈ ΔB
+    return ivm_merge(v_old, d1, d2, d3)
+
+
+def ivm_lineitem(lineitem: DataFrame) -> DataFrame:
+    """B's view columns: (b_orderkey, l_returnflag, l_linenumber, cents)."""
+    return lineitem.select(
+        F.col("l_orderkey").alias("b_orderkey"),
+        "l_returnflag",
+        "l_linenumber",
+        F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").alias("cents"),
+    )
+
+
+def ivm_view(ax: DataFrame, bx: DataFrame) -> DataFrame:
+    """The join view A ⋈ B aggregated per (o_orderstatus, l_returnflag)."""
     return (
-        v_old.unionByName(d1)
-        .unionByName(d2)
-        .unionByName(d3)
+        ax.join(bx, ax.o_orderkey == bx.b_orderkey)
         .groupBy("o_orderstatus", "l_returnflag")
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("sum_cents").alias("sum_cents"),
-        )
+        .agg(F.count(F.lit(1)).alias("n_rows"), F.sum("cents").alias("sum_cents"))
+    )
+
+
+def ivm_merge(*views: DataFrame) -> DataFrame:
+    """Merge view deltas: a groupBy-sum over dashboard-sized aggregate rows."""
+    merged = views[0]
+    for v in views[1:]:
+        merged = merged.unionByName(v)
+    return merged.groupBy("o_orderstatus", "l_returnflag").agg(
+        F.sum("n_rows").alias("n_rows"),
+        F.sum("sum_cents").alias("sum_cents"),
     )
 
 

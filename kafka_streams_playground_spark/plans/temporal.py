@@ -18,7 +18,7 @@ engine reaches for next; each is expressed Spark-first:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_streams_playground_spark.plans.registry import query
@@ -809,16 +809,30 @@ def events_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the stream_ts_ewma recipe), and Q's int64 headroom bounds the exact
     path at ~1e8 rows per type × (10^5 cents)² — past that, shift to the
     documented double-moment variant."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
+    ev = event_cents(load_table(spark, sf_dir, "events"), "event_id", "event_type")
+    return flag_outliers(ev, type_moments(ev))
+
+
+def event_cents(events: DataFrame, *cols: str) -> DataFrame:
+    """``cols`` plus the event value as exact integer cents."""
+    return events.select(
+        *cols, F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents")
     )
-    s = ev.groupBy("event_type").agg(
+
+
+def type_moments(ev: DataFrame) -> DataFrame:
+    """Per-type cent moments (n, Σx, Σx²) — |event_types| rows."""
+    return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("cents").alias("s1"),
         F.sum(F.col("cents") * F.col("cents")).alias("s2"),
     )
+
+
+def flag_outliers(ev: DataFrame, s: DataFrame) -> DataFrame:
+    """Events more than 3σ from their type's mean, by the divisionless
+    (n·x−S)² > 9(nQ−S²) test against the per-type moments ``s``; ``ev``
+    may be a stream (the moments are a static broadcast side)."""
     j = ev.join(F.broadcast(s), "event_type")
     nd = F.col("n").cast("double")
     cd = F.col("cents").cast("double")
@@ -1047,28 +1061,8 @@ def ts_cusum_drift_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     charts. Int64 headroom: |inc| ≤ n·max|dev|, P ≤ n²·max|dev| — ~10⁹
     rows/series at 10⁵-cent deviations before DECIMAL(38,0) is needed
     (documented bound, the events_value_outliers stance)."""
-    events = load_table(spark, sf_dir, "events")
-    x = events.select(
-        "event_id",
-        "event_type",
-        "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    m = x.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("cents").alias("s")
-    )
-    i = x.join(F.broadcast(m), "event_type").select(
-        "event_id",
-        "event_type",
-        "ts",
-        "cents",
-        "n",
-        (
-            F.col("cents") * F.col("n")
-            - F.col("s")
-            - F.col("n") * CUSUM_K_CENTS
-        ).alias("inc"),
-    )
+    x = event_cents(load_table(spark, sf_dir, "events"), "event_id", "event_type", "ts")
+    i = cusum_increments(x, cusum_baseline(x))
     w = (
         Window.partitionBy("event_type")
         .orderBy("ts", "event_id")
@@ -1097,6 +1091,30 @@ def ts_cusum_drift_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
         cusum.alias("cusum_xn"),
         (cusum > CUSUM_H_CENTS * F.col("n")).cast("int").alias("alarm"),
+    )
+
+
+def cusum_baseline(x: DataFrame) -> DataFrame:
+    """Per-type (n, Σcents): the chart's calibration pass."""
+    return x.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("cents").alias("s")
+    )
+
+
+def cusum_increments(x: DataFrame, m: DataFrame) -> DataFrame:
+    """Each event's n-scaled chart increment n·x − S − n·k against its
+    type's baseline ``m``; ``x`` may be a stream (``m`` is broadcast)."""
+    return x.join(F.broadcast(m), "event_type").select(
+        "event_id",
+        "event_type",
+        "ts",
+        "cents",
+        "n",
+        (
+            F.col("cents") * F.col("n")
+            - F.col("s")
+            - F.col("n") * CUSUM_K_CENTS
+        ).alias("inc"),
     )
 
 
@@ -1426,7 +1444,14 @@ def ts_multi_granularity_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dashboard-sized, not data-sized. Incremental maintenance at scale:
     the same aggregate run per ingest batch MERGEs into the rollup table
     (the ivm_incremental_user_agg pattern)."""
-    ev = load_table(spark, sf_dir, "events").select(
+    return rollup_counters(load_table(spark, sf_dir, "events"))
+
+
+def rollup_counters(events: DataFrame) -> DataFrame:
+    """The (grain, bucket, type) counters of every ROLLUP_GRAINS grain, on
+    batch or streaming events: each event explodes into its (grain,
+    bucket) pairs and the counters are additive."""
+    ev = events.select(
         F.unix_timestamp("ts").alias("ep"),
         "event_type",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
@@ -1514,18 +1539,27 @@ def drift_ks_value_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization — KS on a quantized grid is still exact for the
     quantized variable). The sup and its argmin resolve with one 1-row
     broadcast join — no second scan of anything."""
-    e = load_table(spark, sf_dir, "events").select(
+    g = ks_grid(load_table(spark, sf_dir, "events")).localCheckpoint(
+        eager=True
+    )  # grid-bounded; read by cum + sup branches
+    return ks_from_grid(g)
+
+
+def ks_grid(events: DataFrame) -> DataFrame:
+    """The (cents, half) counters of the KS statistic — additive, so a
+    streaming aggregate of them drains to the batch grid."""
+    e = events.select(
         (F.col("event_id") % 2).alias("half"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
     )
-    g = (
-        e.groupBy("cents")
-        .agg(
-            F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).alias("ca"),
-            F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).alias("cb"),
-        )
-        .localCheckpoint(eager=True)  # grid-bounded; read by cum + sup branches
+    return e.groupBy("cents").agg(
+        F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).alias("ca"),
+        F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).alias("cb"),
     )
+
+
+def ks_from_grid(g: DataFrame) -> DataFrame:
+    """The sup-over-CDFs probe on the (cents, ca, cb) grid."""
     wc = Window.orderBy("cents").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -2540,6 +2574,9 @@ BURST_GAP_S = 3600
 # fixture sessions/bursts span minutes-to-hours, so 6 h bins keep the
 # explode factor ~1-2 while keeping per-bin candidate counts small.
 OVERLAP_BIN_S = 21600
+# A (session, burst) pair: the key the bin join deduplicates on (a pair
+# that shares several bins is found once per shared bin).
+OVERLAP_PAIR_KEY = ["user_id", "session_no", "event_type", "burst_no"]
 
 _SESSIONIZE_SQL = """
     flagged AS (
@@ -2688,39 +2725,63 @@ def join_interval_overlap_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact boundary semantics on the 6 h user gap and a 1 h per-type burst
     gap); bounds are floor-epoch BIGINTs, so the overlap arithmetic is
     integer-exact in both engines."""
-    events = load_table(spark, sf_dir, "events")
-    sessions = interval_islands(events, "user_id", "session_no", SESSION_GAP_S).select(
-        "user_id",
-        "session_no",
-        F.col("i_start").alias("s_start"),
-        F.col("i_end").alias("s_end"),
-    )
-    bursts = interval_islands(events, "event_type", "burst_no", BURST_GAP_S).select(
-        "event_type",
-        "burst_no",
-        F.col("i_start").alias("b_start"),
-        F.col("i_end").alias("b_end"),
-    )
+    sessions, bursts = session_burst_intervals(load_table(spark, sf_dir, "events"))
     sb = explode_to_bins(sessions, "s_start", "s_end", "bin")
     bb = explode_to_bins(bursts, "b_start", "b_end", "bin")
+    pairs = sb.join(bb, "bin").filter(intervals_overlap())
+    return overlap_rows(pairs.dropDuplicates(OVERLAP_PAIR_KEY))
+
+
+def session_burst_intervals(events: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two interval relations of the overlap join, by gaps-and-islands:
+    user sessions on the SESSION_GAP_S gap and per-type bursts on the
+    BURST_GAP_S gap."""
+    return overlap_intervals(
+        interval_islands(events, "user_id", "session_no", SESSION_GAP_S),
+        interval_islands(events, "event_type", "burst_no", BURST_GAP_S),
+    )
+
+
+def overlap_intervals(sessions: DataFrame, bursts: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Name the bounds of two (key, ordinal, i_start, i_end) island
+    relations: (user_id, session_no, s_start, s_end) and (event_type,
+    burst_no, b_start, b_end)."""
     return (
-        sb.join(bb, "bin")
-        .filter((F.col("s_start") <= F.col("b_end")) & (F.col("b_start") <= F.col("s_end")))
-        .dropDuplicates(["user_id", "session_no", "event_type", "burst_no"])
-        .select(
+        sessions.select(
             "user_id",
             "session_no",
+            F.col("i_start").alias("s_start"),
+            F.col("i_end").alias("s_end"),
+        ),
+        bursts.select(
             "event_type",
             "burst_no",
-            "s_start",
-            "s_end",
-            "b_start",
-            "b_end",
-            (
-                F.least(F.col("s_end"), F.col("b_end"))
-                - F.greatest(F.col("s_start"), F.col("b_start"))
-            ).alias("overlap_s"),
-        )
+            F.col("i_start").alias("b_start"),
+            F.col("i_end").alias("b_end"),
+        ),
+    )
+
+
+def intervals_overlap() -> Column:
+    """The true overlap predicate of a (session, burst) candidate pair."""
+    return (F.col("s_start") <= F.col("b_end")) & (F.col("b_start") <= F.col("s_end"))
+
+
+def overlap_rows(pairs: DataFrame) -> DataFrame:
+    """The output row of an overlapping (session, burst) pair."""
+    return pairs.select(
+        "user_id",
+        "session_no",
+        "event_type",
+        "burst_no",
+        "s_start",
+        "s_end",
+        "b_start",
+        "b_end",
+        (
+            F.least(F.col("s_end"), F.col("b_end"))
+            - F.greatest(F.col("s_start"), F.col("b_start"))
+        ).alias("overlap_s"),
     )
 
 

@@ -8,8 +8,10 @@ broadcast discount GlobalKTable, ``lineitem`` the payments stream
 (``l_shipdate`` gives the join-window time axis, ``l_linestatus = 'F'`` plays
 ``status == "PAID"``), ``events`` the timestamped product stream.
 
-Streaming twins of Q4/Q5 live in :mod:`..streaming.queries` (sharing
-these batch oracles); these batch forms define the semantics.
+Streaming twins of Q1-Q5 live in :mod:`..streaming.queries`: they share
+these batch oracles and call the transformations below (``expensive_orders``,
+``paid_orders``, ``unpaid_audit``, ``paid_within_30_days``) on their replayed
+streams, so these batch forms define the semantics.
 """
 
 from __future__ import annotations
@@ -47,7 +49,11 @@ def q1_expensive_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders → filter(amount ≥ threshold) → sink. The filter is a Catalyst
     predicate pushed into the parquet scan (PushedFilters), which the
     reference cannot do (it deserializes every record first, SURVEY §4.1)."""
-    orders = load_table(spark, sf_dir, "orders")
+    return expensive_orders(load_table(spark, sf_dir, "orders"))
+
+
+def expensive_orders(orders: DataFrame) -> DataFrame:
+    """Q1's filter and projection, on batch or streaming orders."""
     out = ops.filter_records(orders, F.col("o_totalprice") >= EXPENSIVE)
     return out.select(
         "o_orderkey",
@@ -126,7 +132,39 @@ def q4_products_per_user_10s(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _discount_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
+def profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The per-user profile KTable (:156-157): customer → segment, nation."""
+    return load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_nationkey", "c_mktsegment"
+    )
+
+
+def payment_rows(lineitem: DataFrame) -> DataFrame:
+    """The payments stream's columns: lineitem plays the payments (:177)."""
+    return lineitem.select("l_orderkey", "l_linenumber", "l_shipdate", "l_linestatus")
+
+
+def paid_within_30_days(
+    orders: DataFrame, payments: DataFrame, left_key: str = "o_orderkey", how: str = "inner"
+) -> DataFrame:
+    """J3 as the fixtures play it: each order's paid line items
+    (``l_linestatus = 'F'``, the reference's ``status == "PAID"``, :179-180)
+    shipped within [orderdate, +30 d] (``JoinWindows``, :182)."""
+    return interval_join(
+        orders,
+        payments,
+        left_key=left_key,
+        right_key="l_orderkey",
+        left_ts="o_orderdate",
+        right_ts="l_shipdate",
+        lower="0 days",
+        upper="30 days",
+        extra_condition=payments["l_linestatus"] == "F",
+        how=how,
+    )
+
+
+def discount_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The GlobalKTable analogue (:159-160): a small broadcast dim mapping
     nation → discount multiplier. Deterministic derivation keeps the oracle
     expressible: discount = 1 - 0.01 * (n_nationkey % 5)."""
@@ -173,14 +211,16 @@ def q5_paid_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkey with the time predicate as residual — the same state-bounding
     the reference gets from JoinWindows retention."""
     orders = load_table(spark, sf_dir, "orders")
-    profiles = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey", "c_mktsegment"
-    )
-    payments = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_shipdate", "l_linestatus"
-    )
-    dim = _discount_dim(spark, sf_dir)
+    profiles = profile_table(spark, sf_dir)
+    payments = payment_rows(load_table(spark, sf_dir, "lineitem"))
+    return paid_orders(orders, profiles, payments, discount_dim(spark, sf_dir))
 
+
+def paid_orders(
+    orders: DataFrame, profiles: DataFrame, payments: DataFrame, dim: DataFrame
+) -> DataFrame:
+    """Q5's J1 → J2 → discount → re-key → J3 chain, on batch or streaming
+    orders and payments (``profiles`` and ``dim`` are static tables)."""
     enriched = enrich_join(orders, profiles, on=orders["o_custkey"] == profiles["c_custkey"])
     with_discount = global_lookup_join(
         enriched, dim, key_extractor=F.col("c_nationkey"), dim_key="n_nationkey"
@@ -195,18 +235,7 @@ def q5_paid_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("o_totalprice") * F.col("discount_mult") * 100 + 0.5) / 100,
     )
     rekeyed = ops.select_key(discounted, F.col("o_orderkey"), key_name="order_key")
-
-    paid = interval_join(
-        rekeyed,
-        payments,
-        left_key="order_key",
-        right_key="l_orderkey",
-        left_ts="o_orderdate",
-        right_ts="l_shipdate",
-        lower="0 days",
-        upper="30 days",
-        extra_condition=payments["l_linestatus"] == "F",
-    )
+    paid = paid_within_30_days(rekeyed, payments, left_key="order_key")
     return paid.select(
         "o_orderkey",
         "l_linenumber",
@@ -272,21 +301,13 @@ def join_left_interval_unpaid(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
     )
-    payments = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_shipdate", "l_linestatus"
-    )
-    joined = interval_join(
-        orders,
-        payments,
-        left_key="o_orderkey",
-        right_key="l_orderkey",
-        left_ts="o_orderdate",
-        right_ts="l_shipdate",
-        lower="0 days",
-        upper="30 days",
-        extra_condition=payments["l_linestatus"] == "F",
-        how="left_outer",
-    )
+    return unpaid_audit(orders, payment_rows(load_table(spark, sf_dir, "lineitem")))
+
+
+def unpaid_audit(orders: DataFrame, payments: DataFrame) -> DataFrame:
+    """Every order with its payments inside [orderdate, +30 d], null-padded
+    when it has none, on batch or streaming orders and payments."""
+    joined = paid_within_30_days(orders, payments, how="left_outer")
     return joined.select(
         "o_orderkey",
         "o_custkey",

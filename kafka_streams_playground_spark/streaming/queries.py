@@ -11,6 +11,19 @@ Twin-to-oracle link: ``plans/__init__`` imports every batch module before
 this one, so a twin reads its batch oracle when it is decorated —
 ``oracle=REGISTRY["<batch name>"].oracle`` — or builds it from the batch
 module's constants. Nothing rewrites a registry entry after registration.
+
+One body per relation: a twin that computes its batch twin's relation
+does not restate the transformation. The batch module splits its query
+into plain ``DataFrame -> DataFrame`` functions (the row or substrate
+stage, and the epilogue where there is one); the registered batch query
+keeps only its ``load_table`` calls, and the twin keeps only its stream
+reads, watermarks, ``run_to_completion`` drains and final-state reduce,
+calling the same functions in between. Twins read every stream through
+this module's ``read_stream_table`` name: the split-replay and lateness
+audits patch that name to feed segmented replays, so a shared function
+must take the stream as an argument and never read one itself.
+``tests/test_queries_oracle.py`` fails on a twin that shares more than
+four consecutive code lines with its batch query.
 This is the last module that registers, so it ends by moving the driver's
 priority names to the front (``plans.registry._reorder_registry``); the
 order is the same whether a program imports this module or ``plans`` first.
@@ -27,8 +40,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_playground_spark.operators.aggregations import tumbling_count
-from kafka_streams_playground_spark.operators.joins import interval_join
+from kafka_streams_playground_spark.plans import northstar_curation as _NC
 from kafka_streams_playground_spark.plans import northstar_pipeline as _NP
+from kafka_streams_playground_spark.plans import northstar_stats as _NS
+from kafka_streams_playground_spark.plans import relational as _REL
+from kafka_streams_playground_spark.plans import temporal as _TEMP
+from kafka_streams_playground_spark.plans import topologies as _TOPO
 from kafka_streams_playground_spark.plans.northstar_curation import (
     C4_MIN_WORDS,
     _C4_SEG_RE,
@@ -117,54 +134,20 @@ def stream_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     Physical: the stream-stream join is StreamingSymmetricHashJoinExec keyed
     on orderkey; watermarks bound both state stores exactly like the
     reference's join-window retention."""
-    orders = read_stream_table(spark, sf_dir, "orders").withWatermark("o_orderdate", WATERMARK)
-    payments = (
-        read_stream_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_shipdate", "l_linestatus")
-        .withWatermark("l_shipdate", WATERMARK)
-    )
-    profiles = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey", "c_mktsegment"
-    )
-    nation = load_table(spark, sf_dir, "nation")
-    dim = nation.select(
-        "n_nationkey",
-        "n_name",
-        (F.lit(1.0) - F.lit(0.01) * (F.col("n_nationkey") % 5)).alias("discount_mult"),
-    )
-
-    enriched = orders.join(profiles, orders["o_custkey"] == profiles["c_custkey"])
-    with_discount = enriched.join(
-        F.broadcast(dim), enriched["c_nationkey"] == dim["n_nationkey"]
-    ).withColumn(
-        # floor(x*100+0.5)/100 — cross-engine-deterministic money rounding
-        # (see plans/topologies.py::q5_paid_orders)
-        "discounted_amount",
-        F.floor(F.col("o_totalprice") * F.col("discount_mult") * 100 + 0.5) / 100,
-    )
-    rekeyed = with_discount.withColumn("order_key", F.col("o_orderkey"))
-
-    paid = interval_join(
-        rekeyed,
-        payments,
-        left_key="order_key",
-        right_key="l_orderkey",
-        left_ts="o_orderdate",
-        right_ts="l_shipdate",
-        lower="0 days",
-        upper="30 days",
-        extra_condition=payments["l_linestatus"] == "F",
-    )
-    out = paid.select(
-        "o_orderkey",
-        "l_linenumber",
-        "o_custkey",
-        F.col("c_mktsegment").alias("profile"),
-        F.col("n_name").alias("nation"),
-        "discounted_amount",
-        F.unix_timestamp("l_shipdate").alias("paid_epoch"),
-    )
+    orders, payments = _order_payment_streams(spark, sf_dir)
+    profiles = _TOPO.profile_table(spark, sf_dir)
+    out = _TOPO.paid_orders(orders, profiles, payments, _TOPO.discount_dim(spark, sf_dir))
     return run_to_completion(out, output_mode="append")
+
+
+def _order_payment_streams(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The orders and payments (lineitem) replays of the J3 twins, each
+    watermarked on its event time."""
+    orders = read_stream_table(spark, sf_dir, "orders").withWatermark("o_orderdate", WATERMARK)
+    payments = _TOPO.payment_rows(read_stream_table(spark, sf_dir, "lineitem")).withWatermark(
+        "l_shipdate", WATERMARK
+    )
+    return orders, payments
 
 
 @query(
@@ -177,17 +160,7 @@ def stream_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     source → filter → sink pipeline on the streaming execution path. No
     state store, no watermark — one fused micro-batch stage, the same
     whole-stage-codegen'd filter as the batch plan (SURVEY §3.2)."""
-    from kafka_streams_playground_spark.plans.topologies import EXPENSIVE
-
-    orders = read_stream_table(spark, sf_dir, "orders")
-    out = orders.filter(F.col("o_totalprice") >= EXPENSIVE).select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        "o_totalprice",
-        F.unix_timestamp("o_orderdate").alias("order_epoch"),
-        "o_orderpriority",
-    )
+    out = _TOPO.expensive_orders(read_stream_table(spark, sf_dir, "orders"))
     return run_to_completion(out, output_mode="append")
 
 
@@ -535,36 +508,8 @@ def stream_join_left_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     because a payment could still arrive on the unbounded stream. Verified
     row-exact against Spark's eviction rule (202 in-horizon orders withheld
     at sf0.01)."""
-    orders = (
-        read_stream_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_orderdate")
-        .withWatermark("o_orderdate", WATERMARK)
-    )
-    payments = (
-        read_stream_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_shipdate", "l_linestatus")
-        .withWatermark("l_shipdate", WATERMARK)
-    )
-    joined = interval_join(
-        orders,
-        payments,
-        left_key="o_orderkey",
-        right_key="l_orderkey",
-        left_ts="o_orderdate",
-        right_ts="l_shipdate",
-        lower="0 days",
-        upper="30 days",
-        extra_condition=payments["l_linestatus"] == "F",
-        how="leftOuter",
-    )
-    out = joined.select(
-        "o_orderkey",
-        "o_custkey",
-        F.unix_timestamp("o_orderdate").alias("order_epoch"),
-        "l_linenumber",
-        F.unix_timestamp("l_shipdate").alias("paid_epoch"),
-    )
-    return run_to_completion(out, output_mode="append")
+    orders, payments = _order_payment_streams(spark, sf_dir)
+    return run_to_completion(_TOPO.unpaid_audit(orders, payments), output_mode="append")
 
 
 @query(
@@ -629,28 +574,8 @@ def stream_join_full_outer_interval(spark: SparkSession, sf_dir: str) -> DataFra
     Scale stance is the left-outer twin's: state is bounded by watermark ×
     arrival rate per side, keys co-partition on the join key, and the
     interval predicate prunes the in-state probe to the 30-day band."""
-    orders = (
-        read_stream_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_orderdate")
-        .withWatermark("o_orderdate", WATERMARK)
-    )
-    payments = (
-        read_stream_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_shipdate", "l_linestatus")
-        .withWatermark("l_shipdate", WATERMARK)
-    )
-    joined = interval_join(
-        orders,
-        payments,
-        left_key="o_orderkey",
-        right_key="l_orderkey",
-        left_ts="o_orderdate",
-        right_ts="l_shipdate",
-        lower="0 days",
-        upper="30 days",
-        extra_condition=payments["l_linestatus"] == "F",
-        how="fullOuter",
-    )
+    orders, payments = _order_payment_streams(spark, sf_dir)
+    joined = _TOPO.paid_within_30_days(orders, payments, how="fullOuter")
     out = joined.select(
         "o_orderkey",
         "o_custkey",
@@ -705,27 +630,8 @@ def stream_q5_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     delay - 30 d`` and a day window emits iff its end is at or below that
     (verified empirically: the 6 join-fed day windows inside the delayed
     horizon at sf0.01 are withheld, everything older emits)."""
-    orders = (
-        read_stream_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_orderdate", "o_totalprice")
-        .withWatermark("o_orderdate", WATERMARK)
-    )
-    payments = (
-        read_stream_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_shipdate", "l_linestatus")
-        .withWatermark("l_shipdate", WATERMARK)
-    )
-    paid = interval_join(
-        orders,
-        payments,
-        left_key="o_orderkey",
-        right_key="l_orderkey",
-        left_ts="o_orderdate",
-        right_ts="l_shipdate",
-        lower="0 days",
-        upper="30 days",
-        extra_condition=payments["l_linestatus"] == "F",
-    )
+    orders, payments = _order_payment_streams(spark, sf_dir)
+    paid = _TOPO.paid_within_30_days(orders, payments)
     daily = paid.groupBy(F.window("o_orderdate", "1 day").alias("window")).agg(
         F.count(F.lit(1)).alias("n_paid"),
         F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")).alias(
@@ -801,25 +707,11 @@ def stream_pipeline_quality_filter(spark: SparkSession, sf_dir: str) -> DataFram
     deduped = ev.withColumn("text_hash", F.md5("text")).dropDuplicatesWithinWatermark(
         ["text_hash"]
     )
-    toks = F.split("text", " ")
-    stop_arr = F.array(*[F.lit(s) for s in ("the", "a", "of", "and", "to", "in")])
-    feat = deduped.select(
-        "text_hash",
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        (F.size(F.array_distinct(toks)) / F.size(toks)).alias("ttr"),
-        (F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))) / F.size(toks)).alias(
-            "stop_ratio"
-        ),
-    )
-    qs = F.round(
-        0.5 * F.col("ttr")
-        + 0.3 * F.col("stop_ratio")
-        + 0.2 * F.least(F.col("n_tokens") / 256.0, F.lit(1.0)),
-        4,
-    )
+    feat = _NP.quality_features(deduped, "text_hash")
+    qs = _NP.quality_score()
     out = feat.select(
         "text_hash",
-        "n_tokens",
+        F.col("n_tokens").cast("bigint").alias("n_tokens"),
         F.when(F.col("n_tokens") < _NP.MIN_TOKENS, "too_short")
         .when(F.col("n_tokens") > _NP.MAX_TOKENS, "too_long")
         .when(qs < _NP.MIN_QUALITY, "low_quality")
@@ -1073,27 +965,7 @@ def stream_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch twin is shuffle-free, so the streaming form has no state store
     and no watermark); the drained output IS the batch manifest
     row-for-row, so the batch DuckDB oracle applies unchanged."""
-    from kafka_streams_playground_spark.plans.northstar_curation import (
-        CHUNK_STRIDE,
-        CHUNK_WIN,
-    )
-
-    docs = read_stream_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
-    n = F.size(toks)
-    c = docs.select(
-        "doc_id",
-        toks.alias("t"),
-        F.explode(F.sequence(F.lit(1), n, F.lit(CHUNK_STRIDE))).alias("s"),
-    )
-    nt = F.size(F.col("t"))
-    out = c.select(
-        "doc_id",
-        (((F.col("s") - 1) / CHUNK_STRIDE).cast("bigint")).alias("chunk_idx"),
-        F.col("s").cast("bigint").alias("start_tok"),
-        F.least(F.lit(CHUNK_WIN), nt - F.col("s") + 1).cast("bigint").alias("n_tok"),
-        F.md5(F.array_join(F.slice(F.col("t"), F.col("s"), CHUNK_WIN), " ")).alias("fp"),
-    )
+    out = _NC.chunk_rows(read_stream_table(spark, sf_dir, "documents"))
     return run_to_completion(out, output_mode="append")
 
 
@@ -1115,30 +987,11 @@ def stream_events_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch twin row-for-row and the batch oracle applies unchanged; in
     deployment the static side refreshes on a schedule and the oracle is
     the nightly batch audit)."""
-    ev_b = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
+    stats = _TEMP.type_moments(
+        _TEMP.event_cents(load_table(spark, sf_dir, "events"), "event_type")
     )
-    stats = ev_b.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("cents").alias("s1"),
-        F.sum(F.col("cents") * F.col("cents")).alias("s2"),
-    )
-    stream = read_stream_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    j = stream.join(F.broadcast(stats), "event_type")
-    nd = F.col("n").cast("double")
-    cd = F.col("cents").cast("double")
-    s1d = F.col("s1").cast("double")
-    s2d = F.col("s2").cast("double")
-    dev = nd * cd - s1d
-    out = j.filter(dev * dev > 9.0 * (nd * s2d - s1d * s1d)).select(
-        "event_id", "event_type", "cents"
-    )
-    return run_to_completion(out, output_mode="append")
+    stream = _TEMP.event_cents(read_stream_table(spark, sf_dir, "events"), "event_id", "event_type")
+    return run_to_completion(_TEMP.flag_outliers(stream, stats), output_mode="append")
 
 
 @query(
@@ -1210,29 +1063,14 @@ def stream_ts_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-scaled exact integers, so the drained ordered replay equals the
     batch twin bit-for-bit whatever the micro-batch boundaries (each
     event emits exactly once, append mode — 3-batch-replay audited)."""
-    from kafka_streams_playground_spark.plans.temporal import CUSUM_K_CENTS
     from kafka_streams_playground_spark.streaming.stateful import cusum_per_key
 
-    m = (
-        load_table(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-        )
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("cents").alias("s"))
+    m = _TEMP.cusum_baseline(
+        _TEMP.event_cents(load_table(spark, sf_dir, "events"), "event_type")
     )
-    stream = read_stream_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    j = stream.join(F.broadcast(m), "event_type").withColumn(
-        "inc",
-        F.col("cents") * F.col("n") - F.col("s") - F.col("n") * CUSUM_K_CENTS,
-    )
-    return run_to_completion(cusum_per_key(j), output_mode="append")
+    cols = ("event_id", "event_type", "ts")
+    stream = _TEMP.event_cents(read_stream_table(spark, sf_dir, "events"), *cols)
+    return run_to_completion(cusum_per_key(_TEMP.cusum_increments(stream, m)), output_mode="append")
 
 
 @query(
@@ -1334,18 +1172,7 @@ def stream_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 13, when gram_partials started carrying cnt on EVERY row (the
     # old diagonal-only cnt made this pick arbitrary off the diagonal;
     # found by the split-replay audit)
-    from pyspark.sql import Window as _W
-
-    last = (
-        drained.withColumn(
-            "rn",
-            F.row_number().over(
-                _W.partitionBy("i", "j").orderBy(F.col("cnt").desc())
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    last = latest_update_state(drained, ["i", "j"], F.col("cnt"))
     return assemble_covariance(last.persist())
 
 
@@ -1371,33 +1198,13 @@ def stream_stats_ols_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     because every partial the stream folds is exactly the partial the
     batch job would produce — mergeability across partitions IS
     mergeability across micro-batches."""
-    from kafka_streams_playground_spark.plans.northstar_stats import (
-        ols_assemble,
-        ols_point_columns,
-        ols_sufficient_stats,
-    )
-
-    li = ols_point_columns(read_stream_table(spark, sf_dir, "lineitem"))
-    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    pts = li.join(F.broadcast(sup), li["l_suppkey"] == sup["s_suppkey"]).join(
-        F.broadcast(nat), sup["s_nationkey"] == nat["n_nationkey"]
-    )
-    drained = run_to_completion(ols_sufficient_stats(pts), output_mode="update")
+    lineitem = read_stream_table(spark, sf_dir, "lineitem")
+    pts = _NS.ols_nation_points(spark, sf_dir, lineitem)
+    drained = run_to_completion(_NS.ols_sufficient_stats(pts), output_mode="update")
     # update-mode memory sink keeps every emission; the LAST row per nation
     # (monotone n) is the final state — exact for the single-file replay
     # and guards a multi-batch one.
-    from pyspark.sql import Window as _W
-
-    last = (
-        drained.withColumn(
-            "rn",
-            F.row_number().over(_W.partitionBy("n_name").orderBy(F.col("n").desc())),
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    return ols_assemble(last)
+    return _NS.ols_assemble(latest_update_state(drained, "n_name", F.col("n")))
 
 
 @query(
@@ -1448,25 +1255,8 @@ def stream_dedup_incremental_new_vs_base(spark: SparkSession, sf_dir: str) -> Da
     )
     cand = new_bands.join(F.broadcast(base_bands), ["band_idx", "bucket"])
     verified = cand.join(F.broadcast(base_hs), "base_id")
-    jac = T.jaccard(F.col("hsb"), F.col("hsn"))
-    scored = verified.filter(jac >= ND.JACCARD_THRESHOLD).select(
-        "new_id", "base_id", F.round(jac, 4).alias("jaccard")
-    )
-    drained = run_to_completion(scored, output_mode="append")
-
-    from pyspark.sql import Window as _W
-
-    best = drained.withColumn(
-        "rn",
-        F.row_number().over(
-            _W.partitionBy("new_id").orderBy(
-                F.col("jaccard").desc(), F.col("base_id").asc()
-            )
-        ),
-    ).filter(F.col("rn") == 1)
-    return best.select(
-        F.col("new_id").alias("doc_id"), F.col("base_id").alias("dup_of"), "jaccard"
-    )
+    drained = run_to_completion(ND.verified_pairs(verified), output_mode="append")
+    return ND.best_base_match(drained)
 
 
 @query(
@@ -1489,58 +1279,10 @@ def stream_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFram
     manifest row-for-row and the batch oracle applies unchanged."""
     import hashlib
 
-    from kafka_streams_playground_spark.plans import northstar_curation as NC
-
-    docs_b = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    tok = docs_b.select(
-        "lang", F.explode(F.split("text", " ")).alias("tok")
-    ).select(
-        "lang",
-        (
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit("dsir:"), F.col("tok"))), 1, 8),
-                16,
-                10,
-            ).cast("long")
-            % NC.DSIR_BUCKETS
-        ).alias("bucket"),
-    )
-    rcnt = tok.groupBy("bucket").agg(F.count(F.lit(1)).alias("rc"))
-    tcnt = (
-        tok.filter(F.col("lang") == NC.DSIR_TARGET_LANG)
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("tc"))
-    )
-    tots = tok.agg(
-        F.sum(F.when(F.col("lang") == NC.DSIR_TARGET_LANG, 1).otherwise(0)).alias(
-            "t_tot"
-        ),
-        F.count(F.lit(1)).alias("r_tot"),
-    ).collect()[0]  # bounded: 1 row of scalars
-    t_tot, r_tot = tots["t_tot"], tots["r_tot"]
-    lr_rows = (
-        rcnt.join(tcnt, "bucket", "left")
-        .select(
-            "bucket",
-            F.floor(
-                F.log(
-                    (
-                        (F.coalesce(F.col("tc"), F.lit(0)) + 1.0)
-                        * (F.lit(r_tot) + NC.DSIR_BUCKETS)
-                    )
-                    / ((F.col("rc") + 1.0) * (F.lit(t_tot) + NC.DSIR_BUCKETS))
-                )
-                * 1000000
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("lr6"),
-        )
-        .collect()
-    )  # bounded: <= DSIR_BUCKETS rows, NOT corpus-sized
-    lr_map = {r["bucket"]: r["lr6"] for r in lr_rows}
-    bcast = spark.sparkContext.broadcast(lr_map)
-    n_buckets = NC.DSIR_BUCKETS
+    model = _NC.dsir_model(_NC.dsir_token_buckets(load_table(spark, sf_dir, "documents")))
+    # bounded: <= DSIR_BUCKETS rows, NOT corpus-sized
+    bcast = spark.sparkContext.broadcast({r["bucket"]: r["lr6"] for r in model.collect()})
+    n_buckets = _NC.DSIR_BUCKETS
 
     stream = read_stream_table(spark, sf_dir, "documents").select("doc_id", "text")
 
@@ -1593,37 +1335,8 @@ def stream_stats_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFr
     histogram quantiles running forever. Drained final counters equal the
     batch histogram bucket-for-bucket, so the batch oracle applies
     unchanged."""
-    from kafka_streams_playground_spark.plans import northstar_stats as NS
-
-    ev = read_stream_table(spark, sf_dir, "events").select(
-        F.floor("value").cast("bigint").alias("bucket")
-    )
-    h_stream = ev.groupBy("bucket").agg(F.count(F.lit(1)).alias("cnt"))
-    h = run_to_completion(h_stream, output_mode="complete")
-
-    from pyspark.sql import Window as _W
-
-    w = _W.orderBy("bucket").rowsBetween(_W.unboundedPreceding, _W.currentRow)
-    # O(grid) unpartitioned window + 1-row broadcast total — the batch twin's
-    # documented bounded shapes, applied to the drained histogram.
-    c = h.select("bucket", "cnt", F.sum("cnt").over(w).alias("cum"))
-    tot = h.agg(F.sum("cnt").alias("n_total"))
-    qs = spark.createDataFrame([(q,) for q in NS.HQ_TARGETS_PPM], "q_ppm bigint")
-    probe = (
-        c.crossJoin(F.broadcast(tot))
-        .join(
-            F.broadcast(qs),
-            F.expr(
-                "CAST(cum AS DECIMAL(38,0)) * 1000000"
-                " >= CAST(q_ppm AS DECIMAL(38,0)) * n_total"
-            ),
-        )
-        .groupBy("q_ppm", "n_total")
-        .agg(F.min("bucket").alias("bucket_lo"))
-    )
-    return probe.select(
-        "q_ppm", "n_total", "bucket_lo", (F.col("bucket_lo") + 1).alias("bucket_hi")
-    )
+    h = _NS.value_histogram(read_stream_table(spark, sf_dir, "events"))
+    return _NS.histogram_quantiles(run_to_completion(h, output_mode="complete"))
 
 
 @query(
@@ -1641,37 +1354,8 @@ def stream_ts_multi_granularity_rollup(spark: SparkSession, sf_dir: str) -> Data
     the batch rollup row-for-row — the batch oracle applies unchanged.
     State is O(buckets × types) — dashboard-sized, stream-lifetime
     bounded by retention × grain count, never event count."""
-    from kafka_streams_playground_spark.plans.temporal import ROLLUP_GRAINS
-
-    ev = read_stream_table(spark, sf_dir, "events").select(
-        F.unix_timestamp("ts").alias("ep"),
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    pairs = ev.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(name).alias("grain"),
-                        F.expr(f"(ep div {g}) * {g}").alias("bucket_epoch"),
-                    )
-                    for name, g in ROLLUP_GRAINS
-                ]
-            )
-        ).alias("gb"),
-        "event_type",
-        "cents",
-    )
-    agg = pairs.groupBy(
-        F.col("gb.grain").alias("grain"),
-        F.col("gb.bucket_epoch").alias("bucket_epoch"),
-        "event_type",
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("cents").alias("sum_cents"),
-    )
-    return run_to_completion(agg, output_mode="complete")
+    counters = _TEMP.rollup_counters(read_stream_table(spark, sf_dir, "events"))
+    return run_to_completion(counters, output_mode="complete")
 
 
 @query(
@@ -1688,46 +1372,8 @@ def stream_drift_ks_value_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(value grid) for the stream's lifetime — the same bounded-counter
     economics as the histogram-quantile twin; a production deploy swaps
     the final drain for a per-trigger probe and alerts on ks_ppm."""
-    ev = read_stream_table(spark, sf_dir, "events").select(
-        (F.col("event_id") % 2).alias("half"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    grid = ev.groupBy("cents").agg(
-        F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).alias("ca"),
-        F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).alias("cb"),
-    )
-    g = run_to_completion(grid, output_mode="complete")
-
-    from pyspark.sql import Window as _W
-
-    wc = _W.orderBy("cents").rowsBetween(_W.unboundedPreceding, _W.currentRow)
-    wall = _W.partitionBy()
-    c = g.select(
-        "cents",
-        F.sum("ca").over(wc).alias("cuma"),
-        F.sum("cb").over(wc).alias("cumb"),
-        F.sum("ca").over(wall).alias("na"),
-        F.sum("cb").over(wall).alias("nb"),
-    )
-    d = c.select(
-        "cents",
-        F.abs(F.col("cuma") * F.col("nb") - F.col("cumb") * F.col("na")).alias("dnum"),
-        "na",
-        "nb",
-    )
-    m = d.agg(F.max("dnum").alias("d_num"))
-    return (
-        d.join(F.broadcast(m), d.dnum == F.col("d_num"))
-        .groupBy("na", "nb", "d_num")
-        .agg(F.min("cents").alias("at_cents"))
-        .select(
-            F.col("na").cast("bigint").alias("n_a"),
-            F.col("nb").cast("bigint").alias("n_b"),
-            F.col("d_num").cast("bigint").alias("d_num"),
-            "at_cents",
-            F.expr("cast(d_num * 1000000 div (na * nb) as bigint)").alias("ks_ppm"),
-        )
-    )
+    grid = _TEMP.ks_grid(read_stream_table(spark, sf_dir, "events"))
+    return _TEMP.ks_from_grid(run_to_completion(grid, output_mode="complete"))
 
 
 @query(
@@ -1745,69 +1391,12 @@ def stream_stats_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFram
     like the batch twin reads its replica table. Same md5 draws ⇒ the
     drained state is bit-equal to the batch pass and the batch oracle
     applies unchanged."""
-    from kafka_streams_playground_spark.plans.northstar_stats import (
-        BS_B,
-        _bs_weight_sql,
-    )
-
-    o = read_stream_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
-    )
-    u = (
-        "cast(conv(substr(md5(concat('bs:', cast(b as string), ':', "
-        "cast(o_orderkey as string))), 1, 8), 16, 10) as bigint)"
-    )
-    # compute the draw once per exploded row rather than relying on codegen
-    # to CSE the md5+conv out of the eight CASE branches (batch-twin shape)
-    w = (
-        o.select(
-            "o_orderkey",
-            "cents",
-            F.explode(F.sequence(F.lit(0), F.lit(BS_B - 1))).alias("b"),
-        )
-        .select("cents", "b", F.expr(u).alias("u64"))
-        .select("cents", "b", F.expr(_bs_weight_sql("u64")).alias("wt"))
-    )
-    reps_stream = w.groupBy("b").agg(
-        F.sum(F.col("wt") * F.col("cents")).alias("swc"),
-        F.sum("wt").alias("sw"),
-    )
-    # point-estimate accumulators ride the same stream as replica -1
-    point_stream = o.groupBy().agg(
-        F.sum("cents").alias("swc"), F.count(F.lit(1)).alias("sw")
-    )
-    reps = run_to_completion(reps_stream, output_mode="complete")
-    point = run_to_completion(point_stream, output_mode="complete")
-
-    from pyspark.sql import Window as _W
-
-    means = (
-        reps.filter(F.col("sw") > 0)
-        .select(F.expr("cast(swc div sw as bigint)").alias("mean_cents"))
-    )
-    ranked = means.select(
-        "mean_cents", F.row_number().over(_W.orderBy("mean_cents")).alias("rk")
-    )
-    lo_idx = -(-25 * BS_B // 1000)
-    hi_idx = -(-975 * BS_B // 1000)
-    lo = ranked.filter(F.col("rk") >= lo_idx).agg(
-        F.min("mean_cents").alias("ci_lo_cents")
-    )
-    hi = ranked.filter(F.col("rk") >= hi_idx).agg(
-        F.min("mean_cents").alias("ci_hi_cents")
-    )
-    pt = point.select(
-        F.expr("cast(swc div sw as bigint)").alias("mean_cents"),
-        F.col("sw").cast("bigint").alias("n_rows"),
-    )
-    return (
-        pt.withColumn("n_replicas", F.lit(BS_B).cast("bigint"))
-        .crossJoin(F.broadcast(lo))
-        .crossJoin(F.broadcast(hi))
-    )
+    o = _NS.bootstrap_cents(read_stream_table(spark, sf_dir, "orders"))
+    sums = _NS.bootstrap_replica_sums(_NS.bootstrap_weights(o))
+    reps = run_to_completion(sums, output_mode="complete")
+    # the point estimate is a second streaming query over the same replay
+    point = run_to_completion(_NS.bootstrap_point(o), output_mode="complete")
+    return _NS.bootstrap_ci(reps, point)
 
 
 @query(
@@ -1823,8 +1412,8 @@ def stream_stats_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFram
 def stream_curation_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-source document cap ONLINE — ``curation_source_cap`` as a
     keyed bounded-state stream: documents arrive, the fixed-weight
-    quality logit is computed row-locally (same codegen'd integer
-    features as the batch twin — stateless, at ingest), and a per-source
+    quality logit is computed row-locally (the batch twin's
+    ``quality_logits`` — stateless, at ingest), and a per-source
     top-K store (``streaming/stateful.py::_source_cap_topk``) keeps only
     the best CAP_PER_SOURCE (logit, doc_id) pairs, re-emitting each
     key's current kept set as an update-mode changelog. This is the
@@ -1837,40 +1426,11 @@ def stream_curation_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator's monotone ``n_seen`` marker (round 13), so the result IS
     the batch twin's kept prefix under any micro-batch boundaries and
     the oracle is the batch oracle restricted to kept = 1."""
-    from kafka_streams_playground_spark.plans.northstar_scoring import (
-        QC_BIAS_E6,
-        QC_W_LEN_E6,
-        QC_W_STOP_E6,
-        QC_W_TTR_E6,
-    )
-    from kafka_streams_playground_spark.plans.northstar_text import STOPWORDS
     from kafka_streams_playground_spark.streaming.stateful import (
         source_cap_per_key,
     )
 
-    docs = read_stream_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "text"
-    )
-    toks = F.split(F.col("text"), " ")
-    stop_arr = F.lit(list(STOPWORDS)).cast("array<string>")
-    f = docs.select(
-        "doc_id",
-        "source",
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        F.size(F.array_distinct(toks)).cast("bigint").alias("n_distinct"),
-        F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
-        .cast("bigint")
-        .alias("n_stop"),
-    )
-    logit = F.expr(
-        f"({QC_W_TTR_E6} * n_distinct) div n_tokens"
-        f" - ({QC_W_STOP_E6} * n_stop) div n_tokens"
-        f" + ({QC_W_LEN_E6} * least(n_tokens, 256)) div 256"
-        f" + {QC_BIAS_E6}"
-    )
-    scored = f.select(
-        "source", "doc_id", logit.cast("bigint").alias("logit_e6")
-    )
+    scored = _NC.quality_logits(read_stream_table(spark, sf_dir, "documents"))
     out = source_cap_per_key(scored)
     drained = run_to_completion(out, output_mode="update")
     # keep only each source's LAST kept-set snapshot (n_seen monotone;
@@ -2072,48 +1632,11 @@ def stream_stats_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFr
     over its 9-group aggregate. The monitor a payments ingest keeps live:
     a unit-mismatched or fabricated feed bends these nine counters within
     one micro-batch. Shares the batch oracle verbatim."""
-    from kafka_streams_playground_spark.plans.northstar_stats import (
-        _BENFORD_CASE,
-    )
-
-    cents = (
-        read_stream_table(spark, sf_dir, "orders")
-        .filter(F.col("o_totalprice") > 0)
-        .select(
-            F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents")
-        )
-    )
-    d = (
-        cents.select(
-            F.substring(F.col("cents").cast("string"), 1, 1)
-            .cast("long")
-            .alias("digit")
-        )
-        .groupBy("digit")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    d = _NS.benford_digit_counts(read_stream_table(spark, sf_dir, "orders"))
     drained = run_to_completion(d, output_mode="update")
     # compact to final state per digit (n strictly monotone; round 13 —
     # the raw drain's superseded counters double-counted in the total)
-    counts = latest_update_state(drained, "digit", F.col("n"))
-    spine = spark.range(1, 10).select(F.col("id").alias("digit"))
-    t = counts.agg(F.sum("n").alias("total"))
-    return (
-        spine.join(F.broadcast(counts), "digit", "left")
-        .crossJoin(F.broadcast(t))
-        .select(
-            "digit",
-            F.coalesce("n", F.lit(0)).cast("long").alias("n_orders"),
-            F.expr("CAST(coalesce(n, 0) * 1000000 div total AS BIGINT)").alias(
-                "obs_ppm"
-            ),
-            F.expr(f"CAST({_BENFORD_CASE} AS BIGINT)").alias("exp_ppm"),
-            F.expr(
-                f"CAST(coalesce(n, 0) * 1000000 div total - ({_BENFORD_CASE})"
-                " AS BIGINT)"
-            ).alias("dev_ppm"),
-        )
-    )
+    return _NS.benford_from_counts(latest_update_state(drained, "digit", F.col("n")))
 
 
 @query(
@@ -2151,7 +1674,6 @@ def stream_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_foreach_batch_writer,
     )
 
-    cents = F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents")
     tmp = tempfile.mkdtemp(prefix="ksp_upsert_")
     ckpt = tempfile.mkdtemp(prefix="ksp_ckpt_")
     try:
@@ -2159,8 +1681,7 @@ def stream_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             tmp, ["event_id"], "seq", tombstone_col="cents"
         )
         base = (
-            load_table(spark, sf_dir, "events")
-            .select("event_id", cents)
+            _REL.cdc_cents(load_table(spark, sf_dir, "events"))
             .filter(F.col("event_id") % 7 != 0)
             .withColumn("seq", F.lit(0).cast("long"))
         )
@@ -2168,21 +1689,13 @@ def stream_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # outside the streaming counter's range, so a replayed batch 0
         # can never collide with the seed version.
         writer(base, 10**9)
+        # a delete ships its NULL new value as a tombstone
         chg = (
-            read_stream_table(spark, sf_dir, "events")
-            .select("event_id", cents)
-            .filter(
-                (F.col("event_id") % 7 == 0)
-                | (F.col("event_id") % 11 == 0)
-                | (F.col("event_id") % 13 == 0)
-            )
+            _REL.cdc_cents(read_stream_table(spark, sf_dir, "events"))
+            .filter(_REL.cdc_is_change())
             .select(
                 "event_id",
-                # I keeps cents, U bumps by 100, D ships a tombstone NULL
-                F.when(F.col("event_id") % 7 == 0, F.col("cents"))
-                .when(F.col("event_id") % 11 == 0, F.col("cents") + 100)
-                .otherwise(F.lit(None).cast("long"))
-                .alias("cents"),
+                _REL.cdc_new_cents().alias("cents"),
                 F.lit(1).cast("long").alias("seq"),
             )
         )
@@ -2240,27 +1753,13 @@ def stream_ivm_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFr
     as the batch plan chooses; per-batch cost is O(|ΔB| + |view|),
     never O(|B|) — the IVM win this family exists to demonstrate."""
     a = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-
-    def b_cols(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col("l_orderkey").alias("b_orderkey"),
-            "l_returnflag",
-            "l_linenumber",
-            F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").alias("cents"),
-        )
-
-    b_old = b_cols(load_table(spark, sf_dir, "lineitem")).filter(
+    b_old = _REL.ivm_lineitem(load_table(spark, sf_dir, "lineitem")).filter(
         F.col("l_linenumber") % 3 != 0
     )
-    v_old = (
-        a.join(b_old, a.o_orderkey == b_old.b_orderkey)
-        .groupBy("o_orderstatus", "l_returnflag")
-        .agg(F.count(F.lit(1)).alias("n_rows"), F.sum("cents").alias("sum_cents"))
-    )
-    delta_b = b_cols(read_stream_table(spark, sf_dir, "lineitem")).filter(
+    delta_b = _REL.ivm_lineitem(read_stream_table(spark, sf_dir, "lineitem")).filter(
         F.col("l_linenumber") % 3 == 0
     )
-    return ivm_merge_views(v_old, ivm_delta_fold(spark, a, delta_b))
+    return _REL.ivm_merge(_REL.ivm_view(a, b_old), ivm_delta_fold(spark, a, delta_b))
 
 
 def ivm_delta_fold(spark: SparkSession, a: DataFrame, delta_b: DataFrame) -> DataFrame:
@@ -2273,26 +1772,9 @@ def ivm_delta_fold(spark: SparkSession, a: DataFrame, delta_b: DataFrame) -> Dat
     direct sum double-counts them — the single-file fixture replay (one
     micro-batch) masked exactly that. ``n_rows`` is strictly monotone in
     rows seen per group, so the max-n_rows row is the last emission."""
-    d_view = (
-        delta_b.join(a, delta_b.b_orderkey == a.o_orderkey)
-        .groupBy("o_orderstatus", "l_returnflag")
-        .agg(F.count(F.lit(1)).alias("n_rows"), F.sum("cents").alias("sum_cents"))
-    )
-    drained = run_to_completion(d_view, output_mode="update")
+    drained = run_to_completion(_REL.ivm_view(a, delta_b), output_mode="update")
     return latest_update_state(
         drained, ["o_orderstatus", "l_returnflag"], F.col("n_rows")
-    )
-
-
-def ivm_merge_views(v_old: DataFrame, d_final: DataFrame) -> DataFrame:
-    """v_old + Δv: a groupBy-sum over dashboard-sized aggregate rows."""
-    return (
-        v_old.unionByName(d_final)
-        .groupBy("o_orderstatus", "l_returnflag")
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("sum_cents").alias("sum_cents"),
-        )
     )
 
 
@@ -2311,10 +1793,10 @@ def stream_retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine leaderboard (the ``stream_topk_customers_by_revenue``
     continuous-top-k shape: per-doc aggregate state, sort over the state
     table, never over the stream). Query-time scoring — BM25 over the
-    drained index stats (formula and 1e-6 integer grid verbatim from
-    ``text_bm25_topk``), rank windows over the two k-row candidate
-    lists, reciprocal-rank fusion — is the batch epilogue, so the result
-    shares the batch oracle bit-for-bit.
+    drained index stats (``bm25_topk``, the scoring ``text_bm25_topk``
+    runs), rank windows over the two k-row candidate lists,
+    reciprocal-rank fusion (``rrf_fuse``) — is the batch epilogue, so the
+    result shares the batch oracle bit-for-bit.
 
     Scale stance: index-stat state is one counter per (doc, query-term)
     + one per doc; the leaderboard state is one row per scored doc with
@@ -2322,70 +1804,27 @@ def stream_retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches k+k rows. Per-document ingest cost is O(tokens + dims) with
     no stream-side shuffle beyond the two keyed aggregations — the
     always-fresh hybrid index a retrieval product actually runs."""
-    from pyspark.sql import Window as _W
-
+    from kafka_streams_playground_spark.plans import northstar_scoring as NSC
     from kafka_streams_playground_spark.plans.northstar_retrieval import (
-        RRF_K,
-        RRF_TOP,
         SEM_N,
         SEM_QUERY_ID,
+        cosine_scores,
+        rrf_fuse,
     )
-    from kafka_streams_playground_spark.plans.northstar_scoring import (
-        BM25_B,
-        BM25_K1,
-        BM25_TERMS,
-        BM25_TOP_K,
-    )
-    from kafka_streams_playground_spark.plans.northstar_similarity import (
-        _dot,
-        _dot_udf,
-        _vectors,
-    )
+    from kafka_streams_playground_spark.plans.northstar_similarity import _dot, _vectors
 
     # ---- lexical leg: the stream maintains the index statistics ----
     def tok_stream() -> DataFrame:
-        return read_stream_table(spark, sf_dir, "documents").select(
-            "doc_id", F.explode(F.split("text", " ")).alias("token")
-        )
+        return NSC.bm25_tokens(read_stream_table(spark, sf_dir, "documents"))
 
-    dl = run_to_completion(
-        tok_stream().groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")),
-        output_mode="update",
-    )
+    dl = run_to_completion(NSC.bm25_doc_lengths(tok_stream()), output_mode="update")
+    # tf self-joins in the scoring (df derives from it); the memory-sink view
+    # can't dedup its own references, so break lineage. O(matching doc-term
+    # pairs) rows — query-term-bounded, not corpus-bounded.
     tf = run_to_completion(
-        tok_stream()
-        .filter(F.col("token").isin(*BM25_TERMS))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf")),
-        output_mode="update",
-        # tf self-joins below (df derives from it); the memory-sink view
-        # can't dedup its own references, so break lineage. O(matching
-        # doc-term pairs) rows — query-term-bounded, not corpus-bounded.
+        NSC.bm25_term_freqs(tok_stream()), output_mode="update"
     ).localCheckpoint(eager=True)
-    # query-time scoring over the drained stats — formula verbatim from
-    # plans/northstar_scoring.py::text_bm25_topk (not refactored into a
-    # shared helper to leave the driver-green batch plan untouched)
-    tot = dl.agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl"))
-    dfq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    denom = F.col("tf") + BM25_K1 * (
-        1.0 - BM25_B + BM25_B * F.col("dl") / (F.col("sum_dl") * 1.0 / F.col("n_docs"))
-    )
-    c6 = F.floor(
-        idf * (F.col("tf") * (BM25_K1 + 1.0)) / denom * 1000000 + F.lit(0.5)
-    ).cast("bigint")
-    lex0 = (
-        tf.join(F.broadcast(dfq), "token")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(tot))
-        .select("doc_id", c6.alias("c6"))
-        .groupBy("doc_id")
-        .agg(F.sum("c6").alias("score6"))
-        .orderBy(F.col("score6").desc(), F.col("doc_id").asc())
-        .limit(BM25_TOP_K)
-    )
-    w_lex = _W.orderBy(F.col("score6").desc(), F.col("doc_id").asc())
-    lex = lex0.withColumn("lex_rank", F.row_number().over(w_lex))
+    lex0 = NSC.bm25_topk(dl, tf)  # query-time scoring over the drained stats
 
     # ---- dense leg: complete-mode cosine leaderboard over vector state ----
     qv = (
@@ -2404,45 +1843,14 @@ def stream_retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
         .withColumn("one", F.lit(1))
     )
-    sc = emb_s.join(F.broadcast(qv), "one").select(
-        F.col("vec_id").alias("doc_id"),
-        F.round(
-            _dot_udf(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
-        ).alias("cosine"),
-    )
+    sc = cosine_scores(emb_s.join(F.broadcast(qv), "one"))
     leader = (
         sc.groupBy("doc_id")
         .agg(F.max("cosine").alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col("doc_id").asc())
         .limit(SEM_N)
     )
-    sem0 = run_to_completion(leader, output_mode="complete")
-    w_sem = _W.orderBy(F.col("cosine").desc(), F.col("doc_id").asc())
-    sem = sem0.withColumn("sem_rank", F.row_number().over(w_sem))
-
-    # ---- fusion epilogue (identical to the batch form) ----
-    fused = (
-        lex.select("doc_id", "lex_rank")
-        .join(sem.select("doc_id", "sem_rank"), "doc_id", "full_outer")
-        .select(
-            "doc_id",
-            F.coalesce("lex_rank", F.lit(0)).alias("lex_rank"),
-            F.coalesce("sem_rank", F.lit(0)).alias("sem_rank"),
-        )
-    )
-    contrib = lambda c: F.when(  # noqa: E731
-        F.col(c) > 0, F.floor(F.lit(1000000) / (F.lit(RRF_K) + F.col(c)))
-    ).otherwise(F.lit(0))
-    return (
-        fused.select(
-            "doc_id",
-            "lex_rank",
-            "sem_rank",
-            (contrib("lex_rank") + contrib("sem_rank")).cast("bigint").alias("rrf6"),
-        )
-        .orderBy(F.col("rrf6").desc(), F.col("doc_id").asc())
-        .limit(RRF_TOP)
-    )
+    return rrf_fuse(lex0, run_to_completion(leader, output_mode="complete"))
 
 
 @query(
@@ -2515,31 +1923,7 @@ def stream_stats_countmin_user_traffic(spark: SparkSession, sf_dir: str) -> Data
     batch-side over the drained sketch, sharing the batch oracle
     verbatim. State: D×W = 256 counters forever — the whole point of
     CMS at ingest; at 100 TB only W is retuned to bound n/W error."""
-    from kafka_streams_playground_spark.plans.northstar_stats import (
-        CM_DEPTH,
-        CM_TOP,
-        CM_WIDTH,
-    )
-
-    ev_s = read_stream_table(spark, sf_dir, "events").select("user_id")
-
-    def bucket(r: int):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"cm{r}:"), F.col("user_id").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % CM_WIDTH
-        )
-
-    inc = ev_s.select(
-        F.posexplode(F.array(*[bucket(r) for r in range(CM_DEPTH)])).alias("r", "b")
-    )
+    inc = read_stream_table(spark, sf_dir, "events").select(_NS.countmin_cells())
     sketch = latest_update_state(
         # compact to final state per cell (sc strictly monotone; round 13 —
         # the raw drain's superseded partials made min-over-rows read a
@@ -2552,22 +1936,8 @@ def stream_stats_countmin_user_traffic(spark: SparkSession, sf_dir: str) -> Data
         F.col("sc"),
     )
     # batch epilogue: exact top-10 readback against the drained counters
-    ev = load_table(spark, sf_dir, "events").select("user_id")
-    cnt = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("cnt"))
-    buckets = cnt.select(
-        "user_id",
-        "cnt",
-        F.posexplode(F.array(*[bucket(r) for r in range(CM_DEPTH)])).alias("r", "b"),
-    )
-    est = (
-        buckets.join(F.broadcast(sketch), ["r", "b"])
-        .groupBy("user_id")
-        .agg(F.min("sc").alias("est"))
-    )
-    top = cnt.orderBy(F.col("cnt").desc(), F.col("user_id").asc()).limit(CM_TOP)
-    return F.broadcast(top).join(est, "user_id").select(
-        "user_id", "cnt", "est", (F.col("est") - F.col("cnt")).alias("overcount")
-    )
+    cnt, buckets = _NS.countmin_user_cells(load_table(spark, sf_dir, "events"))
+    return _NS.countmin_readback(cnt, buckets, sketch)
 
 
 @query(
@@ -2585,23 +1955,7 @@ def stream_privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     release/generalize/suppress ladder) is the batch epilogue over the
     drained dashboard-sized counter relation; single-drain replay makes
     it the batch result exactly, sharing the batch oracle."""
-    from kafka_streams_playground_spark.plans.northstar_curation import (
-        ACCTBAL_LOW_CENTS,
-        KANON_K,
-        LDIV_L,
-    )
-
-    c = read_stream_table(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").cast("long").alias("nation"),
-        F.col("c_mktsegment").alias("segment"),
-        F.when(F.col("c_acctbal") < 0, F.lit("neg"))
-        .when(
-            F.floor(F.col("c_acctbal") * 100 + 0.5).cast("long") < ACCTBAL_LOW_CENTS,
-            F.lit("low"),
-        )
-        .otherwise(F.lit("high"))
-        .alias("sens"),
-    )
+    c = _NC.kanon_bands(read_stream_table(spark, sf_dir, "customer"))
     cells = latest_update_state(
         # compact to final state per (class, band) cell (n monotone;
         # round 13 — superseded partials otherwise inflate class_size
@@ -2617,18 +1971,7 @@ def stream_privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").alias("class_size"),
         F.count(F.lit(1)).alias("n_sensitive"),
     )
-    return cls.select(
-        "nation",
-        "segment",
-        F.col("class_size").cast("long").alias("class_size"),
-        F.col("n_sensitive").cast("long").alias("n_sensitive"),
-        (F.col("class_size") >= KANON_K).cast("int").alias("k_anonymous"),
-        (F.col("n_sensitive") >= LDIV_L).cast("int").alias("l_diverse"),
-        F.when(F.col("class_size") >= KANON_K, F.lit("release"))
-        .when(F.col("class_size") >= KANON_K // 2, F.lit("generalize"))
-        .otherwise(F.lit("suppress"))
-        .alias("action"),
-    )
+    return _NC.kanon_verdict(cls)
 
 
 @query(
@@ -2699,26 +2042,8 @@ def stream_join_interval_overlap_bins(spark: SparkSession, sf_dir: str) -> DataF
     dropDuplicates). The drained result equals the batch query's, so the
     NAIVE-QUADRATIC range-join oracle value-checks streaming completeness
     too."""
-    from kafka_streams_playground_spark.plans.temporal import (
-        BURST_GAP_S,
-        SESSION_GAP_S,
-        interval_islands,
-    )
-
     events = load_table(spark, sf_dir, "events")
-    sessions = interval_islands(events, "user_id", "session_no", SESSION_GAP_S).select(
-        "user_id",
-        "session_no",
-        F.col("i_start").alias("s_start"),
-        F.col("i_end").alias("s_end"),
-    )
-    bursts = interval_islands(events, "event_type", "burst_no", BURST_GAP_S).select(
-        "event_type",
-        "burst_no",
-        F.col("i_start").alias("b_start"),
-        F.col("i_end").alias("b_end"),
-    )
-    return _replay_interval_bin_join(sessions, bursts)
+    return _replay_interval_bin_join(*_TEMP.session_burst_intervals(events))
 
 
 def _replay_interval_bin_join(
@@ -2777,30 +2102,12 @@ def _replay_interval_bin_join(
 
         sb = bins(sessions, "sessions", "user_id", "s_start", "s_end", "sbin", "sbin_ts")
         bb = bins(bursts, "bursts", "event_type", "b_start", "b_end", "bbin", "bbin_ts")
-        joined = sb.join(bb, F.col("sbin_ts") == F.col("bbin_ts")).filter(
-            (F.col("s_start") <= F.col("b_end"))
-            & (F.col("b_start") <= F.col("s_end"))
-        )
-        out = joined.select(
-            "user_id",
-            "session_no",
-            "event_type",
-            "burst_no",
-            "s_start",
-            "s_end",
-            "b_start",
-            "b_end",
-            (
-                F.least(F.col("s_end"), F.col("b_end"))
-                - F.greatest(F.col("s_start"), F.col("b_start"))
-            ).alias("overlap_s"),
-        )
+        joined = sb.join(bb, F.col("sbin_ts") == F.col("bbin_ts"))
+        out = _TEMP.overlap_rows(joined.filter(_TEMP.intervals_overlap()))
         drained = run_to_completion(out, output_mode="append")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return drained.dropDuplicates(
-        ["user_id", "session_no", "event_type", "burst_no"]
-    )
+    return drained.dropDuplicates(_TEMP.OVERLAP_PAIR_KEY)
 
 
 def _session_window_intervals(
@@ -2936,27 +2243,10 @@ def stream_session_window_interval_overlap(spark: SparkSession, sf_dir: str) -> 
     drained result equals the batch query's (session_window's merge rule
     IS the islands rule, see ``_session_window_intervals``), so the
     NAIVE-QUADRATIC range-join oracle value-checks the whole pipeline."""
-    from kafka_streams_playground_spark.plans.temporal import (
-        BURST_GAP_S,
-        SESSION_GAP_S,
-    )
-
     events = load_table(spark, sf_dir, "events")
-    sessions = _session_window_intervals(
-        spark, events, "user_id", SESSION_GAP_S, "session_no"
-    ).select(
-        "user_id",
-        "session_no",
-        F.col("i_start").alias("s_start"),
-        F.col("i_end").alias("s_end"),
-    )
-    bursts = _session_window_intervals(
-        spark, events, "event_type", BURST_GAP_S, "burst_no"
-    ).select(
-        "event_type",
-        "burst_no",
-        F.col("i_start").alias("b_start"),
-        F.col("i_end").alias("b_end"),
+    sessions, bursts = _TEMP.overlap_intervals(
+        _session_window_intervals(spark, events, "user_id", _TEMP.SESSION_GAP_S, "session_no"),
+        _session_window_intervals(spark, events, "event_type", _TEMP.BURST_GAP_S, "burst_no"),
     )
     return _replay_interval_bin_join(sessions, bursts)
 

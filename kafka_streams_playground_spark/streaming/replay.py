@@ -111,13 +111,13 @@ def split_late_segments(
     Raises if ``late_pred`` selects no rows (the test would silently
     assert nothing) or selects everything (no on-time segment would
     advance the watermark)."""
-    on_time = df.filter(~late_pred)
-    late = df.filter(late_pred)
-    if late.count() == 0:
+    # both vacuity checks from ONE pass over the input
+    n_late, n_on_time = df.agg(F.count_if(late_pred), F.count_if(~late_pred)).first()
+    if n_late == 0:
         raise ValueError("late_pred selects no rows; the lateness axis is vacuous")
-    if on_time.count() == 0:
+    if n_on_time == 0:
         raise ValueError("late_pred selects every row; no on-time segment remains")
-    return split_segments(on_time, order_cols, cuts) + [late]
+    return split_segments(df.filter(~late_pred), order_cols, cuts) + [df.filter(late_pred)]
 
 
 def replay_segments(segments: list[DataFrame], dir_path: str) -> DataFrame:

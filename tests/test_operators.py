@@ -196,6 +196,23 @@ def _jobs_started(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_split_late_segments_counts_input_once(spark):
+    """split_late_segments checks both vacuity conditions in ONE aggregate
+    over its input — the jobs of a single ``count()`` (a shuffle stage and
+    a result stage under AQE), not one count per check — and with no cuts
+    carves nothing else."""
+    from kafka_streams_playground_spark.streaming.replay import split_late_segments
+
+    df = spark.createDataFrame([(i,) for i in range(6)], "x long")
+    one_count = _jobs_started(spark, df.count)
+    segments = []
+    n = _jobs_started(
+        spark, lambda: segments.extend(split_late_segments(df, ["x"], (), F.col("x") >= 4))
+    )
+    assert n == one_count
+    assert [sorted(r.x for r in s.collect()) for s in segments] == [[0, 1, 2, 3], [4, 5]]
+
+
 def test_schema_catalog_infers_once_per_file_version(spark, tmp_path):
     """load_table infers a file's schema once: a second load of the
     unchanged file starts no Spark job, a rewrite at the same path is

@@ -110,3 +110,105 @@ def test_registry_order_independent_of_entry_import():
         )
         assert out.returncode == 0, (entry, out.stderr[-2000:])
         assert out.stdout.split() == list(REGISTRY), entry
+
+
+# One body per relation: a streaming twin calls its batch query's
+# transformation instead of restating it. Twins whose shared code with their
+# batch query cannot be factored out without changing the batch plan are
+# named here with the reason; none is today.
+_RESTATED_TWINS_EXCUSED: dict[str, str] = {}
+_MAX_SHARED_RUN = 4  # consecutive code lines a twin may share with its batch query
+_MAX_SHARED_TOTAL = 150  # code lines shared over all pairs
+
+
+def _code_lines(src: str, fn) -> list[str]:
+    """``fn``'s code lines: docstrings, comments and blank lines dropped,
+    whitespace collapsed."""
+    import ast
+    import io
+    import tokenize
+
+    doc = set()
+    for node in ast.walk(fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            first = node.body[0]
+            if isinstance(first, ast.Expr) and isinstance(first.value, ast.Constant):
+                doc.update(range(first.lineno, first.end_lineno + 1))
+    lines = src.splitlines()[fn.lineno - 1 : fn.end_lineno]
+    comments = {
+        t.start[0]: t.start[1]
+        for t in tokenize.generate_tokens(io.StringIO("\n".join(lines) + "\n").readline)
+        if t.type == tokenize.COMMENT
+    }
+    out = []
+    for i, line in enumerate(lines, start=1):
+        if fn.lineno + i - 1 in doc:
+            continue
+        code = " ".join(line[: comments.get(i, len(line))].split())
+        if code:
+            out.append(code)
+    return out
+
+
+def _registered_functions(path) -> dict:
+    """{query name: (source, FunctionDef)} of the ``@query`` functions in a file."""
+    import ast
+
+    src = path.read_text()
+    found = {}
+    for fn in ast.parse(src).body:
+        for d in getattr(fn, "decorator_list", ()):
+            if isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query":
+                found[d.args[0].value] = (src, fn, d)
+    return found
+
+
+def _twin_batch_shared_lines() -> dict[str, tuple[str, int, int]]:
+    """{twin: (batch query, longest shared run, shared lines)} for every
+    streaming twin linked to a batch query: by ``REGISTRY["<batch>"]`` in its
+    oracle, else by name (``stream_<batch>``)."""
+    import ast
+    import difflib
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "kafka_streams_playground_spark"
+    batch = {}
+    for path in sorted((pkg / "plans").glob("*.py")):
+        batch.update(_registered_functions(path))
+    pairs = {}
+    for name, (src, fn, deco) in _registered_functions(pkg / "streaming" / "queries.py").items():
+        links = [
+            n.slice.value
+            for kw in deco.keywords
+            if kw.arg == "oracle"
+            for n in ast.walk(kw.value)
+            if isinstance(n, ast.Subscript) and getattr(n.value, "id", None) == "REGISTRY"
+        ]
+        if not links and name.removeprefix("stream_") in batch:
+            links = [name.removeprefix("stream_")]
+        if not links:
+            continue
+        b_src, b_fn, _ = batch[links[0]]
+        blocks = difflib.SequenceMatcher(
+            None, _code_lines(src, fn), _code_lines(b_src, b_fn), autojunk=False
+        ).get_matching_blocks()
+        pairs[name] = (links[0], max(b.size for b in blocks), sum(b.size for b in blocks))
+    return pairs
+
+
+def test_streaming_twins_do_not_restate_batch_bodies():
+    """Source-only ratchet: no streaming twin shares more than
+    ``_MAX_SHARED_RUN`` consecutive code lines with the batch query it is
+    linked to — a longer run is a restated transformation that belongs in a
+    ``DataFrame -> DataFrame`` function both call."""
+    pairs = _twin_batch_shared_lines()
+    assert len(pairs) >= 40, "twin linking found too few pairs"
+    assert set(_RESTATED_TWINS_EXCUSED) <= set(pairs)
+    restated = {
+        twin: (b, run)
+        for twin, (b, run, _) in pairs.items()
+        if run > _MAX_SHARED_RUN and twin not in _RESTATED_TWINS_EXCUSED
+    }
+    assert not restated, f"twins restating their batch query (batch, run): {restated}"
+    total = sum(shared for _, _, shared in pairs.values())
+    assert total <= _MAX_SHARED_TOTAL, f"{total} code lines shared with batch queries"

@@ -697,10 +697,8 @@ def test_ivm_delta_fold_split_sweep_group_straddles_batches(spark, tmp_path):
     delta rows straddle a split — masked until now by the single-file
     fixture replay. The raw-drain multiplicity is asserted below so the
     sweep can never silently degrade back to one micro-batch."""
-    from kafka_streams_playground_spark.streaming.queries import (
-        ivm_delta_fold,
-        ivm_merge_views,
-    )
+    from kafka_streams_playground_spark.plans.relational import ivm_merge
+    from kafka_streams_playground_spark.streaming.queries import ivm_delta_fold
     from kafka_streams_playground_spark.streaming.replay import run_to_completion
 
     a = spark.createDataFrame(
@@ -727,7 +725,7 @@ def test_ivm_delta_fold_split_sweep_group_straddles_batches(spark, tmp_path):
     for i, split in enumerate([(), (1,), (2,), (3,), (1, 2, 3)]):
         d = str(tmp_path / f"ivm{i}")
         sdf = replay_segments(split_segments(feed, ["arrival"], split), d).drop("arrival")
-        got = ivm_merge_views(v_old, ivm_delta_fold(spark, a, sdf))
+        got = ivm_merge(v_old, ivm_delta_fold(spark, a, sdf))
         assert (
             sorted(tuple(r) for r in got.collect()) == want
         ), f"split={split}"
